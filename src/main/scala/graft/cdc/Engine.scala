@@ -1,6 +1,6 @@
 package graft.cdc
 
-import graft.streaming.StreamingApply
+import graft.streaming.{Bounded, StreamingApply}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -73,10 +73,10 @@ object Engine {
 
     // STREAMING: everything >= high as micro-batches over the state
     require(validTransition(Catchup, Streaming))
-    val schema = spark.read.parquet(changelogDir).schema
-    StreamingApply.runAvailableNow(spark, changelogDir, schema,
-      df => normalize(df).filter(col("pos") >= high),
-      s"$workDir/state", s"$workDir/ckpt", payloadCols = payloadCols)
+    val stream = Bounded.readChunks(spark, changelogDir, spark.read.parquet(changelogDir).schema)
+      .transform(df => normalize(df).filter(col("pos") >= high))
+    Bounded.foreachBatch(stream, s"$workDir/ckpt", Bounded.OnePerFile(changelogDir))(
+      StreamingApply.applyBatch(s"$workDir/state", payloadCols = payloadCols) _)
 
     RunResult(low, high, s"$workDir/state")
   }
@@ -129,19 +129,15 @@ object Engine {
     StreamingApply.writeVersion(caught, s"$workDir/state", -1L, payloadCols = payloadCols)
 
     require(validTransition(Catchup, Streaming))
-    val q = spark.readStream.format("graft-jdbc-cdc")
+    val stream = spark.readStream.format("graft-jdbc-cdc")
       .option("url", url).option("table", table).option("posColumn", posCol)
       .option("startPos", (high - 1).toString) // source reads pos > startPos
       .option("maxPerBatch", maxPerBatch.toString)
       .option("numPartitions", numPartitions.toString)
       .load()
       .transform(decode)
-      .writeStream
-      .foreachBatch(StreamingApply.applyBatch(s"$workDir/state", payloadCols = payloadCols) _)
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Bounded.foreachBatch(stream, s"$workDir/ckpt", Bounded.AtLeast(0))(
+      StreamingApply.applyBatch(s"$workDir/state", payloadCols = payloadCols) _)
 
     RunResult(low, high, s"$workDir/state")
   }

@@ -34,8 +34,9 @@ object Caches {
     * ("name contains stream") both missed real families (4 of 9, caught
     * only in hand-review) and would silently delete any future
     * non-streaming view that happens to contain the word. Every sink
-    * name goes through [[registerStreamView]] (SparkEntry's mint
-    * helper); [[releaseStreamingState]] drains the set.
+    * name goes through [[registerStreamView]] (minted by
+    * [[graft.streaming.Bounded.toMemory]]); [[releaseStreamingState]]
+    * drains the set.
     */
   private val streamViews = scala.collection.mutable.Set.empty[String]
 

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.functions.{PortableHash, Tokenize}
+import graft.streaming.Bounded
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1793,10 +1794,8 @@ object Dedup {
                        indexPath: String, outPath: String, checkpoint: String,
                        threshold: Double, compactEvery: Int = 2,
                        maxFilesPerBucket: Int = 2): Unit = {
-    val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(chunks).select(col("doc_id"), col("text"))
-    val q = stream.writeStream.option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val stream = Bounded.readChunks(spark, chunks, schema).select(col("doc_id"), col("text"))
+    Bounded.foreachBatch(stream, checkpoint, Bounded.OnePerFile(chunks)) { (batch, batchId) =>
         val s = batch.sparkSession
         def phase(p: String): Unit =
           s.sparkContext.setJobDescription(s"novelty b$batchId $p")
@@ -1809,7 +1808,7 @@ object Dedup {
         Caches.withBatchShuffleWidth(s) {
         // one-file micro-batches arrive as ONE partition; the shingle
         // explode behind minhashSignatures would run single-threaded
-        // without this spread (the StreamingApply prepartition recipe)
+        // without this spread
         val docs = batch.repartition(s.sparkContext.defaultParallelism).persist()
         // EAGER localCheckpoint, not persist: the band frame feeds FOUR
         // consumers per batch (hit-bucket collect, probe join build,
@@ -1929,11 +1928,8 @@ object Dedup {
         }
         }
         s.sparkContext.setJobDescription(null)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
+    ()
   }
 
   /** Post-maintenance content audit of a persisted signature index:
@@ -2372,26 +2368,22 @@ object Dedup {
     * `_cluster_frontier` replay-absorption, ingestion-order, and
     * aside-swap crash guarantees, so a killed and restarted stream
     * resumes exactly where the artifacts say (foreachBatch is
-    * at-least-once; the replayed batch id is absorbed). AvailableNow +
-    * maxFilesPerTrigger=1: one ordered chunk file per micro-batch,
-    * mirroring continuous crawl ingest.
+    * at-least-once; the replayed batch id is absorbed). A
+    * [[graft.streaming.Bounded]] run: one ordered chunk file per
+    * micro-batch, checked on a fresh checkpoint, mirroring continuous
+    * crawl ingest.
     */
   def streamingClusterIngest(spark: org.apache.spark.sql.SparkSession,
                              chunks: String,
                              schema: org.apache.spark.sql.types.StructType,
                              indexPath: String, mapPath: String,
                              threshold: Double, checkpoint: String): Unit = {
-    val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(chunks).select(col("doc_id"), col("text"))
-    val q = stream.writeStream.option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        maintainClusterMap(batch.sparkSession, indexPath, mapPath, batch,
-          threshold, batchId)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val stream = Bounded.readChunks(spark, chunks, schema).select(col("doc_id"), col("text"))
+    Bounded.foreachBatch(stream, checkpoint, Bounded.OnePerFile(chunks)) { (batch, batchId) =>
+      maintainClusterMap(batch.sparkSession, indexPath, mapPath, batch, threshold, batchId)
+      ()
+    }
+    ()
   }
 
   /** Build the maintenance exercise's PREFIX state — LSH index +

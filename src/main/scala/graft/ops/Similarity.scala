@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.streaming.Bounded
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1775,24 +1776,21 @@ object Similarity {
     * under the same frontier/replay/aside-swap guarantees, so a crashed
     * and restarted stream resumes exactly where the artifacts say
     * (foreachBatch is at-least-once; the replayed batch id is absorbed).
-    * AvailableNow + maxFilesPerTrigger=1: one ordered chunk file per
-    * micro-batch, mirroring continuous embedding ingest.
+    * A [[graft.streaming.Bounded]] run: one ordered chunk file per
+    * micro-batch, checked on a fresh checkpoint, mirroring continuous
+    * embedding ingest.
     */
   def streamingKnnIngest(spark: org.apache.spark.sql.SparkSession,
                          chunks: String,
                          schema: org.apache.spark.sql.types.StructType,
                          vecPath: String, knnPath: String, k: Int,
                          checkpoint: String): Unit = {
-    val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(chunks).select(col("vec_id"), col("embedding"))
-    val q = stream.writeStream.option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        maintainKnnGraph(batch.sparkSession, vecPath, knnPath, batch, k, batchId)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val stream = Bounded.readChunks(spark, chunks, schema).select(col("vec_id"), col("embedding"))
+    Bounded.foreachBatch(stream, checkpoint, Bounded.OnePerFile(chunks)) { (batch, batchId) =>
+      maintainKnnGraph(batch.sparkSession, vecPath, knnPath, batch, k, batchId)
+      ()
+    }
+    ()
   }
 
   /** Prefix state for [[knnMaintenanceRun]]: vector table (with its
@@ -2020,16 +2018,16 @@ object Similarity {
     * [[streamingKnnIngest]] with [[maintainKnnGraphAnn]] as the per-batch
     * merge: each micro-batch assigns to the persisted IVF index's cells,
     * probes, scores only the probed partitions, and merges under the
-    * same `_knn_frontier` replay/crash guarantees. AvailableNow +
-    * maxFilesPerTrigger=1: one ordered chunk file per micro-batch.
+    * same `_knn_frontier` replay/crash guarantees. A
+    * [[graft.streaming.Bounded]] run: one ordered chunk file per
+    * micro-batch, checked on a fresh checkpoint.
     */
   def streamingAnnIngest(spark: org.apache.spark.sql.SparkSession,
                          chunks: String,
                          schema: org.apache.spark.sql.types.StructType,
                          centPath: String, cellsPath: String, knnPath: String,
                          k: Int, nprobe: Int, checkpoint: String): Unit = {
-    val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(chunks).select(col("vec_id"), col("embedding"))
+    val stream = Bounded.readChunks(spark, chunks, schema).select(col("vec_id"), col("embedding"))
     // the centroid artifact is immutable for the stream's lifetime:
     // read + collect ONCE here, not once per micro-batch (the local
     // relation is re-minted per batch from the collected rows — zero
@@ -2037,16 +2035,13 @@ object Similarity {
     val centRead = spark.read.parquet(centPath)
     val centRows = java.util.Arrays.asList(centRead.collect(): _*)
     val centSchema = centRead.schema
-    val q = stream.writeStream.option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cent = batch.sparkSession.createDataFrame(centRows, centSchema)
-        maintainKnnGraphAnn(batch.sparkSession, cent, cellsPath, knnPath,
-          batch, k, nprobe, batchId)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Bounded.foreachBatch(stream, checkpoint, Bounded.OnePerFile(chunks)) { (batch, batchId) =>
+      val cent = batch.sparkSession.createDataFrame(centRows, centSchema)
+      maintainKnnGraphAnn(batch.sparkSession, cent, cellsPath, knnPath,
+        batch, k, nprobe, batchId)
+      ()
+    }
+    ()
   }
 
   /** Oracle for `emb_knn_stream_ann`: the TWO sequential ANN merges

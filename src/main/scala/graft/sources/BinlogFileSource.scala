@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -40,7 +40,9 @@ import scala.jdk.CollectionConverters._
   *     table the same way, coordinator/MySQLOffsetStore.scala:98-141)
   *   - reader queue backpressure (1000-event buffer) → admission control:
   *     `maxPerBatch` caps each micro-batch (reference
-  *     MySQLBinlogReader.scala:27,69)
+  *     MySQLBinlogReader.scala:27,69); under `Trigger.AvailableNow` it
+  *     still applies, up to the transactions logged when the trigger
+  *     started
   *
   * Usage:
   * {{{
@@ -155,9 +157,16 @@ case class GtidOffset(gtids: GtidSet) extends Offset {
 }
 
 private[sources] class BinlogMicroBatchStream(path: String, maxPerBatch: Long, startGtids: GtidSet)
-  extends MicroBatchStream with SupportsAdmissionControl {
+  extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   override def initialOffset(): Offset = GtidOffset(startGtids)
+
+  /** AvailableNow's end set, captured once when the trigger starts;
+    * `None` under every other trigger. */
+  private var availableNowEnd: Option[GtidSet] = None
+
+  override def prepareForTriggerAvailableNow: Unit =
+    availableNowEnd = Some(reportLatestOffset().asInstanceOf[GtidOffset].gtids)
 
   /** Basic-API entry point; the engine uses the admission-control
     * overload below when SupportsAdmissionControl is implemented.
@@ -181,7 +190,7 @@ private[sources] class BinlogMicroBatchStream(path: String, maxPerBatch: Long, s
       var taken = 0L
       while (it.hasNext && taken < cap) {
         val (uuid, txn) = BinlogFileSource.gtidOf(it.next().split(",", BinlogFileSource.NFields))
-        if (!end.contains(uuid, txn)) {
+        if (!end.contains(uuid, txn) && availableNowEnd.forall(_.contains(uuid, txn))) {
           end = end.add(uuid, txn)
           taken += 1
         }

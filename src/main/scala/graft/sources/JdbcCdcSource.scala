@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -30,7 +30,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - offset           = highest consumed position ([[PosOffset]])
   *   - `latestOffset`   = a driver-side poll `pos > start ORDER BY pos`
   *     capped by admission control (`maxPerBatch` — the reference's
-  *     1000-event reader-queue backpressure, MySQLBinlogReader.scala:27)
+  *     1000-event reader-queue backpressure, MySQLBinlogReader.scala:27);
+  *     under `Trigger.AvailableNow` the poll is also bounded by the max
+  *     position seen when the trigger started, so the run drains a fixed
+  *     backlog in admission-capped batches instead of one
   *   - a micro-batch    = the (start, end] position range, split into
   *     `numPartitions` value-range chunks read IN PARALLEL by executor
   *     connections (the PK-range chunking of snapshot reads, applied to
@@ -168,9 +171,16 @@ case class PosOffset(pos: Long) extends Offset {
 private[sources] class JdbcCdcMicroBatchStream(
     url: String, table: String, posCol: String, maxPerBatch: Long,
     numPartitions: Int, startPos: Long, schema: StructType)
-  extends MicroBatchStream with SupportsAdmissionControl {
+  extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   override def initialOffset(): Offset = PosOffset(startPos)
+
+  /** AvailableNow's end position, captured once when the trigger starts;
+    * `None` under every other trigger. */
+  private var availableNowEnd: Option[Long] = None
+
+  override def prepareForTriggerAvailableNow: Unit =
+    availableNowEnd = Some(reportLatestOffset().asInstanceOf[PosOffset].pos)
 
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException("use latestOffset(start, limit)")
@@ -184,11 +194,12 @@ private[sources] class JdbcCdcMicroBatchStream(
       case m: ReadMaxRows => m.maxRows()
       case _ => Long.MaxValue
     }
+    val bound = availableNowEnd.fold("")(e => s" AND $posCol <= $e")
     JdbcCdcSource.withConnection(url) { conn =>
       val st = conn.createStatement()
       if (cap < Int.MaxValue) st.setMaxRows(cap.toInt)
       val rs = st.executeQuery(
-        s"SELECT $posCol FROM $table WHERE $posCol > $s ORDER BY $posCol")
+        s"SELECT $posCol FROM $table WHERE $posCol > $s$bound ORDER BY $posCol")
       var end = s
       while (rs.next()) end = rs.getLong(1)
       PosOffset(end)

@@ -483,36 +483,32 @@ object StreamingAnalytics {
       .flatMapGroupsWithState[AbsenceState, AbsenceOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (user: Long, rows: Iterator[AbsenceInput], state: GroupState[AbsenceState]) =>
-          def rearmOrClear(pending: List[Long]): Unit =
-            if (pending.isEmpty) state.remove()
-            else {
-              state.update(AbsenceState(pending))
-              state.setTimeoutTimestamp(pending.min + withinMs)
+          // one path for a timer firing (no rows) and for new rows: fold
+          // the rows into the pendings, then emit every pending whose
+          // deadline is STRICTLY before the watermark (Spark fires a
+          // timer only once wm exceeds it — the strict compare keeps the
+          // == boundary consistent with the oracle cut) and arm the rest.
+          // A new-rows call must emit too: a carried pending whose
+          // deadline the watermark has already passed cannot be re-armed
+          // (Spark rejects a timeout earlier than the watermark).
+          var pending = state.getOption.map(_.pending).getOrElse(Nil)
+          for (e <- rows.toSeq.sortBy(_.ts.getTime)) {
+            val t = e.ts.getTime
+            e.event_type match {
+              case "signup" => pending = t :: pending
+              case "purchase" =>
+                pending = pending.filterNot(s => s <= t && t <= s + withinMs)
+              case _ => ()
             }
-          if (state.hasTimedOut) {
-            // emit every pending STRICTLY past the watermark (Spark
-            // fires a timer only once wm exceeds it — matching strict
-            // compare keeps the == boundary consistent with the oracle
-            // cut); keep the rest armed
-            val wm = state.getCurrentWatermarkMs()
-            val (expired, live) = state.get.pending.partition(_ + withinMs < wm)
-            rearmOrClear(live)
-            expired.sorted.iterator.map(s =>
-              AbsenceOut(user, s * 1000L, (s + withinMs) * 1000L))
-          } else {
-            var pending = state.getOption.map(_.pending).getOrElse(Nil)
-            for (e <- rows.toSeq.sortBy(_.ts.getTime)) {
-              val t = e.ts.getTime
-              e.event_type match {
-                case "signup" => pending = t :: pending
-                case "purchase" =>
-                  pending = pending.filterNot(s => s <= t && t <= s + withinMs)
-                case _ => ()
-              }
-            }
-            rearmOrClear(pending)
-            Iterator.empty
           }
+          val (expired, live) = pending.partition(_ + withinMs < state.getCurrentWatermarkMs())
+          if (live.isEmpty) state.remove()
+          else {
+            state.update(AbsenceState(live))
+            state.setTimeoutTimestamp(live.min + withinMs)
+          }
+          expired.sorted.iterator.map(s =>
+            AbsenceOut(user, s * 1000L, (s + withinMs) * 1000L))
       }
   }
 

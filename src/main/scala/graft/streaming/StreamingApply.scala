@@ -4,7 +4,6 @@ import graft.functions.PortableHash
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming changelog apply — the streaming half of the
@@ -318,39 +317,5 @@ object StreamingApply {
       applyBatchWith(stateDir, nBuckets, payloadCols,
         identity, mergeStateBucketed(_, _, payloadCols, nBuckets))(ok, batchId)
     } finally classified.unpersist()
-  }
-
-  /** Run a bounded streaming apply over a directory of changelog parquet
-    * files (one micro-batch per file via maxFilesPerTrigger=1 — multiple
-    * genuinely independent micro-batches, arbitrary file order) and block
-    * until drained. `nBuckets` sizes the state store: ~cores locally,
-    * thousands at cluster scale.
-    */
-  def runAvailableNow(
-      spark: SparkSession,
-      changelogDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      normalize: DataFrame => DataFrame,
-      stateDir: String,
-      checkpointDir: String,
-      nBuckets: Int = defaultBuckets,
-      payloadCols: Seq[String] = defaultPayload,
-      prepartition: Int = 0): Unit = {
-    // prepartition > 0 spreads each micro-batch's RAW rows before the
-    // normalize projection — a one-file trigger otherwise runs an
-    // expensive decode (wide envelopes: from_json per row) on a single
-    // input partition no matter how many cores the executor has
-    val src = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(changelogDir)
-    val q = (if (prepartition > 0) src.repartition(prepartition) else src)
-      .transform(normalize)
-      .writeStream
-      .foreachBatch(applyBatch(stateDir, nBuckets, payloadCols) _)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 
 /** Streaming as-of enrichment — the streaming counterpart of
@@ -129,29 +128,4 @@ object StreamingEnrich {
        | AND v.valid_from_pos <= e.pos - 1
        | AND (v.valid_to_pos IS NULL OR v.valid_to_pos > e.pos - 1)
        |ORDER BY e.tbl, e.pk, e.pos""".stripMargin
-
-  /** Bounded streaming run (mirrors [[StreamingScd2.runAvailableNow]]). */
-  def runAvailableNow(
-      spark: SparkSession,
-      changelogDir: String,
-      schema: StructType,
-      normalize: DataFrame => DataFrame,
-      scd2Dir: String,
-      outDir: String,
-      checkpointDir: String,
-      nBuckets: Int = StreamingApply.defaultBuckets,
-      prepartition: Int = 0): Unit = {
-    val src = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(changelogDir)
-    val q = (if (prepartition > 0) src.repartition(prepartition) else src)
-      .transform(normalize)
-      .writeStream
-      .foreachBatch(applyBatch(scd2Dir, outDir, nBuckets) _)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{BooleanType, LongType, StructType}
 
 /** Incremental SCD Type-2 maintenance — the streaming counterpart of
@@ -91,30 +90,4 @@ object StreamingScd2 {
       .filter(col("op") =!= "D")
       .select(col("tbl"), col("pk"), col("value"),
         col("pos").as("valid_from_pos"), col("valid_to_pos"), col("is_current"))
-
-  /** Bounded streaming run, one micro-batch per changelog file (mirrors
-    * [[StreamingApply.runAvailableNow]]).
-    */
-  def runAvailableNow(
-      spark: SparkSession,
-      changelogDir: String,
-      schema: StructType,
-      normalize: DataFrame => DataFrame,
-      stateDir: String,
-      checkpointDir: String,
-      nBuckets: Int = StreamingApply.defaultBuckets,
-      prepartition: Int = 0): Unit = {
-    val src = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(changelogDir)
-    val q = (if (prepartition > 0) src.repartition(prepartition) else src)
-      .transform(normalize)
-      .writeStream
-      .foreachBatch(applyBatch(stateDir, nBuckets) _)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
 }

@@ -42,6 +42,23 @@ class BinlogFileSourceSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("AvailableNow keeps the admission cap: the backlog drains in capped micro-batches, in order") {
+    val dir = Files.createTempDirectory("graft_src_an").toString
+    val log = s"$dir/changelog.log"
+    writeLines(log, (0L until 20L).map(i => line(i, i % 3, "I", i * 1.0)))
+    val q = spark.readStream.format("graft-binlog")
+      .option("path", log).option("maxPerBatch", "8").load()
+      .writeStream.format("memory").queryName("src_out_an")
+      .option("checkpointLocation", s"$dir/ckpt")
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val got = spark.table("src_out_an").orderBy("pos").collect()
+    assert(got.map(_.getAs[Long]("pos")).toSeq == (0L until 20L))
+    // 20 rows / cap 8 → at least 3 batches
+    assert(q.recentProgress.count(_.numInputRows > 0) >= 3)
+    spark.catalog.dropTempView("src_out_an")
+  }
+
   test("checkpoint restart resumes exactly after the committed offset") {
     val dir = Files.createTempDirectory("graft_src2").toString
     val log = s"$dir/changelog.log"

@@ -72,6 +72,26 @@ class JdbcCdcSourceSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("AvailableNow keeps the admission cap: the backlog drains in capped micro-batches, in order") {
+    val url = freshDb("cdcavailnow")
+    insert(url, (1L to 20L).map(p => (p, "t0", p % 5, "I", p * 1.0)))
+    val dir = java.nio.file.Files.createTempDirectory("graft_jdbccdc_an").toString
+    val q = spark.readStream.format("graft-jdbc-cdc")
+      .option("url", url).option("table", "CHANGELOG")
+      .option("posColumn", "pos").option("maxPerBatch", "8")
+      .option("numPartitions", "3")
+      .load()
+      .writeStream.format("memory").queryName("jdbc_out_an")
+      .option("checkpointLocation", s"$dir/ckpt")
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val got = spark.table("jdbc_out_an").orderBy("pos").collect()
+    assert(got.map(_.getAs[Long]("pos")).toSeq == (1L to 20L))
+    // 20 rows / cap 8 → at least 3 batches
+    assert(q.recentProgress.count(_.numInputRows > 0) >= 3)
+    spark.catalog.dropTempView("jdbc_out_an")
+  }
+
   test("checkpoint restart resumes exactly after the committed position") {
     val url = freshDb("cdcresume")
     insert(url, (1L to 6L).map(p => (p, "t0", p, "I", p * 1.0)))

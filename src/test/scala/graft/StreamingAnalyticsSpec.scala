@@ -510,4 +510,34 @@ class StreamingAnalyticsSpec extends SparkSpec {
         s"u1 and u3 alert, u2 resolved in-batch: ${got.toSeq}")
     } finally { q.stop(); graft.ops.Caches.releaseStreamingState(spark) }
   }
+
+  test("absence alerts: a carried signup the watermark already passed alerts once when its user's next event arrives") {
+    import spark.implicits._
+    import StreamingAnalytics.AbsenceInput
+    def ts(minutes: Long) = new Timestamp((1440 + minutes) * 60000L)
+    val base = 1440L * 60000000L
+    val ms = MemoryStream[AbsenceInput](spark, numPartitions = 1)
+    // no watermark-only batches in between: the second batch runs right
+    // after the first, as AvailableNow delivers a backlog
+    val prev = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
+    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val q = try StreamingAnalytics.absenceAlerts(ms.toDS(), 1800000L)
+      .writeStream.outputMode("append")
+      .format("memory").queryName("abs_carried_out")
+      .trigger(Trigger.ProcessingTime(0)).start()
+    finally spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev)
+    try {
+      // batch 1: user 1 signs up; user 9's event moves the watermark to
+      // 180 − 120 = 60 min, past the signup's 30-min deadline
+      ms.addData(AbsenceInput(1L, ts(0), "signup"), AbsenceInput(9L, ts(180), "view"))
+      q.processAllAvailable()
+      // batch 2: user 1's next event reaches the state while the carried
+      // signup's deadline is already behind the watermark
+      ms.addData(AbsenceInput(1L, ts(181), "view"))
+      q.processAllAvailable()
+      val got = spark.table("abs_carried_out").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      assert(got == Seq((1L, base, base + 1800000000L)), s"exactly one alert for u1: $got")
+    } finally { q.stop(); graft.ops.Caches.releaseStreamingState(spark) }
+  }
 }

@@ -11,8 +11,10 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
@@ -43,6 +45,22 @@ import scala.jdk.CollectionConverters._
   *     MySQLBinlogReader.scala:27,69); under `Trigger.AvailableNow` it
   *     still applies, up to the transactions logged when the trigger
   *     started
+  *
+  * Per-trigger cost is O(unconsumed bytes), not O(log): the driver keeps
+  * two byte cursors that rest on line boundaries — a tail cursor with the
+  * set folded so far ([[BinlogMicroBatchStream.reportLatestOffset]] reads
+  * only what was appended since), and a consumed-prefix cursor with the
+  * set every line before it belongs to (`latestOffset` seeks there when
+  * its start set contains that set, and scans from byte 0 otherwise).
+  * Each batch's partition reads from its first line to the end of the log
+  * as it was when the batch was planned, so every line of a transaction
+  * the batch takes is read even when `maxPerBatch` cut the scan inside
+  * it. Only complete `\n`-terminated lines are read, so a line a writer
+  * is still appending is left for a later trigger.
+  *
+  * The log is append-only. A cursor is reused only while the line that
+  * ends at it is still in place; when a truncation or a rewrite moved or
+  * changed that line, the log is read again from byte 0.
   *
   * Usage:
   * {{{
@@ -116,15 +134,84 @@ object BinlogFileSource {
   /** Field count before the payload tail — the split limit. */
   private[sources] val NFields = 8
 
-  /** Stream the log's lines through `f` without materializing the file —
-    * the driver calls this every trigger, and the log only grows.
+  /** Whether `line` and its `\n` are the bytes that end at `at` in a log
+    * of `size` bytes — the check a cursor passes before it is reused.
     */
-  private[sources] def withLines[T](path: String)(f: Iterator[String] => T): T = {
-    if (!Files.exists(Paths.get(path))) f(Iterator.empty)
-    else {
-      val s = Files.lines(Paths.get(path), StandardCharsets.UTF_8)
-      try f(s.iterator().asScala) finally s.close()
+  private[sources] def endsWithLine(path: String, size: Long, at: Long, line: String): Boolean = {
+    val want = (line + "\n").getBytes(StandardCharsets.UTF_8)
+    at <= size && at >= want.length && {
+      val got = ByteBuffer.allocate(want.length)
+      val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
+      try while (got.hasRemaining && ch.read(got, at - want.length + got.position()) > 0) {}
+      finally ch.close()
+      java.util.Arrays.equals(got.array(), want)
     }
+  }
+
+  /** Bytes in the log now; 0 before the file exists. */
+  private[sources] def logSize(path: String): Long = {
+    val p = Paths.get(path)
+    if (Files.exists(p)) Files.size(p) else 0L
+  }
+
+  /** The complete `\n`-terminated lines of `path` in the byte range
+    * `[from, until)`, read forward once. A trailing line without its `\n`
+    * (a writer mid-append) is never returned. `lineStart` and `end` bound
+    * the last line returned, so a cursor taken from `end` always rests on
+    * a line boundary; `line` is that line.
+    */
+  private[sources] final class LogLines(path: String, from: Long, until: Long)
+    extends Iterator[String] with AutoCloseable {
+    private val ch =
+      if (from < until) FileChannel.open(Paths.get(path), StandardOpenOption.READ) else null
+    private var buf = new Array[Byte](1 << 16)
+    private var lo = 0 // buf[lo, hi) is read from the file but not yet returned
+    private var hi = 0
+    private var readAt = from // file offset of buf(hi)
+    private var pending: String = null
+    private var pendingEnd = from
+    var lineStart: Long = from
+    var end: Long = from
+    var line: String = null
+
+    override def hasNext: Boolean = pending != null || { pending = readLine(); pending != null }
+
+    override def next(): String = {
+      if (!hasNext) throw new NoSuchElementException("no complete line left")
+      val l = pending
+      pending = null
+      lineStart = end
+      end = pendingEnd
+      line = l
+      l
+    }
+
+    private def readLine(): String = {
+      var scan = lo
+      while (true) {
+        while (scan < hi) {
+          if (buf(scan) == '\n') {
+            val l = new String(buf, lo, scan - lo, StandardCharsets.UTF_8)
+            pendingEnd = readAt - hi + scan + 1
+            lo = scan + 1
+            return l
+          }
+          scan += 1
+        }
+        if (readAt >= until) return null
+        if (lo > 0) {
+          System.arraycopy(buf, lo, buf, 0, hi - lo)
+          scan -= lo; hi -= lo; lo = 0
+        }
+        if (hi == buf.length) buf = java.util.Arrays.copyOf(buf, 2 * buf.length)
+        val n = ch.read(ByteBuffer.wrap(buf, hi, math.min(buf.length - hi, until - readAt).toInt), readAt)
+        if (n <= 0) return null
+        hi += n; readAt += n
+      }
+      null
+    }
+
+    override def close(): Unit = if (ch != null) ch.close()
   }
 }
 
@@ -158,6 +245,31 @@ case class GtidOffset(gtids: GtidSet) extends Offset {
 
 private[sources] class BinlogMicroBatchStream(path: String, maxPerBatch: Long, startGtids: GtidSet)
   extends MicroBatchStream with SupportsTriggerAvailableNow {
+  import BinlogFileSource.{LogLines, endsWithLine, logSize}
+
+  /** A line boundary `at`, the line that ends there (`""` at byte 0) and a
+    * set every line before `at` belongs to. */
+  private case class Cursor(at: Long, last: String, gtids: GtidSet) {
+    /** Whether the log of `size` bytes still holds the lines this cursor
+      * passed (checked by the line that ends at `at`). */
+    def holds(size: Long): Boolean = at == 0L || endsWithLine(path, size, at, last)
+  }
+
+  /** The cursor just past the last line `lines` returned. */
+  private def cursorAt(lines: LogLines, gtids: GtidSet): Cursor = Cursor(lines.end, lines.line, gtids)
+
+  /** `startGtids` ∪ every line before `at`: where [[reportLatestOffset]]
+    * resumes its fold. */
+  private var tail = Cursor(0L, "", startGtids)
+
+  /** Every line before `at` is in `gtids`, so a `latestOffset` whose
+    * start contains `gtids` has nothing to take before `at`. */
+  private var prefix = Cursor(0L, "", GtidSet.empty)
+
+  /** (start, end, from, to) of the last batch `latestOffset` chose: its
+    * lines lie in the byte range `[from, to)`, `to` being the log's size
+    * when it was planned. */
+  private var planned: Option[(GtidSet, GtidSet, Long, Long)] = None
 
   override def initialOffset(): Offset = GtidOffset(startGtids)
 
@@ -177,7 +289,9 @@ private[sources] class BinlogMicroBatchStream(path: String, maxPerBatch: Long, s
   /** Next batch end: the start set plus up to `maxRows` not-yet-consumed
     * transactions in file order (reader-queue backpressure analogue;
     * correct across checkpoint restarts because membership — not a
-    * counter — decides what is new).
+    * counter — decides what is new). The scan starts at the consumed
+    * prefix when `start` contains the set it was proven under, and at
+    * byte 0 otherwise (a fresh instance, a truncated or rewritten log).
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[GtidOffset].gtids
@@ -185,37 +299,62 @@ private[sources] class BinlogMicroBatchStream(path: String, maxPerBatch: Long, s
       case m: ReadMaxRows => m.maxRows()
       case _ => Long.MaxValue
     }
-    BinlogFileSource.withLines(path) { it =>
+    val size = logSize(path)
+    if (!prefix.gtids.isSubsetOf(s) || !prefix.holds(size)) prefix = Cursor(0L, "", GtidSet.empty)
+    val lines = new LogLines(path, prefix.at, size)
+    try {
       var end = s
       var taken = 0L
-      while (it.hasNext && taken < cap) {
-        val (uuid, txn) = BinlogFileSource.gtidOf(it.next().split(",", BinlogFileSource.NFields))
+      var from = -1L
+      var covered = prefix // every line before `covered.at` is in `end`
+      while (taken < cap && lines.hasNext) {
+        val (uuid, txn) = BinlogFileSource.gtidOf(lines.next().split(",", BinlogFileSource.NFields))
         if (!end.contains(uuid, txn) && availableNowEnd.forall(_.contains(uuid, txn))) {
           end = end.add(uuid, txn)
           taken += 1
+          if (from < 0) from = lines.lineStart
         }
+        if (covered.at == lines.lineStart && end.contains(uuid, txn)) covered = cursorAt(lines, end)
       }
+      prefix = covered.copy(gtids = end)
+      // the cap may stop the scan on a transaction's first line: its later
+      // lines lie past `lines.end`, so the batch reads to `size`
+      if (taken > 0) planned = Some((s, end, from, size))
       GtidOffset(end)
-    }
+    } finally lines.close()
   }
 
   override def getDefaultReadLimit: ReadLimit =
     if (maxPerBatch == Long.MaxValue) ReadLimit.allAvailable() else ReadLimit.maxRows(maxPerBatch)
 
-  override def reportLatestOffset(): Offset =
-    BinlogFileSource.withLines(path) { it =>
-      GtidOffset(it.foldLeft(startGtids) { (acc, l) =>
+  /** `startGtids` ∪ every complete line, folding only the bytes appended
+    * since the last call. */
+  override def reportLatestOffset(): Offset = {
+    val size = logSize(path)
+    val from = if (tail.holds(size)) tail else Cursor(0L, "", startGtids)
+    val lines = new LogLines(path, from.at, size)
+    try {
+      val gtids = lines.foldLeft(from.gtids) { (acc, l) =>
         val (uuid, txn) = BinlogFileSource.gtidOf(l.split(",", BinlogFileSource.NFields))
         acc.add(uuid, txn)
-      })
-    }
+      }
+      tail = if (lines.line == null) from else cursorAt(lines, gtids)
+    } finally lines.close()
+    GtidOffset(tail.gtids)
+  }
 
+  /** A batch `latestOffset` just chose reads its own byte range; any other
+    * (a batch replanned from the offset log after a restart) reads the
+    * whole log. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[GtidOffset].gtids
     val e = end.asInstanceOf[GtidOffset].gtids
     val delta = e.subtract(s)
     if (delta.txnCount == 0L) Array.empty
-    else Array(BinlogInputPartition(path, delta.toString))
+    else {
+      val (from, to) = planned.collect { case (`s`, `e`, f, t) => (f, t) }.getOrElse((0L, logSize(path)))
+      Array(BinlogInputPartition(path, delta.toString, from, to))
+    }
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new BinlogReaderFactory
@@ -227,10 +366,11 @@ private[sources] class BinlogMicroBatchStream(path: String, maxPerBatch: Long, s
   override def stop(): Unit = ()
 }
 
-/** One batch's work: the lines whose gtid falls in `deltaGtids`
-  * (= end ∖ start), selected by set membership in file order.
+/** One batch's work: the lines of the byte range `[from, to)` whose gtid
+  * falls in `deltaGtids` (= end ∖ start), selected by set membership in
+  * file order.
   */
-private[sources] case class BinlogInputPartition(path: String, deltaGtids: String)
+private[sources] case class BinlogInputPartition(path: String, deltaGtids: String, from: Long, to: Long)
   extends InputPartition
 
 private[sources] class BinlogReaderFactory extends PartitionReaderFactory {
@@ -238,12 +378,11 @@ private[sources] class BinlogReaderFactory extends PartitionReaderFactory {
     val p = partition.asInstanceOf[BinlogInputPartition]
     val delta = GtidSet.parse(p.deltaGtids)
     new PartitionReader[InternalRow] {
-      private val stream = Files.lines(Paths.get(p.path), StandardCharsets.UTF_8)
-      private val it = stream.iterator()
+      private val lines = new BinlogFileSource.LogLines(p.path, p.from, p.to)
       private var current: InternalRow = _
       override def next(): Boolean = {
-        while (it.hasNext) {
-          val parts = it.next().split(",", BinlogFileSource.NFields)
+        while (lines.hasNext) {
+          val parts = lines.next().split(",", BinlogFileSource.NFields)
           val (uuid, txn) = BinlogFileSource.gtidOf(parts)
           if (delta.contains(uuid, txn)) {
             current = InternalRow(
@@ -261,7 +400,7 @@ private[sources] class BinlogReaderFactory extends PartitionReaderFactory {
         false
       }
       override def get(): InternalRow = current
-      override def close(): Unit = stream.close()
+      override def close(): Unit = lines.close()
     }
   }
 }

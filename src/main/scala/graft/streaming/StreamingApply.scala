@@ -64,10 +64,23 @@ object StreamingApply {
   private def stateCols(payloadCols: Seq[String]): Seq[String] =
     Seq("tbl", "pk", "op", "ts", "pos") ++ payloadCols
 
-  /** State buckets. 32 matches the harness cores; at cluster scale this
-    * would be sized so one bucket ≈ one comfortable task (e.g. 4096).
+  /** State buckets: the unit a micro-batch rewrites, so more buckets make
+    * a small batch rewrite less state. Tasks are sized separately, by
+    * [[byBucket]]; at cluster scale this would be sized so one bucket is a
+    * comfortable file (e.g. 4096).
     */
   val defaultBuckets = 32
+
+  /** Repartition on `bucket` into min(nBuckets, spark.sql.shuffle.partitions)
+    * tasks — the width rule of the bucketed state stores (this one,
+    * [[StreamingScd2]] and [[StreamingEnrich]]). Hashing on bucket
+    * keeps each bucket in one task, so each bucket directory still gets
+    * exactly one part file. The number is explicit because AQE would
+    * coalesce a number-less repartition of a small state down to one task.
+    */
+  def byBucket(df: DataFrame, nBuckets: Int): DataFrame =
+    df.repartition(math.min(nBuckets, df.sparkSession.sessionState.conf.numShufflePartitions),
+      col("bucket"))
 
   /** Portable bucket assignment — same router as [[graft.cdc.Routing]],
     * so "all history of a pk lives in one bucket" is the same guarantee
@@ -102,9 +115,8 @@ object StreamingApply {
                          payloadCols: Seq[String], nBuckets: Int): DataFrame = {
     val cols = stateCols(payloadCols) :+ "bucket"
     val carried = Seq("op", "ts", "pos") ++ payloadCols
-    prev.select(cols.map(col): _*)
-      .unionByName(batch.select(cols.map(col): _*))
-      .repartition(nBuckets, col("bucket"))
+    byBucket(prev.select(cols.map(col): _*)
+      .unionByName(batch.select(cols.map(col): _*)), nBuckets)
       .groupBy(col("bucket"), col("tbl"), col("pk"))
       .agg(max_by(struct(carried.map(col): _*), col("pos")).as("last"))
       .select(col("bucket") +: col("tbl") +: col("pk") +:
@@ -175,13 +187,8 @@ object StreamingApply {
   def writeVersion(state: DataFrame, stateDir: String, version: Long,
                    nBuckets: Int = defaultBuckets,
                    payloadCols: Seq[String] = defaultPayload): Unit =
-    state.select(stateCols(payloadCols).map(col): _*)
-      .withColumn("bucket", bucketOf(nBuckets))
-      // partition count pinned to nBuckets (NOT spark.sql.shuffle
-      // .partitions): each bucket dir gets ONE part file instead of up
-      // to shuffle-partition-count slivers — per-batch state reads then
-      // open O(touched buckets) files, not O(buckets × partitions)
-      .repartition(nBuckets, col("bucket"))
+    byBucket(state.select(stateCols(payloadCols).map(col): _*)
+      .withColumn("bucket", bucketOf(nBuckets)), nBuckets)
       .write.partitionBy("bucket")
       .mode("overwrite").parquet(s"$stateDir/v=$version")
 

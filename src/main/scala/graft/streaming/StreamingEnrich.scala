@@ -84,10 +84,9 @@ object StreamingEnrich {
         // repartition on bucket feeds both join sides: with bucket in the
         // join keys, hash(bucket) partitioning satisfies the join's
         // distribution, so the temporal join adds no further exchange.
-        val hist = StreamingApply.stateBefore(spark, scd2Dir, batchId + 1,
+        val hist = StreamingApply.byBucket(StreamingApply.stateBefore(spark, scd2Dir, batchId + 1,
             Some(touched), StreamingScd2.payloadCols, StreamingScd2.stateSchema)
-          .withColumn("bucket", StreamingApply.bucketOf(nBuckets))
-          .repartition(nBuckets, col("bucket"))
+          .withColumn("bucket", StreamingApply.bucketOf(nBuckets)), nBuckets)
         val events = hist.select("bucket", "tbl", "pk", "op", "ts", "pos", "value")
         val versions = hist.filter(col("op") =!= "D")
           .select(col("bucket"), col("tbl"), col("pk"), col("value"),

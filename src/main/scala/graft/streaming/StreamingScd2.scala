@@ -66,9 +66,8 @@ object StreamingScd2 {
     */
   def mergeBucketed(prev: DataFrame, batch: DataFrame, nBuckets: Int): DataFrame = {
     val ev = Seq("bucket", "tbl", "pk", "op", "ts", "pos", "value")
-    val events = prev.select(ev.map(col): _*)
-      .unionByName(batch.select(ev.map(col): _*))
-      .repartition(nBuckets, col("bucket"))
+    val events = StreamingApply.byBucket(prev.select(ev.map(col): _*)
+      .unionByName(batch.select(ev.map(col): _*)), nBuckets)
       .dropDuplicates("bucket", "tbl", "pk", "pos")
     val nextPos = lead(col("pos"), 1).over(
       Window.partitionBy(col("bucket"), col("tbl"), col("pk")).orderBy(col("pos")))

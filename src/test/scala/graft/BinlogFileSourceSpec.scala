@@ -1,10 +1,17 @@
 package graft
 
-import graft.sources.BinlogFileSource
+import graft.model.LogPosition.GtidSet
+import graft.sources.{BinlogFileSource, GtidOffset}
+import org.apache.spark.sql.connector.catalog.SupportsRead
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import scala.jdk.CollectionConverters._
 
 /** DSv2 micro-batch changelog source: ordered delivery, admission
   * control (maxPerBatch), checkpoint restart without loss or
@@ -22,6 +29,182 @@ class BinlogFileSourceSpec extends SparkSpec {
 
   private def line(pos: Long, pk: Long, op: String, v: Double) =
     BinlogFileSource.renderLine("t0", pk, op, 1000L * pos, pos, v)
+
+  private type Stream = MicroBatchStream with SupportsAdmissionControl
+
+  /** The source's micro-batch stream, built as the engine builds it. */
+  private def stream(log: String, startGtids: String = ""): Stream =
+    new BinlogFileSource()
+      .getTable(BinlogFileSource.schema, Array.empty, Map("path" -> log, "startGtids" -> startGtids).asJava)
+      .asInstanceOf[SupportsRead].newScanBuilder(CaseInsensitiveStringMap.empty()).build()
+      .toMicroBatchStream("unused").asInstanceOf[Stream]
+
+  private def gtids(o: Offset): GtidSet = o.asInstanceOf[GtidOffset].gtids
+
+  private def limit(cap: Long): ReadLimit =
+    if (cap == Long.MaxValue) ReadLimit.allAvailable() else ReadLimit.maxRows(cap)
+
+  /** (pos, gtid) of the rows batch `[start, end)` reads, in file order. */
+  private def rows(s: Stream, start: Offset, end: Offset): Seq[(Long, String)] = {
+    val factory = s.createReaderFactory()
+    s.planInputPartitions(start, end).toSeq.flatMap { p =>
+      val r = factory.createReader(p)
+      try Iterator.continually(r.next()).takeWhile(identity)
+        .map(_ => r.get().getLong(4) -> r.get().getUTF8String(6).toString).toList
+      finally r.close()
+    }
+  }
+
+  private def appendBytes(path: String, bytes: Array[Byte]): Unit =
+    Files.write(Paths.get(path), bytes, StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+
+  test("a torn trailing line stays out of the offset until its newline lands, then streams once") {
+    val dir = Files.createTempDirectory("graft_src_torn").toString
+    val log = s"$dir/changelog.log"
+    writeLines(log, (0L until 5L).map(i => line(i, i, "I", i * 1.0)))
+    val whole = (line(5, 5, "I", 5.0) + "\n").getBytes
+    appendBytes(log, whole.take(whole.length / 2))
+    val s = stream(log)
+    val o0 = s.initialOffset()
+    val o1 = s.latestOffset(o0, limit(Long.MaxValue))
+    assert(o1.json == "filepos:1-5")
+    assert(s.reportLatestOffset().json == "filepos:1-5")
+    assert(rows(s, o0, o1).map(_._1) == (0L until 5L))
+    appendBytes(log, whole.drop(whole.length / 2))
+    val o2 = s.latestOffset(o1, limit(Long.MaxValue))
+    assert(o2.json == "filepos:1-6")
+    assert(s.reportLatestOffset().json == "filepos:1-6")
+    assert(rows(s, o1, o2) == Seq(5L -> "filepos:6"))
+    assert(s.latestOffset(o2, limit(Long.MaxValue)) == o2)
+  }
+
+  test("per-trigger reads stay past the consumed lines: a consumed line overwritten in place is never parsed") {
+    val dir = Files.createTempDirectory("graft_src_delta").toString
+    val log = s"$dir/changelog.log"
+    val lines = (0L until 10L).map(i => line(i, i, "I", i * 1.0))
+    writeLines(log, lines)
+    val s = stream(log)
+    val o0 = s.initialOffset()
+    val o1 = s.latestOffset(o0, limit(4))
+    s.reportLatestOffset()
+    assert(rows(s, o0, o1).map(_._1) == (0L until 4L))
+    val o2 = s.latestOffset(o1, limit(4))
+    s.reportLatestOffset()
+    assert(rows(s, o1, o2).map(_._1) == (4L until 8L))
+    // line 2 is consumed and behind both cursors: garble it in place
+    val at = lines.take(2).map(_.length + 1).sum.toLong
+    val ch = FileChannel.open(Paths.get(log), StandardOpenOption.WRITE)
+    try ch.write(ByteBuffer.wrap(Array.fill(lines(2).length)('#'.toByte)), at) finally ch.close()
+    writeLines(log, (10L until 12L).map(i => line(i, i, "I", i * 1.0)), append = true)
+    val o3 = s.latestOffset(o2, limit(4))
+    assert(o3.json == "filepos:1-12")
+    assert(s.reportLatestOffset().json == "filepos:1-12")
+    assert(rows(s, o2, o3).map(_._1) == (8L until 12L))
+  }
+
+  test("a transaction the cap cuts after its first line is read whole by the batch that takes it") {
+    val dir = Files.createTempDirectory("graft_src_multi").toString
+    val log = s"$dir/changelog.log"
+    // a:2 is one transaction of two rows
+    writeLines(log, Seq(1L -> 1L, 2L -> 2L, 3L -> 2L, 4L -> 3L).map { case (pos, txn) =>
+      BinlogFileSource.renderLine("t0", pos, "I", 1000L * pos, pos, pos * 1.0, "a", txn) })
+    val s = stream(log)
+    val o0 = s.initialOffset()
+    val o1 = s.latestOffset(o0, limit(2))
+    assert(o1.json == "a:1-2")
+    assert(rows(s, o0, o1) == Seq(1L -> "a:1", 2L -> "a:2", 3L -> "a:2"))
+    val o2 = s.latestOffset(o1, limit(2))
+    assert(o2.json == "a:1-3")
+    assert(rows(s, o1, o2) == Seq(4L -> "a:3"))
+  }
+
+  test("a log rewritten and grown past the cursors is scanned again from byte 0") {
+    val dir = Files.createTempDirectory("graft_src_rewrite").toString
+    val log = s"$dir/changelog.log"
+    writeLines(log, (1L to 10L).map(i =>
+      BinlogFileSource.renderLine("t0", i, "I", 1000L * i, i, i * 1.0, "a", i)))
+    val s = stream(log)
+    val o0 = s.initialOffset()
+    val o1 = s.latestOffset(o0, limit(Long.MaxValue))
+    assert(s.reportLatestOffset().json == "a:1-10")
+    assert(rows(s, o0, o1).size == 10)
+    // new content, longer than the old log, whose line boundaries differ
+    writeLines(log, (1L to 20L).map(i =>
+      BinlogFileSource.renderLine("t1", i, "I", 1000L * i, 1000 + i, i * 0.25, "b", i)))
+    val o2 = s.latestOffset(o1, limit(Long.MaxValue))
+    assert(o2.json == "a:1-10,b:1-20")
+    assert(s.reportLatestOffset() == stream(log).reportLatestOffset())
+    assert(rows(s, o1, o2) == (1L to 20L).map(i => (1000 + i) -> s"b:$i"))
+  }
+
+  test("cursor stream ≡ fresh instance under random appends, torn tails, caps, commits and replays") {
+    for (seed <- 1 to 12) {
+      val rnd = new scala.util.Random(seed)
+      val dir = Files.createTempDirectory("graft_src_prop").toString
+      val log = s"$dir/changelog.log"
+      Files.write(Paths.get(log), Array.emptyByteArray)
+      val start = if (rnd.nextBoolean()) "a:1-3" else ""
+      val s = stream(log, start)
+      val txn = scala.collection.mutable.Map("a" -> 0L, "b" -> 0L)
+      val written = scala.collection.mutable.ArrayBuffer.empty[(Long, String)] // (pos, gtid) per line
+      var pos = 0L
+      var torn = Array.emptyByteArray // the rest of a half-written line
+      var committed: Offset = s.initialOffset()
+      for (step <- 0 until 40) {
+        if (rnd.nextInt(3) == 0) {
+          // transactions of one to three rows
+          val appended = (0 until rnd.nextInt(5)).flatMap { _ =>
+            val uuid = if (rnd.nextBoolean()) "a" else "b"
+            txn(uuid) += 1
+            (0 to rnd.nextInt(3)).map { _ =>
+              pos += 1
+              written += pos -> s"$uuid:${txn(uuid)}"
+              BinlogFileSource.renderLine("t0", pos % 7, "U", pos, pos, pos * 0.5, uuid, txn(uuid))
+            }
+          }
+          val bytes = torn ++ appended.map(_ + "\n").mkString.getBytes
+          val cut = if (bytes.nonEmpty && rnd.nextInt(3) == 0) rnd.nextInt(bytes.length) else bytes.length
+          appendBytes(log, bytes.take(cut))
+          torn = bytes.drop(cut)
+        }
+        val cap = if (rnd.nextInt(4) == 0) Long.MaxValue else 1L + rnd.nextInt(4)
+        val end = s.latestOffset(committed, limit(cap))
+        val ctx = s"seed $seed step $step"
+        assert(gtids(end) == gtids(stream(log, start).latestOffset(committed, limit(cap))), ctx)
+        assert(gtids(s.reportLatestOffset()) == gtids(stream(log, start).reportLatestOffset()), ctx)
+        if (end != committed) {
+          val got = rows(s, committed, end)
+          assert(got == rows(stream(log, start), committed, end), ctx)
+          // every complete line of the delta's transactions, in file order
+          val delta = gtids(end).subtract(gtids(committed))
+          val complete = written.take(Files.readAllBytes(Paths.get(log)).count(_ == '\n'))
+          assert(got == complete.filter { case (_, g) =>
+            val i = g.lastIndexOf(':')
+            delta.contains(g.take(i), g.drop(i + 1).toLong)
+          }, ctx)
+          if (rnd.nextInt(4) != 0) committed = end // else the batch fails and is replanned
+        }
+      }
+    }
+  }
+
+  test("a log truncated below the cursors is scanned again from byte 0") {
+    val dir = Files.createTempDirectory("graft_src_trunc").toString
+    val log = s"$dir/changelog.log"
+    writeLines(log, (1L to 10L).map(i =>
+      BinlogFileSource.renderLine("t0", i, "I", 1000L * i, i, i * 1.0, "a", i)))
+    val s = stream(log)
+    val o0 = s.initialOffset()
+    val o1 = s.latestOffset(o0, limit(Long.MaxValue))
+    assert(s.reportLatestOffset().json == "a:1-10")
+    assert(rows(s, o0, o1).size == 10)
+    writeLines(log, (1L to 3L).map(i =>
+      BinlogFileSource.renderLine("t0", i, "I", 1000L * i, 100 + i, i * 1.0, "b", i)))
+    val o2 = s.latestOffset(o1, limit(Long.MaxValue))
+    assert(o2.json == "a:1-10,b:1-3")
+    assert(s.reportLatestOffset() == stream(log).reportLatestOffset())
+    assert(rows(s, o1, o2) == (1L to 3L).map(i => (100 + i) -> s"b:$i"))
+  }
 
   test("streams a log file in admission-capped micro-batches, in order") {
     val dir = Files.createTempDirectory("graft_src").toString

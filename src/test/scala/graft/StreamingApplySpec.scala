@@ -145,6 +145,63 @@ class StreamingApplySpec extends SparkSpec {
       4L -> "null_payload"))
   }
 
+  /** Part files in every `v=<batch>/bucket=<b>` directory of a state store. */
+  private def partFiles(stateDir: String): Seq[(String, Int)] =
+    new java.io.File(stateDir).listFiles().toSeq.filter(_.getName.startsWith("v=")).flatMap { v =>
+      v.listFiles().toSeq.filter(_.getName.startsWith("bucket=")).map { b =>
+        s"${v.getName}/${b.getName}" -> b.listFiles().count(_.getName.startsWith("part-"))
+      }
+    }
+
+  /** Runs `write` into a fresh state directory under each shuffle width
+    * and returns (width, directory). */
+  private def atWidths(widths: Seq[Int])(write: String => Unit): Seq[(Int, String)] = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try widths.map { w =>
+      spark.conf.set("spark.sql.shuffle.partitions", w.toLong)
+      val dir = Files.createTempDirectory(s"graft_width$w").toString + "/state"
+      write(dir)
+      w -> dir
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  private def assertSetEqual(a: DataFrame, b: DataFrame): Unit =
+    assert(a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+
+  private val wideBatches: Seq[Seq[ChangeEvent]] = Seq(
+    (0 until 300).map(i => ev(i % 97, if (i < 97) "I" else "U", i, i * 0.5)),
+    (300 until 420).map(i => ev(i % 89, if (i % 10 == 0) "D" else "U", i, i * 0.25)))
+
+  test("bucketed writes at a shuffle width below nBuckets: one part file per bucket, same state") {
+    val runs = atWidths(Seq(32, 3, 7)) { dir =>
+      StreamingApply.writeVersion(wideBatches.head.toDF(), dir, -1L, nBuckets = 32)
+      StreamingApply.applyBatch(dir, nBuckets = 32)(wideBatches(1).toDF(), 0L)
+    }
+    val (_, ref) = runs.head
+    for ((w, dir) <- runs) {
+      val files = partFiles(dir)
+      assert(files.map(_._1).exists(_.startsWith("v=-1/")) && files.map(_._1).exists(_.startsWith("v=0/")))
+      assert(files.forall(_._2 == 1), s"width $w: $files")
+      assertSetEqual(StreamingApply.stateBefore(spark, dir, Long.MaxValue),
+        StreamingApply.stateBefore(spark, ref, Long.MaxValue))
+    }
+  }
+
+  test("bucketed SCD2 apply at a shuffle width below nBuckets: one part file per bucket, same history") {
+    import graft.streaming.StreamingScd2
+    val runs = atWidths(Seq(32, 3, 7)) { dir =>
+      wideBatches.zipWithIndex.foreach { case (b, id) =>
+        StreamingScd2.applyBatch(dir, nBuckets = 32)(b.toDF(), id.toLong)
+      }
+    }
+    val (_, ref) = runs.head
+    for ((w, dir) <- runs) {
+      val files = partFiles(dir)
+      assert(files.nonEmpty && files.forall(_._2 == 1), s"width $w: $files")
+      assertSetEqual(StreamingScd2.currentHistory(spark, dir), StreamingScd2.currentHistory(spark, ref))
+    }
+  }
+
   test("mergeState keeps tombstones so deletes survive compaction boundaries") {
     val s1 = StreamingApply.mergeState(Seq.empty[ChangeEvent].toDF(), Seq(ev(9, "I", 0, 1.0)).toDF())
     val s2 = StreamingApply.mergeState(s1, Seq(ev(9, "D", 1, 0.0)).toDF())

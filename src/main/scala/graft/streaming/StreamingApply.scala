@@ -1,10 +1,16 @@
 package graft.streaming
 
+import graft.cdc.ChangelogApply
 import graft.functions.PortableHash
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
+
+import java.util.concurrent.ConcurrentHashMap
 
 /** Structured Streaming changelog apply — the streaming half of the
   * engine (reference: pipeline/CDCStreamPipeline.scala:58-131, the Pekko
@@ -14,47 +20,69 @@ import org.apache.spark.sql.types.StructType
   * Spark-first mapping:
   *   - micro-batching = `Trigger.AvailableNow` / `ProcessingTime`
   *     (reference's `groupedWithin(100, 1s)`, R3);
-  *   - keyed routing = the shuffle inside the per-batch merge (R1/R2);
+  *   - keyed routing = the shuffle inside the fold's merge (R1/R2);
   *   - per-key ordering = the merge is ORDER-INSENSITIVE (max_by pos), so
   *     no cross-batch ordering guarantee is needed at all — the risk
   *     called out in SURVEY.md §7.4(1) is eliminated by construction, not
   *     by serializing batches the way the reference's `mapAsync(1)` does;
   *   - offsets = the checkpoint log (reference's RECEIVED/APPLIED/
   *     COMMITTED machine, coordinator/DefaultOffsetCoordinator.scala);
-  *   - idempotent re-run = each touched bucket's v(batchId) is a pure
-  *     function of that bucket's v(prev) + batch, written by overwrite —
-  *     replaying a batch rewrites the same bytes (reference gets this
-  *     from upsert-by-PK, README.md:524-552).
+  *   - idempotent re-run = a micro-batch's delta is written by overwrite
+  *     under its batchId, so replaying a batch rewrites the same rows
+  *     (reference gets this from upsert-by-PK, README.md:524-552).
   *
   * The envelope is payload-polymorphic: `payloadCols` names the columns
   * carried beyond (tbl, pk, op, ts, pos) — a scalar `value` for the
   * narrow fixtures, the full multi-column after-image for wide CDC
   * (reference rows are whole-column maps, model/ChangeEvent.scala:16-24).
   *
-  * State layout — BUCKETED versions, the 100 TB-safe shape:
+  * The LWW store is MERGE-ON-READ, the layout of Structured Streaming's
+  * own state store (a delta per batch, snapshots made by background
+  * maintenance):
   *
-  *   stateDir/v=<batchId>/bucket=<b>/part-*.parquet
+  *   stateDir/d=<batchId>/part-*.parquet              one delta per batch
+  *   stateDir/v=<fold>/bucket=<b>/part-*.parquet      bucketed bases
   *
-  * The state is hash-partitioned into `nBuckets` by the portable pk
-  * router. A micro-batch merges and rewrites ONLY the buckets its keys
-  * touch — O(|touched state|) per batch, not O(|whole state|): a 1-second
-  * batch updating 0.1% of a 100 TB keyspace reads and writes ~0.1% of the
-  * buckets instead of rewriting the world (the round-1 design's flaw).
-  * Untouched buckets keep serving their previous version. Tombstones are
-  * retained inside the state (op='D' rows kept so later batches can't
-  * resurrect deleted keys); [[currentState]] drops them at read.
+  * [[applyBatch]] writes the batch's rows once, as `d=<batchId>`, and
+  * returns: a trigger costs O(batch), whatever the state size. When
+  * [[deltasPerFold]] deltas are open (newer than the newest base), a FOLD
+  * runs on a daemon thread, at most one per state directory: the
+  * bucketed merge of [[applyBatchWith]] over the open deltas, writing
+  * `v=<newest folded delta>/bucket=<b>` for the buckets they touch only.
+  * Untouched buckets keep serving their previous base. Reads
+  * ([[currentState]], [[stateBefore]]) wait for the fold in flight, then
+  * take the LWW result over the latest base of each bucket ∪ the retained
+  * deltas — correct however the two overlap, because the merge is
+  * idempotent and order-insensitive. Tombstones are retained inside the
+  * state (op='D' rows kept so later batches can't resurrect deleted
+  * keys); [[currentState]] drops them at read.
+  *
+  * Completeness and retention:
+  *   - a `v=` or `d=` directory counts only once its `_SUCCESS` marker
+  *     exists; the next fold removes a `v=` cut off before its marker;
+  *   - the fold deletes the deltas it covered only after its base is
+  *     complete, so no read ever needs a deleted delta; a delta at or
+  *     below the newest base (a replay after the fold) is covered and
+  *     goes with the next fold;
+  *   - each fold keeps the newest previous base of every bucket it
+  *     rewrites and deletes older ones, so at most two bases per bucket
+  *     and about [[deltasPerFold]] deltas are retained.
+  *
+  * A failed fold loses nothing — its deltas stay — and the next apply or
+  * read on that directory rethrows its exception once. Fold jobs run on a
+  * thread that inherits none of the stream thread's local properties (job
+  * group, tags, SQL execution id, `streaming.sql.batchId`), so stopping
+  * the query cannot cancel a fold and fold jobs are not the batch's jobs.
+  *
+  * [[StreamingScd2]] and [[StreamingEnrich]] keep the synchronous
+  * [[applyBatchWith]] path (`v=<batchId>` per batch, no deltas): their
+  * interval recompute needs the prior rows.
   *
   * All state-directory listing/deleting goes through Hadoop [[FileSystem]]
   * so the same code is correct when stateDir is hdfs:// or s3a:// on a
   * real cluster (a java.io.File walk would silently see nothing there).
-  *
-  * Retention: [[compact]] keeps the newest `keepVersions` versions per
-  * bucket (default 2 — enough for Structured Streaming's replay window,
-  * which only ever re-runs the latest uncommitted batch) and deletes the
-  * rest; [[applyBatch]] compacts only the buckets it touched, so compaction
-  * cost follows batch size, not state size. Production path at larger
-  * replay windows: Delta/Iceberg MERGE, which gives the same
-  * touched-files-only rewrite transactionally.
+  * Production path at larger replay windows: Delta/Iceberg MERGE, which
+  * gives the same touched-files-only rewrite transactionally.
   */
 object StreamingApply {
 
@@ -64,12 +92,17 @@ object StreamingApply {
   private def stateCols(payloadCols: Seq[String]): Seq[String] =
     Seq("tbl", "pk", "op", "ts", "pos") ++ payloadCols
 
-  /** State buckets: the unit a micro-batch rewrites, so more buckets make
-    * a small batch rewrite less state. Tasks are sized separately, by
+  /** State buckets: the unit a fold rewrites, so more buckets make a
+    * small fold rewrite less state. Tasks are sized separately, by
     * [[byBucket]]; at cluster scale this would be sized so one bucket is a
     * comfortable file (e.g. 4096).
     */
   val defaultBuckets = 32
+
+  /** Open deltas that start a fold: Spark's own state-store
+    * `minDeltasForSnapshot` default.
+    */
+  val deltasPerFold = 10
 
   /** Repartition on `bucket` into min(nBuckets, spark.sql.shuffle.partitions)
     * tasks — the width rule of the bucketed state stores (this one,
@@ -96,12 +129,8 @@ object StreamingApply {
   def mergeState(prev: DataFrame, batch: DataFrame,
                  payloadCols: Seq[String] = defaultPayload): DataFrame = {
     val cols = stateCols(payloadCols)
-    val carried = Seq("op", "ts", "pos") ++ payloadCols
-    prev.select(cols.map(col): _*)
-      .unionByName(batch.select(cols.map(col): _*))
-      .groupBy(col("tbl"), col("pk"))
-      .agg(max_by(struct(carried.map(col): _*), col("pos")).as("last"))
-      .select(col("tbl") +: col("pk") +: carried.map(c => col(s"last.$c").as(c)): _*)
+    ChangelogApply.materializeEnvelope(
+      prev.select(cols.map(col): _*).unionByName(batch.select(cols.map(col): _*)), payloadCols)
   }
 
   /** [[mergeState]] for the bucket-aware apply path: inputs carry a
@@ -129,60 +158,122 @@ object StreamingApply {
   private def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** All (version, bucket, path) triples in the state store, oldest
-    * version first — listed through Hadoop FileSystem so hdfs://s3a://
-    * state dirs behave identically to local ones.
+  /** One listing of a state directory, through Hadoop FileSystem so
+    * hdfs:// and s3a:// state dirs behave identically to local ones.
+    *
+    * @param bases   (version, bucket, path) of every complete base, oldest
+    *                version first
+    * @param deltas  (batchId, path) of every complete delta, oldest first
+    * @param partial `v=` directories without a `_SUCCESS` marker
     */
-  private def bucketVersions(spark: SparkSession, stateDir: String): Seq[(Long, Int, Path)] = {
-    val hfs = fs(spark, stateDir)
-    val root = new Path(stateDir)
-    if (!hfs.exists(root)) Nil
-    else {
-      for {
-        v <- hfs.listStatus(root).toSeq
-        if v.isDirectory && v.getPath.getName.startsWith("v=")
-        ver = v.getPath.getName.stripPrefix("v=").toLong
-        b <- hfs.listStatus(v.getPath).toSeq
-        if b.isDirectory && b.getPath.getName.startsWith("bucket=")
-      } yield (ver, b.getPath.getName.stripPrefix("bucket=").toInt, b.getPath)
-    }.sortBy(t => (t._1, t._2))
+  private final case class Listing(bases: Seq[(Long, Int, Path)], deltas: Seq[(Long, Path)],
+                                   partial: Seq[Path]) {
+    /** The newest fold: every delta at or below it is covered by a base. */
+    def newestBase: Long = bases.lastOption.fold(Long.MinValue)(_._1)
+    def open: Seq[(Long, Path)] = deltas.filter(_._1 > newestBase)
   }
 
-  /** Latest version path per bucket among versions strictly below
+  private def listing(spark: SparkSession, stateDir: String): Listing = {
+    val hfs = fs(spark, stateDir)
+    val root = new Path(stateDir)
+    if (!hfs.exists(root)) Listing(Nil, Nil, Nil)
+    else {
+      val dirs = hfs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath)
+      def numbered(prefix: String): Seq[(Long, Path)] = dirs
+        .filter(_.getName.startsWith(prefix))
+        .map(p => p.getName.stripPrefix(prefix).toLong -> p).sortBy(_._1)
+      def complete(p: Path): Boolean = hfs.exists(new Path(p, "_SUCCESS"))
+      val (versions, partial) = numbered("v=").partition(v => complete(v._2))
+      val bases = for {
+        (v, p) <- versions
+        b <- hfs.listStatus(p).toSeq
+        if b.isDirectory && b.getPath.getName.startsWith("bucket=")
+      } yield (v, b.getPath.getName.stripPrefix("bucket=").toInt, b.getPath)
+      Listing(bases.sortBy(t => (t._1, t._2)), numbered("d=").filter(d => complete(d._2)),
+        partial.map(_._2))
+    }
+  }
+
+  /** Latest base path per bucket among versions strictly below
     * `beforeBatch` (replay of batch N must not read N's own output).
     */
-  private def latestPerBucket(listing: Seq[(Long, Int, Path)],
+  private def latestPerBucket(bases: Seq[(Long, Int, Path)],
                               beforeBatch: Long): Map[Int, Path] =
-    listing
+    bases
       .filter(_._1 < beforeBatch)
       .groupBy(_._2)
       .map { case (b, vs) => b -> vs.maxBy(_._1)._3 }
 
-  /** State as of the latest version strictly below `beforeBatch`,
-    * restricted to `buckets` (None = all buckets). `emptySchema` shapes
-    * the zero-state frame before the first version exists.
+  /** The schema Spark recorded in the footer of the first part file under
+    * `dirs`, read on the driver: a schema-inferring read would start a
+    * footer-merge Spark job every time a state frame is built.
+    */
+  private def footerSchema(spark: SparkSession, dirs: Seq[Path]): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    dirs.iterator
+      .flatMap(d => d.getFileSystem(conf).listStatus(d).iterator)
+      .find(_.getPath.getName.startsWith("part-"))
+      .map { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try DataType.fromJson(reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get(ParquetReadSupport.SPARK_METADATA_KEY)).asInstanceOf[StructType]
+        finally reader.close()
+      }
+  }
+
+  /** The state rows stored under `dirs` (bucket or delta directories);
+    * None when they hold no part file.
+    */
+  private def readState(spark: SparkSession, dirs: Seq[Path],
+                        payloadCols: Seq[String]): Option[DataFrame] =
+    footerSchema(spark, dirs).map(schema =>
+      spark.read.schema(schema).parquet(dirs.map(_.toString): _*)
+        .select(stateCols(payloadCols).map(col): _*))
+
+  /** The bases of `buckets` (None = all) as of the latest version strictly
+    * below `beforeBatch`.
+    */
+  private def basesBefore(spark: SparkSession, bases: Seq[(Long, Int, Path)],
+                          beforeBatch: Long, buckets: Option[Set[Int]],
+                          payloadCols: Seq[String]): Option[DataFrame] =
+    readState(spark, latestPerBucket(bases, beforeBatch).toSeq
+      .filter { case (b, _) => buckets.forall(_.contains(b)) }
+      .sortBy(_._1).map(_._2), payloadCols)
+
+  /** State as of batch `beforeBatch` (exclusive), restricted to `buckets`
+    * (None = all buckets): the latest base of each bucket below it ∪ the
+    * deltas below it, LWW-merged when deltas exist. `emptySchema` shapes
+    * the zero-state frame before anything is written; with no base yet,
+    * the schema comes from the deltas.
+    *
+    * A finite `beforeBatch` is answered exactly only above the newest
+    * fold: a fold's base already holds every delta it covered, and those
+    * deltas are gone. The SCD2 and enrichment stores, which write a
+    * version per batch and never fold, are the stores read that way.
+    * Merge-on-read deltas carry no bucket column, so a bucket-restricted
+    * read is for those stores too.
     */
   def stateBefore(spark: SparkSession, stateDir: String, beforeBatch: Long,
                   buckets: Option[Set[Int]] = None,
                   payloadCols: Seq[String] = defaultPayload,
-                  emptySchema: StructType = graft.model.ChangeEvent.envelopeSchema): DataFrame =
-    stateFromListing(spark, bucketVersions(spark, stateDir), beforeBatch,
-      buckets, payloadCols, emptySchema)
-
-  private def stateFromListing(spark: SparkSession, listing: Seq[(Long, Int, Path)],
-                               beforeBatch: Long, buckets: Option[Set[Int]],
-                               payloadCols: Seq[String],
-                               emptySchema: StructType): DataFrame = {
-    val paths = latestPerBucket(listing, beforeBatch)
-      .filter { case (b, _) => buckets.forall(_.contains(b)) }
-      .values.map(_.toString).toSeq
-    if (paths.isEmpty) emptyState(spark, emptySchema)
-    else spark.read.parquet(paths: _*).select(stateCols(payloadCols).map(col): _*)
+                  emptySchema: StructType = graft.model.ChangeEvent.envelopeSchema): DataFrame = {
+    awaitFold(spark, stateDir)
+    val l = listing(spark, stateDir)
+    val deltas = l.deltas.filter(_._1 < beforeBatch).map(_._2)
+    require(buckets.isEmpty || deltas.isEmpty,
+      s"$stateDir holds merge-on-read deltas: a bucket-restricted read cannot filter them")
+    val base = basesBefore(spark, l.bases, beforeBatch, buckets, payloadCols)
+    readState(spark, deltas, payloadCols) match {
+      case None => base.getOrElse(emptyState(spark, emptySchema))
+      case Some(d) => ChangelogApply.materializeEnvelope(
+        base.fold(d)(_.unionByName(d)), payloadCols)
+    }
   }
 
   /** Write a full state frame as one bucketed version — the seeding path
-    * for snapshot/catchup phases (Engine) and the write half of
-    * [[applyBatch]].
+    * for snapshot/catchup phases (Engine). A seed version must lie below
+    * the first batch id streamed on top of it: deltas at or below the
+    * newest base count as folded.
     */
   def writeVersion(state: DataFrame, stateDir: String, version: Long,
                    nBuckets: Int = defaultBuckets,
@@ -192,25 +283,108 @@ object StreamingApply {
       .write.partitionBy("bucket")
       .mode("overwrite").parquet(s"$stateDir/v=$version")
 
-  /** The foreachBatch body: for each bucket touched by the batch,
-    * v(batchId)/bucket := merge(latest(bucket), batch ∩ bucket). Public so
-    * the idempotence property is unit-testable without a stream.
-    *
-    * The touched-bucket probe is a driver-side collect BOUNDED BY
-    * nBuckets (a few ints, never data rows) — the same legitimate scalar
-    * probe shape as Watermark.latestPosition. Compaction afterwards is
-    * scoped to the touched buckets, so its cost follows the batch.
+  /** The foreachBatch body: write the batch's rows as `d=<batchId>`
+    * (overwrite, so a replay rewrites its own delta), then start a fold
+    * when [[deltasPerFold]] deltas are open and none is in flight. Public
+    * so the idempotence property is unit-testable without a stream.
     */
   def applyBatch(stateDir: String, nBuckets: Int = defaultBuckets,
                  payloadCols: Seq[String] = defaultPayload)(
-      batch: DataFrame, batchId: Long): Unit =
-    applyBatchWith(stateDir, nBuckets, payloadCols,
-      identity, mergeStateBucketed(_, _, payloadCols, nBuckets))(batch, batchId)
+      batch: DataFrame, batchId: Long): Unit = {
+    val spark = batch.sparkSession
+    val folder = folderOf(spark, stateDir)
+    folder.rethrow()
+    val delta = new Path(stateDir, s"d=$batchId")
+    // a replay overwrites its delta: never under a fold that reads it
+    if (fs(spark, stateDir).exists(delta)) folder.await()
+    batch.select(stateCols(payloadCols).map(col): _*)
+      .write.mode("overwrite").parquet(delta.toString)
+    if (folder.idle && listing(spark, stateDir).open.size >= deltasPerFold)
+      folder.start(spark)(fold(spark, stateDir, nBuckets, payloadCols))
+  }
 
-  /** Generic bucketed apply: [[applyBatch]] with a pluggable batch
-    * preparation (pad state-only columns) and state merge — the SAME
-    * versioned-bucket/replay/compaction machinery serves any
-    * order-insensitive merge (LWW here, interval recompute in
+  /** One fold: the open deltas merged into `v=<newest open delta>` for the
+    * buckets they touch, then the covered deltas and any cut-off `v=`
+    * removed.
+    */
+  private def fold(spark: SparkSession, stateDir: String, nBuckets: Int,
+                   payloadCols: Seq[String]): Unit = {
+    foldHook(stateDir)
+    val l = listing(spark, stateDir)
+    l.open.lastOption.foreach { case (version, _) =>
+      readState(spark, l.open.map(_._2), payloadCols).foreach(deltas =>
+        applyBatchWith(stateDir, nBuckets, payloadCols,
+          identity, mergeStateBucketed(_, _, payloadCols, nBuckets))(deltas, version))
+      val hfs = fs(spark, stateDir)
+      (l.deltas.filter(_._1 <= version).map(_._2) ++
+        l.partial.filter(_.getName != s"v=$version")).foreach(hfs.delete(_, true))
+    }
+  }
+
+  /** Called on the fold thread before each fold, with the state directory
+    * as given to [[applyBatch]]: a test hook to hold or fail a fold.
+    */
+  @volatile private[graft] var foldHook: String => Unit = _ => ()
+
+  /** The background fold of one state directory: at most one in flight;
+    * a failure is kept until the next call on the directory rethrows it.
+    */
+  private final class Folder(dir: String) {
+    private var running: Thread = null
+    private var failure: Throwable = null
+
+    def idle: Boolean = synchronized(running == null)
+
+    /** Runs `work` on a daemon thread that inherits no inheritable
+      * thread-locals: no SparkContext local property of the calling
+      * stream thread reaches the fold's jobs.
+      */
+    def start(spark: SparkSession)(work: => Unit): Unit = synchronized {
+      if (running == null) {
+        val t = new Thread(null, () => {
+          SparkSession.setActiveSession(spark)
+          spark.sparkContext.setJobDescription(s"fold $dir")
+          try work
+          catch { case e: Throwable => synchronized { failure = e } }
+          finally synchronized { running = null }
+        }, s"state-fold $dir", 0L, false)
+        t.setDaemon(true)
+        running = t
+        t.start()
+      }
+    }
+
+    def rethrow(): Unit = {
+      val f = synchronized { val f = failure; failure = null; f }
+      if (f != null) throw new IllegalStateException(s"the fold of $dir failed", f)
+    }
+
+    def await(): Unit = {
+      val t = synchronized(running)
+      if (t != null) t.join()
+      rethrow()
+    }
+  }
+
+  private val folders = new ConcurrentHashMap[String, Folder]()
+
+  private def folderOf(spark: SparkSession, stateDir: String): Folder = {
+    val key = fs(spark, stateDir).makeQualified(new Path(stateDir)).toString
+    folders.computeIfAbsent(key, new Folder(_))
+  }
+
+  /** Waits for the fold in flight on `stateDir`, if any, then rethrows a
+    * failed fold's exception once. Reads call it; tests call it to pin
+    * the fold down.
+    */
+  private[graft] def awaitFold(spark: SparkSession, stateDir: String): Unit =
+    folderOf(spark, stateDir).await()
+
+  /** Generic bucketed apply: merge a batch into the latest bases of the
+    * buckets it touches and write them as `v=<batchId>`, with a pluggable
+    * batch preparation (pad state-only columns) and state merge — the
+    * SAME versioned-bucket/replay/compaction machinery serves any
+    * order-insensitive merge (the LWW fold here, interval recompute in
     * [[StreamingScd2]]).
     *
     * Merge contract: both frames carry a `bucket` column and the merged
@@ -219,6 +393,11 @@ object StreamingApply {
     * groupings/windows are bucket-local under hash(bucket) partitioning
     * since bucket ⊆ the keys), so a micro-batch costs exactly one
     * exchange and the bucketed write adds none.
+    *
+    * The touched-bucket probe is a driver-side collect BOUNDED BY
+    * nBuckets (a few ints, never data rows) — the same legitimate scalar
+    * probe shape as Watermark.latestPosition. Compaction afterwards is
+    * scoped to the touched buckets, so its cost follows the batch.
     */
   def applyBatchWith(stateDir: String, nBuckets: Int, payloadCols: Seq[String],
                      prepare: DataFrame => DataFrame,
@@ -235,11 +414,11 @@ object StreamingApply {
         // ONE state listing serves both the merge read and the
         // post-write compaction (a second full walk per micro-batch is
         // pure fixed overhead — and on object stores, a LIST storm)
-        val listing = bucketVersions(spark, stateDir)
+        val bases = listing(spark, stateDir).bases
         // bucket is re-derived, not read back: the per-bucket paths are
         // read directly so the partition column isn't in the footer
-        val prev = stateFromListing(spark, listing, batchId, Some(touched),
-          payloadCols, b.drop("bucket").schema)
+        val prev = basesBefore(spark, bases, batchId, Some(touched), payloadCols)
+          .getOrElse(emptyState(spark, b.drop("bucket").schema))
           .withColumn("bucket", bucketOf(nBuckets))
         merge(prev, b)
           .select((cols :+ "bucket").map(col): _*)
@@ -250,7 +429,7 @@ object StreamingApply {
         // means keeping the single newest PRE-batch version per bucket
         // (replay entries at v=batchId were just overwritten, never old)
         dropSuperseded(spark, stateDir,
-          listing.filter { case (v, bkt, _) => v < batchId && touched(bkt) },
+          bases.filter { case (v, bkt, _) => v < batchId && touched(bkt) },
           keepPerBucket = 1)
       }
     } finally { b.unpersist(); () }
@@ -266,7 +445,7 @@ object StreamingApply {
               buckets: Option[Set[Int]] = None): Unit = {
     require(keepVersions >= 2, "replay of the latest batch needs its predecessor")
     dropSuperseded(spark, stateDir,
-      bucketVersions(spark, stateDir)
+      listing(spark, stateDir).bases
         .filter { case (_, b, _) => buckets.forall(_.contains(b)) },
       keepPerBucket = keepVersions)
   }
@@ -291,8 +470,8 @@ object StreamingApply {
       .foreach(v => hfs.delete(v.getPath, true))
   }
 
-  /** Latest materialized state (latest version of every bucket),
-    * tombstones dropped.
+  /** Latest materialized state (latest base of every bucket ∪ the
+    * retained deltas), tombstones dropped.
     */
   def currentState(spark: SparkSession, stateDir: String,
                    payloadCols: Seq[String] = defaultPayload,
@@ -304,10 +483,10 @@ object StreamingApply {
     * of the WIDE envelope is classified ([[graft.cdc.DeadLetter]]), non-ok
     * rows land under `dlqDir/v=<batchId>` (queryable, replayable after the
     * fix), and only `ok` rows decode through the registry into the state
-    * merge — one malformed payload must never stall replication of the
-    * other 100 TB/day. The DLQ write is keyed by batchId exactly like the
-    * state write, so a replayed micro-batch overwrites its own quarantine
-    * output: crash-restart stays idempotent on BOTH paths.
+    * delta — one malformed payload must never stall replication of the
+    * other 100 TB/day. The DLQ write is keyed by batchId like the state
+    * delta `d=<batchId>`, so a replayed micro-batch overwrites its own
+    * quarantine output: crash-restart stays idempotent on BOTH paths.
     */
   def applyBatchQuarantined(stateDir: String, dlqDir: String,
                             reg: graft.cdc.SchemaRegistry,
@@ -321,8 +500,7 @@ object StreamingApply {
         bad.write.mode("overwrite").parquet(s"$dlqDir/v=$batchId")
       val ok = reg.decode(classified.filter(col("disposition") === "ok")
         .drop("disposition"))
-      applyBatchWith(stateDir, nBuckets, payloadCols,
-        identity, mergeStateBucketed(_, _, payloadCols, nBuckets))(ok, batchId)
+      applyBatch(stateDir, nBuckets, payloadCols)(ok, batchId)
     } finally classified.unpersist()
   }
 }

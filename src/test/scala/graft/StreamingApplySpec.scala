@@ -64,30 +64,46 @@ class StreamingApplySpec extends SparkSpec {
     assert(stateOf(StreamingApply.currentState(spark, dir)) == expected)
   }
 
+  /** Applies `batches` as batch ids `from`, `from + 1`, ... and waits for
+    * the fold each one may start, so fold versions are deterministic. */
+  private def applyEach(dir: String, batches: Seq[DataFrame], from: Int = 0,
+                        nBuckets: Int = StreamingApply.defaultBuckets): Unit =
+    batches.zipWithIndex.foreach { case (b, i) =>
+      StreamingApply.applyBatch(dir, nBuckets)(b, (from + i).toLong)
+      StreamingApply.awaitFold(spark, dir)
+    }
+
+  private def dirsOf(stateDir: String, prefix: String): Seq[String] =
+    new java.io.File(stateDir).listFiles().map(_.getName).filter(_.startsWith(prefix)).sorted.toSeq
+
   test("a small batch rewrites only its touched buckets, not the whole state") {
     val dir = Files.createTempDirectory("graft_bkt").toString + "/state"
-    StreamingApply.applyBatch(dir)(all.take(5).toDF(), 0L) // seeds several buckets
-    val bucketsV0 = new java.io.File(s"$dir/v=0").listFiles()
+    // batch 0 seeds several buckets; the first fold (batches 0-9) writes them
+    applyEach(dir, all.take(5).toDF() +: (1 to 9).map(i => Seq(ev(3, "U", 10 + i, 3.0)).toDF()))
+    val bucketsV9 = new java.io.File(s"$dir/v=9").listFiles()
       .count(_.getName.startsWith("bucket="))
-    // batch 1 touches a single pk → exactly one bucket dir under v=1
-    StreamingApply.applyBatch(dir)(Seq(ev(1, "U", 100, 7.7)).toDF(), 1L)
-    val bucketsV1 = new java.io.File(s"$dir/v=1").listFiles()
+    // batches 10-19 touch a single pk: each delta holds only its own row,
+    // and their fold writes exactly one bucket dir under v=19
+    applyEach(dir, Seq(Seq(ev(1, "U", 100, 7.7)).toDF()), from = 10)
+    assert(spark.read.parquet(s"$dir/d=10").count() == 1)
+    applyEach(dir, (11 to 19).map(i => Seq(ev(1, "U", 100 + i, 7.7)).toDF()), from = 11)
+    val bucketsV19 = new java.io.File(s"$dir/v=19").listFiles()
       .filter(_.getName.startsWith("bucket=")).map(_.getName).toSeq
-    assert(bucketsV0 > 1, "fixture should spread over multiple buckets")
-    assert(bucketsV1.size == 1, s"expected 1 touched bucket, got $bucketsV1")
-    // untouched buckets still serve from v=0; the touched key reads v=1
+    assert(bucketsV9 > 1, "fixture should spread over multiple buckets")
+    assert(bucketsV19.size == 1, s"expected 1 touched bucket, got $bucketsV19")
+    // untouched buckets still serve from v=9; the touched key reads v=19
     val st = stateOf(StreamingApply.currentState(spark, dir))
     assert(st(1L) == 7.7 && st(3L) == 3.0)
   }
 
   test("compaction keeps only the newest two versions per bucket") {
     val dir = Files.createTempDirectory("graft_cmp").toString + "/state"
-    for (i <- 0 until 5)
-      StreamingApply.applyBatch(dir)(Seq(ev(1, "U", i, i.toDouble)).toDF(), i.toLong)
-    val versions = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("v=")).map(_.getName).sorted.toSeq
-    assert(versions == Seq("v=3", "v=4"), s"expected retention to 2, got $versions")
-    assert(stateOf(StreamingApply.currentState(spark, dir)) == Map(1L -> 4.0))
+    applyEach(dir, (0 until 30).map(i => Seq(ev(1, "U", i, i.toDouble)).toDF()))
+    // folds at batches 9, 19 and 29; each keeps one previous base per bucket
+    // and deletes the deltas it covered
+    assert(dirsOf(dir, "v=") == Seq("v=19", "v=29"), s"expected retention to 2, got ${dirsOf(dir, "v=")}")
+    assert(dirsOf(dir, "d=").isEmpty, s"folded deltas retained: ${dirsOf(dir, "d=")}")
+    assert(stateOf(StreamingApply.currentState(spark, dir)) == Map(1L -> 29.0))
   }
 
   test("bucketed state carries the wide multi-column envelope") {
@@ -175,12 +191,14 @@ class StreamingApplySpec extends SparkSpec {
   test("bucketed writes at a shuffle width below nBuckets: one part file per bucket, same state") {
     val runs = atWidths(Seq(32, 3, 7)) { dir =>
       StreamingApply.writeVersion(wideBatches.head.toDF(), dir, -1L, nBuckets = 32)
-      StreamingApply.applyBatch(dir, nBuckets = 32)(wideBatches(1).toDF(), 0L)
+      // ten deltas: the fold over them writes v=9
+      applyEach(dir, wideBatches(1).grouped(12).map(_.toDF()).toSeq, nBuckets = 32)
     }
     val (_, ref) = runs.head
     for ((w, dir) <- runs) {
       val files = partFiles(dir)
-      assert(files.map(_._1).exists(_.startsWith("v=-1/")) && files.map(_._1).exists(_.startsWith("v=0/")))
+      assert(files.map(_._1).exists(_.startsWith("v=-1/")) && files.map(_._1).exists(_.startsWith("v=9/")))
+      assert(dirsOf(dir, "d=").isEmpty)
       assert(files.forall(_._2 == 1), s"width $w: $files")
       assertSetEqual(StreamingApply.stateBefore(spark, dir, Long.MaxValue),
         StreamingApply.stateBefore(spark, ref, Long.MaxValue))

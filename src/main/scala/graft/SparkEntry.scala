@@ -555,7 +555,7 @@ object SparkEntry {
         .orderBy("tbl", "pk", "pos")),
 
     // Schema-registry typed decode: aggregate over fields read through
-    // from_json(payload, schemaFor(tbl)) — asserts the registry's typed
+    // the registry's one from_json parse — asserts the registry's typed
     // view matches the source values
     "cdc_typed_decode" -> ((s, dir) =>
       wideChangelog(s, dir)

@@ -1,8 +1,8 @@
 package graft.cdc
 
+import graft.cdc.SchemaRegistry.{CorruptCol, ParsedCol}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Dead-letter routing: decode failures are DATA, not exceptions. A
   * 100 TB/day changelog always carries some unparseable payloads and
@@ -13,32 +13,27 @@ import org.apache.spark.sql.types.StructType
   * the bad ones stay queryable: route `ok` to the apply path, the rest to
   * a quarantine sink for replay after the fix.
   *
-  * Classification is a single projection (no shuffle, no UDF):
-  * `from_json` under PERMISSIVE mode yields a null struct for malformed
-  * JSON, which IS the parseability test — codegen'd, scan-local.
+  * Classification is a single projection (no shuffle, no UDF) over the
+  * registry's one parse ([[SchemaRegistry.parsed]]) — scan-local.
   */
 object DeadLetter {
 
   /** Envelope + `disposition` ∈ {ok, unregistered_table, null_payload,
-    * unparseable}. Parseability is judged under the registry's unified
-    * field set with the standard corrupt-record column: PERMISSIVE
-    * `from_json` never throws, it lands malformed input in
-    * `_corrupt_record` — a null struct test would miss it (Spark yields
-    * an all-null ROW for malformed JSON, indistinguishable from `{}`).
+    * unparseable}. An event without a table name is unregistered.
+    * Parseability is judged by the parse's `_corrupt_record`, not by a
+    * null struct: Spark yields an all-null ROW for malformed JSON,
+    * indistinguishable from `{}`.
     */
-  def classify(envelope: DataFrame, reg: SchemaRegistry,
-               payloadCol: String = "payload_json"): DataFrame = {
-    val probe = StructType(reg.unifiedFields.toArray)
-      .add("_corrupt_record", org.apache.spark.sql.types.StringType)
-    envelope.withColumn("disposition",
-      when(!col("tbl").isin(reg.tables: _*), lit("unregistered_table"))
-        .when(col(payloadCol).isNull, lit("null_payload"))
-        .when(from_json(col(payloadCol), probe,
-          Map("mode" -> "PERMISSIVE",
-            "columnNameOfCorruptRecord" -> "_corrupt_record"))
-          .getField("_corrupt_record").isNotNull, lit("unparseable"))
+  def classify(envelope: DataFrame, reg: SchemaRegistry): DataFrame =
+    withDisposition(reg.parsed(envelope), reg).drop(ParsedCol)
+
+  /** `disposition` added to a [[SchemaRegistry.parsed]] envelope. */
+  private[graft] def withDisposition(parsed: DataFrame, reg: SchemaRegistry): DataFrame =
+    parsed.withColumn("disposition",
+      when(col("tbl").isNull || !col("tbl").isin(reg.tables: _*), lit("unregistered_table"))
+        .when(col("payload_json").isNull, lit("null_payload"))
+        .when(col(ParsedCol).getField(CorruptCol).isNotNull, lit("unparseable"))
         .otherwise(lit("ok")))
-  }
 
   /** Per-table quarantine accounting — the health panel a replication
     * operator watches (n_ok collapses through map-side partials; the

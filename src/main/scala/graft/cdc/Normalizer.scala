@@ -73,8 +73,8 @@ object Normalizer {
   /** Payload column names, alphabetical (deterministic projection order). */
   val payloadCols: Seq[String] = payloadSchema.fieldNames.toSeq
 
-  /** Registry covering the fixture's four logical shards (one shared row
-    * schema → [[SchemaRegistry.decode]] stays a single from_json branch).
+  /** Registry covering the fixture's four logical shards, which share one
+    * row schema.
     */
   val fixtureRegistry: SchemaRegistry =
     SchemaRegistry.of((0 to 3).map(i => s"t$i"), payloadSchema)

@@ -12,17 +12,17 @@ import org.apache.spark.sql.types._
   * getTableSchema, normalizer/MySQLEventNormalizer.scala:164-171 per-event
   * schema cache, :184-250 convertValue per column type). Spark-first, the
   * same idea is: register a `StructType` per table once on the driver and
-  * decode the row-image JSON with `from_json(payload, schemaFor(tbl))` —
-  * a codegen'd expression inside the scan stage instead of the reference's
-  * blocking per-event `Await` on a TrieMap miss
-  * (MySQLEventNormalizer.scala:166-170).
+  * decode the row-image JSON with `from_json` — a codegen'd expression
+  * inside the scan stage instead of the reference's blocking per-event
+  * `Await` on a TrieMap miss (MySQLEventNormalizer.scala:166-170).
   *
-  * Tables sharing an identical schema decode in ONE `from_json` branch, so
-  * the common case (a sharded table family) costs a single projection; only
-  * genuinely heterogeneous schemas fan out into a union, each branch still
-  * a scan-local projection with no shuffle.
+  * Each payload is parsed once ([[parsed]], PERMISSIVE: malformed or
+  * mistyped input lands in `_corrupt_record`); [[DeadLetter.classify]]
+  * judges that parse and [[decode]] is one projection over it, so a
+  * heterogeneous registry costs the same single parse as a sharded family.
   */
 final case class SchemaRegistry(schemas: Map[String, StructType]) {
+  import SchemaRegistry.{CorruptCol, ParsedCol}
 
   require(schemas.nonEmpty, "schema registry needs at least one table")
 
@@ -31,9 +31,9 @@ final case class SchemaRegistry(schemas: Map[String, StructType]) {
 
   def tables: Seq[String] = schemas.keys.toSeq.sorted
 
-  /** Union of all registered fields (by name), used to align branches of
-    * heterogeneous schemas. Conflicting types for the same field name are
-    * a registry bug and rejected eagerly.
+  /** Union of all registered fields (by name): the schema of the parse.
+    * Conflicting types for the same field name are a registry bug and
+    * rejected eagerly.
     */
   val unifiedFields: Seq[StructField] = {
     val byName = scala.collection.mutable.LinkedHashMap.empty[String, StructField]
@@ -48,36 +48,38 @@ final case class SchemaRegistry(schemas: Map[String, StructType]) {
     byName.values.toSeq
   }
 
-  /** Decode an envelope's JSON row image through each table's registered
-    * schema: (tbl, pk, op, ts, pos, payload_json) → (tbl, pk, op, ts, pos,
-    * <typed payload columns>). Events for unregistered tables are dropped —
-    * the same scoping contract as [[TableFilter]] (replication only covers
-    * registered tables).
+  /** `envelope` plus the one parse of `payload_json`. */
+  private[graft] def parsed(envelope: DataFrame): DataFrame = envelope.withColumn(ParsedCol,
+    from_json(col("payload_json"), StructType(unifiedFields).add(CorruptCol, StringType),
+      Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> CorruptCol)))
+
+  /** Decode an envelope's JSON row image: (tbl, pk, op, ts, pos,
+    * payload_json) → (tbl, pk, op, ts, pos, <typed payload columns>), a
+    * field nulled for tables whose schema lacks it. Events for unregistered
+    * tables are dropped — the scoping contract of [[TableFilter]].
     */
-  def decode(envelope: DataFrame, payloadCol: String = "payload_json"): DataFrame = {
-    val envCols = envelope.columns.filterNot(_ == payloadCol).toSeq
-    // A row image naturally contains the PK column(s); the envelope's
-    // extracted copy is authoritative (reference extracts PK at normalize
-    // time too, MySQLEventNormalizer.scala:252-257), so payload fields
-    // shadowed by envelope names are not re-emitted.
+  def decode(envelope: DataFrame): DataFrame = decodeParsed(parsed(envelope))
+
+  /** [[decode]] as one projection over a [[parsed]] envelope. */
+  private[graft] def decodeParsed(parsed: DataFrame): DataFrame = {
+    val envCols = parsed.columns.filterNot(c => c == "payload_json" || c == ParsedCol).toSeq
+    // A row image carries the PK column(s) too; the envelope's extracted
+    // copy is authoritative (the reference extracts PK at normalize time,
+    // MySQLEventNormalizer.scala:252-257), so shadowed fields are not re-emitted.
     val payloadFields = unifiedFields.filterNot(f => envCols.contains(f.name))
-    val branches = schemas.groupBy(_._2).toSeq
-      .map { case (schema, m) => (schema, m.keys.toSeq.sorted) }
-      .sortBy(_._2.head)
-      .map { case (schema, tbls) =>
-        val decoded = envelope
-          .filter(col("tbl").isin(tbls: _*))
-          .withColumn("__row", from_json(col(payloadCol), schema))
-        decoded.select(envCols.map(col) ++ payloadFields.map { f =>
-          if (schema.fieldNames.contains(f.name)) col(s"__row.${f.name}").as(f.name)
-          else lit(null).cast(f.dataType).as(f.name)
-        }: _*)
-      }
-    branches.reduce(_.unionByName(_))
+    parsed.filter(col("tbl").isin(tables: _*)).select(envCols.map(col) ++ payloadFields.map { f =>
+      val owners = tables.filter(schemas(_).fieldNames.contains(f.name))
+      val field = col(ParsedCol).getField(f.name)
+      (if (owners == tables) field else when(col("tbl").isin(owners: _*), field)).as(f.name)
+    }: _*)
   }
 }
 
 object SchemaRegistry {
+
+  /** The column [[SchemaRegistry.parsed]] adds, and its corrupt-record field. */
+  private[graft] val ParsedCol = "payload_parsed"
+  private[graft] val CorruptCol = "_corrupt_record"
 
   /** All listed tables share one schema (the sharded-family case). */
   def of(tbls: Seq[String], schema: StructType): SchemaRegistry =

@@ -2169,24 +2169,6 @@ object Dedup {
     * `dedup_cluster_maintenance`'s oracle is the full rebuild, so the
     * correctness gate proves incremental ≡ from-scratch.
     */
-  /** Env-guarded step timing for the maintenance paths (measure-first
-    * observability, not a feature): `SPARK_GRAFT_MAINT_TIMING=1` prints
-    * per-step wall seconds to stderr. Zero cost when unset. */
-  private[graft] val maintTiming = sys.env.get("SPARK_GRAFT_MAINT_TIMING").contains("1")
-  private[graft] def timed[A](step: String)(body: => A): A =
-    if (!maintTiming) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      val n = r match {
-        case df: DataFrame => s"  rows=${df.count()}"
-        case arr: Array[_] => s"  n=${arr.length}"
-        case _             => ""
-      }
-      System.err.println(f"    [maint] $step%-22s ${(System.nanoTime() - t0) / 1e9}%.3fs$n")
-      r
-    }
-
   def maintainClusterMap(spark: org.apache.spark.sql.SparkSession,
                          indexPath: String, mapPath: String, batch: DataFrame,
                          threshold: Double, batchId: Long): Boolean = {
@@ -2216,7 +2198,7 @@ object Dedup {
         .withColumn("bucket",
           pmod(PortableHash.tokenHash(col("bh")), lit(indexBuckets)).cast("int")),
       collect_set(col("bucket")).as("hit"))
-    val bands = timed("bands") { hObs.df.localCheckpoint() }
+    val bands = hObs.df.localCheckpoint()
     val nPerms = nBands * rowsPerBand
     val probeCols = col("doc_id") +: col("band") +: col("bh") +: col("bucket") +:
       (0 until nPerms).map(i => col(s"s$i"))
@@ -2228,7 +2210,7 @@ object Dedup {
       .exists(d => d.isDirectory && d.getName.startsWith("bucket="))
     val earlier =
       if (indexHasData) {
-        val hit = timed("hit-buckets") { hObs.row.getSeq[Int](0) }
+        val hit = hObs.row.getSeq[Int](0)
         spark.read.parquet(indexPath)
           .filter(col("bucket").isin(hit.map(Integer.valueOf): _*))
           .select(probeCols: _*)
@@ -2242,32 +2224,28 @@ object Dedup {
     // pairs-checkpoint / endpoint-resolve-checkpoint / contract-collect
     // job chain (plus its two broadcast builds) collapses into plain
     // driver arithmetic below
-    val pairsArr = timed("probe-pairs") {
-      earlier.as("x")
-        .join(broadcast(bands.as("y")),
-          col("x.bucket") === col("y.bucket") && col("x.band") === col("y.band") &&
-            col("x.bh") === col("y.bh") && col("x.doc_id") < col("y.doc_id"))
-        .filter(eq / lit(nPerms.toDouble) >= threshold)
-        .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-        .distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-    }
+    val pairsArr = earlier.as("x")
+      .join(broadcast(bands.as("y")),
+        col("x.bucket") === col("y.bucket") && col("x.band") === col("y.band") &&
+          col("x.bh") === col("y.bh") && col("x.doc_id") < col("y.doc_id"))
+      .filter(eq / lit(nPerms.toDouble) >= threshold)
+      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
+      .distinct()
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
 
-    timed("index-append") {
-      val (recBatch, recMax) = BucketSwap.readFrontier(indexPath, "_ingest_frontier")
-      if (batchId > recBatch) {
-        val stats = bObs.row
-        if (!stats.isNullAt(0)) {
-          require(stats.getLong(0) > recMax,
-            s"ingestion-order contract broken: batch $batchId min doc_id " +
-              s"${stats.getLong(0)} <= already-indexed max $recMax — cluster " +
-              "maintenance assumes doc-id-ordered ingestion; re-ingest " +
-              "out-of-order data through a full rebuild instead")
-          bands.repartition(indexBuckets, col("bucket"))
-            .write.mode("append").partitionBy("bucket").parquet(indexPath)
-          BucketSwap.writeFrontier(indexPath, "_ingest_frontier", batchId,
-            math.max(recMax, stats.getLong(1)))
-        }
+    val (recBatch, recMax) = BucketSwap.readFrontier(indexPath, "_ingest_frontier")
+    if (batchId > recBatch) {
+      val stats = bObs.row
+      if (!stats.isNullAt(0)) {
+        require(stats.getLong(0) > recMax,
+          s"ingestion-order contract broken: batch $batchId min doc_id " +
+            s"${stats.getLong(0)} <= already-indexed max $recMax — cluster " +
+            "maintenance assumes doc-id-ordered ingestion; re-ingest " +
+            "out-of-order data through a full rebuild instead")
+        bands.repartition(indexBuckets, col("bucket"))
+          .write.mode("append").partitionBy("bucket").parquet(indexPath)
+        BucketSwap.writeFrontier(indexPath, "_ingest_frontier", batchId,
+          math.max(recMax, stats.getLong(1)))
       }
     }
 
@@ -2281,13 +2259,12 @@ object Dedup {
     // delta-sized result is collected for the driver-side contraction.
     // Unresolved endpoints represent themselves (getOrElse).
     val endpoints = pairsArr.flatMap(p => Seq(p._1, p._2)).distinct
-    val repsMap: Map[Long, Long] = timed("endpoint-resolve") {
+    val repsMap: Map[Long, Long] =
       if (endpoints.isEmpty) Map.empty
       else mapRel
         .filter(col("doc_id").isin(endpoints.map(java.lang.Long.valueOf): _*))
         .select(col("doc_id"), col("cluster"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
     // CC on the CONTRACTED graph runs on the DRIVER (iteration-altitude
     // rule): the edge set is delta-bounded and already collected, while
     // a distributed CC pays seconds of durable-checkpoint machinery per
@@ -2317,7 +2294,7 @@ object Dedup {
         edgesArr.flatMap { case (a, b) => Seq(a, b) }.distinct.map(n => n -> find(n))
       }
 
-    if (relabels.nonEmpty) timed("map-rewrite") {
+    if (relabels.nonEmpty) {
       val nodes = relabels.map(_._1)
       val touched = relabels.flatMap { case (n, l) =>
         Seq((n % mapBuckets).toInt, (l % mapBuckets).toInt) }.distinct.sorted.toSeq
@@ -2349,11 +2326,9 @@ object Dedup {
           count(lit(1)).over(Window.partitionBy(col("cluster"))))
         .select(col("doc_id"), col("cluster"), col("cluster_size"))
         .withColumn("cbucket", mapBucketCol(col("cluster")))
-      timed("rewrite-write") {
-        out.repartition(math.max(1, touched.size), col("cbucket"))
-          .write.mode("overwrite").partitionBy("cbucket").parquet(s"$mapPath.merge")
-      }
-      timed("rewrite-swap") { BucketSwap.swap(mapPath, "cbucket", touched) }
+      out.repartition(math.max(1, touched.size), col("cbucket"))
+        .write.mode("overwrite").partitionBy("cbucket").parquet(s"$mapPath.merge")
+      BucketSwap.swap(mapPath, "cbucket", touched)
     }
     BucketSwap.writeFrontier(mapPath, "_cluster_frontier", batchId, 0L)
     }

@@ -5,7 +5,7 @@ import graft.functions.PortableHash
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -479,28 +479,29 @@ object StreamingApply {
     stateBefore(spark, stateDir, Long.MaxValue, None, payloadCols, emptySchema)
       .filter(col("op") =!= "D")
 
-  /** [[applyBatch]] with dead-letter quarantine in front: each micro-batch
-    * of the WIDE envelope is classified ([[graft.cdc.DeadLetter]]), non-ok
-    * rows land under `dlqDir/v=<batchId>` (queryable, replayable after the
-    * fix), and only `ok` rows decode through the registry into the state
-    * delta — one malformed payload must never stall replication of the
-    * other 100 TB/day. The DLQ write is keyed by batchId like the state
-    * delta `d=<batchId>`, so a replayed micro-batch overwrites its own
-    * quarantine output: crash-restart stays idempotent on BOTH paths.
+  /** [[applyBatch]] with dead-letter quarantine in front: one parse of each
+    * WIDE payload feeds both its [[graft.cdc.DeadLetter]] disposition and
+    * the typed columns of the delta, which only `ok` rows reach — one
+    * malformed payload must never stall replication of the other
+    * 100 TB/day. Non-ok rows land under `dlqDir/v=<batchId>`, queryable and
+    * replayable, in a second job run only when the delta write counted one.
+    * Both writes overwrite under the batchId, so a replay rewrites both.
     */
   def applyBatchQuarantined(stateDir: String, dlqDir: String,
                             reg: graft.cdc.SchemaRegistry,
                             nBuckets: Int = defaultBuckets,
                             payloadCols: Seq[String] = defaultPayload)(
       batch: DataFrame, batchId: Long): Unit = {
-    val classified = graft.cdc.DeadLetter.classify(batch, reg).persist()
-    try {
-      val bad = classified.filter(col("disposition") =!= "ok")
-      if (!bad.isEmpty)
-        bad.write.mode("overwrite").parquet(s"$dlqDir/v=$batchId")
-      val ok = reg.decode(classified.filter(col("disposition") === "ok")
-        .drop("disposition"))
-      applyBatch(stateDir, nBuckets, payloadCols)(ok, batchId)
-    } finally classified.unpersist()
+    val classified = graft.cdc.DeadLetter.withDisposition(reg.parsed(batch), reg)
+    val deadLetters = Observation("dead_letters")
+    // The observe counts the dead letters during the delta write, and it is
+    // an optimizer barrier: without it the `ok` filter is pushed under the
+    // parse projection and from_json runs twice, in the Filter and the Project.
+    val ok = classified.observe(deadLetters, count(when(col("disposition") =!= "ok", 1)).as("n"))
+      .filter(col("disposition") === "ok").drop("disposition")
+    applyBatch(stateDir, nBuckets, payloadCols)(reg.decodeParsed(ok), batchId)
+    if (deadLetters.get("n").asInstanceOf[Long] > 0)
+      graft.cdc.DeadLetter.classify(batch, reg).filter(col("disposition") =!= "ok")
+        .write.mode("overwrite").parquet(s"$dlqDir/v=$batchId")
   }
 }

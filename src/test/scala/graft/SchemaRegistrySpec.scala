@@ -110,12 +110,13 @@ class SchemaRegistrySpec extends SparkSpec {
       ("t0", 2L, 20L, """{"event_ty"""),                // truncated json
       ("t9", 3L, 30L, """{"event_type":"click","k":1,"value":2.0}"""), // unknown tbl
       ("t1", 4L, 40L, null),                            // null payload
-      ("t1", 5L, 50L, """{}"""))                        // valid but empty → ok
+      ("t1", 5L, 50L, """{}"""),                        // valid but empty → ok
+      (null, 6L, 60L, """{"event_type":"click","k":1,"value":2.0}""")) // no tbl
       .toDF("tbl", "pk", "pos", "payload_json")
     val got = DeadLetter.classify(env, Normalizer.fixtureRegistry)
       .collect().map(r => r.getAs[Long]("pk") -> r.getAs[String]("disposition")).toMap
     assert(got == Map(1L -> "ok", 2L -> "unparseable", 3L -> "unregistered_table",
-      4L -> "null_payload", 5L -> "ok"))
+      4L -> "null_payload", 5L -> "ok", 6L -> "unregistered_table"))
     val stats = DeadLetter.stats(DeadLetter.classify(env, Normalizer.fixtureRegistry))
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(stats("t0") == ((2L, 1L)) && stats("t9") == ((1L, 0L)))

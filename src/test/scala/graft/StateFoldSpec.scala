@@ -3,7 +3,6 @@ package graft
 import graft.cdc.ChangelogApply
 import graft.model.ChangeEvent
 import graft.streaming.StreamingApply
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
@@ -12,8 +11,7 @@ import org.apache.spark.sql.streaming.Trigger
 import java.io.File
 import java.nio.file.Files
 import java.sql.Timestamp
-import java.util.Properties
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 
 /** The merge-on-read protocol of the LWW state store: explicit-schema
@@ -40,27 +38,6 @@ class StateFoldSpec extends SparkSpec {
   private def assertSetEqual(got: DataFrame, want: DataFrame, clue: String): Unit = {
     val (g, w) = (got.collect().toSeq, want.collect().toSeq)
     assert(g.size == w.size && g.toSet == w.toSet, clue)
-  }
-
-  /** Delivers every queued listener event (the bus is private[spark]). */
-  private def drainListenerBus(): Unit = {
-    val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
-    bus.getClass.getMethods
-      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-      .foreach(_.invoke(bus))
-  }
-
-  /** Properties of every job started while `body` runs. */
-  private def jobProperties(body: => Unit): Seq[Properties] = {
-    val seen = new ConcurrentLinkedQueue[Properties]()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        seen.add(Option(j.properties).getOrElse(new Properties())); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; drainListenerBus() } finally spark.sparkContext.removeSparkListener(l)
-    seen.asScala.toSeq
   }
 
   /** Waits until no fold thread of `stateDir` is alive, without consuming

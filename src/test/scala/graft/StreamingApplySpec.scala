@@ -146,7 +146,8 @@ class StreamingApplySpec extends SparkSpec {
       q.processAllAvailable()
       ms.addData(
         ("t0", 1L, "U", new Timestamp(4000), 4L, pay(11, 1.5)),
-        ("t0", 4L, "I", new Timestamp(5000), 5L, null))            // null payload
+        ("t0", 4L, "I", new Timestamp(5000), 5L, null),            // null payload
+        (null, 5L, "I", new Timestamp(6000), 6L, pay(50, 5.0)))    // no tbl
       q.processAllAvailable()
     } finally q.stop()
     // state holds only the decoded good rows; the latest ok update wins
@@ -158,7 +159,7 @@ class StreamingApplySpec extends SparkSpec {
     val dlq = spark.read.parquet(s"$dir/dlq/v=*")
       .collect().map(r => r.getAs[Long]("pk") -> r.getAs[String]("disposition")).toMap
     assert(dlq == Map(2L -> "unparseable", 3L -> "unregistered_table",
-      4L -> "null_payload"))
+      4L -> "null_payload", 5L -> "unregistered_table"))
   }
 
   /** Part files in every `v=<batch>/bucket=<b>` directory of a state store. */

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Benchmark main (driver contract): runs every [[SparkEntry.queries]]
@@ -20,12 +19,12 @@ import java.util.concurrent.atomic.AtomicInteger
   *    1900-byte budget (`queries_omitted` counts the rest, `full`
   *    points at the full file) so the tail still parses.
   *
-  * Spark job counts are recorded per query into the full JSON by
-  * DEFAULT (`jobs` = count from the run that produced the min time,
+  * Spark job counts are recorded per query into the full JSON
+  * (`jobs` = count from the run that produced the min time,
   * `jobs_runs` = per-run counts alongside `runs`) — at fixture scale
   * iterative queries are job-count dominated, so this is the first
-  * regression signal (the ProfileQ device, here for free each round;
-  * opt OUT with `SPARK_GRAFT_JOBLOG=0`).
+  * regression signal (the ProfileQ device, here for free each round).
+  * Session settings and teardown come from [[Harness]].
   */
 object Bench {
   /** (1-minute, 5-minute) loadavg, sampled now (0.0 if /proc is
@@ -70,7 +69,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Measurement-integrity guard (round-11 lesson: the driver's board ran
     // at loadavg 5.66 with run-pair spreads up to 2.3x, making every
     // cross-round per-query comparison worthless). The CLAUDE.md rule
@@ -88,17 +86,9 @@ object Bench {
          else "")
       System.err.println(banner); println(banner)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.cpus)
     val jobCount = new AtomicInteger(0)
-    val jobLog = !sys.env.get("SPARK_GRAFT_JOBLOG").contains("0")
-    if (jobLog) spark.sparkContext.addSparkListener(
+    spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
           jobCount.incrementAndGet(); ()
@@ -115,7 +105,7 @@ object Bench {
       try fn(spark, "/root/testdata/sf0.001").count()
       catch { case _: Throwable => () }
     }
-    ops.Caches.releaseCaches(); ops.Caches.releaseStreamingState(spark); spark.catalog.clearCache() // drop persists leaked by warmup queries
+    Harness.release(spark) // drop persists leaked by warmup queries
     val results = queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       // min of stable runs: steady-state per query, so first-run codegen/JIT and
       // GC debt inherited from earlier queries doesn't land on whichever
@@ -124,22 +114,15 @@ object Bench {
       // listener events are delivered on the async bus thread: drain it
       // before reading/zeroing the counter, or a late onJobStart from
       // this run undercounts here and bleeds into the next run's zero
-      def drainListenerBus(): Unit = if (jobLog) try {
-        val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-          .invoke(spark.sparkContext)
-        bus.getClass.getMethods
-          .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-          .foreach(_.invoke(bus))
-      } catch { case _: Throwable => () }
       def runOnce(): (Double, Int, Double) = {
         val l = load1()
-        drainListenerBus(); jobCount.set(0)
+        Harness.drainListenerBus(spark); jobCount.set(0)
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
         val t = (System.nanoTime() - t0) / 1e9
-        drainListenerBus()
+        Harness.drainListenerBus(spark)
         val j = jobCount.get()
-        ops.Caches.releaseCaches(); ops.Caches.releaseStreamingState(spark); spark.catalog.clearCache() // isolate queries: no cross-query cache reuse
+        Harness.release(spark) // isolate queries: no cross-query cache reuse
         System.gc() // pay GC debt HERE, not inside the next query's timing
         (t, j, l)
       }
@@ -175,7 +158,7 @@ object Bench {
       // capture BEFORE teardown, matching the per-query loop — cache
       // eviction is harness bookkeeping, not apply cost
       val t = (System.nanoTime() - t0) / 1e9
-      ops.Caches.releaseCaches(); ops.Caches.releaseStreamingState(spark); spark.catalog.clearCache()
+      Harness.release(spark)
       t
     }.min
     val eps = (nEvents / applySec).round
@@ -207,12 +190,11 @@ object Bench {
       "\"" + k + "\":[" + rs.map(fmt).mkString(",") + "]" }.mkString("{", ",", "}")
     val loadJson = results.map { case (k, _, _, _, _, l, _) =>
       "\"" + k + "\":" + fmt(l) }.mkString("{", ",", "}")
-    val jobsJson = if (jobLog) {
+    val jobsJson =
       results.map { case (k, _, _, j, _, _, _) =>
         "\"" + k + "\":" + j }.mkString(""","jobs":{""", ",", "}") +
       results.map { case (k, _, _, _, js, _, _) =>
         "\"" + k + "\":[" + js.mkString(",") + "]" }.mkString(""","jobs_runs":{""", ",", "}")
-    } else ""
     val fullLine =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${qmap(results.map(r => r._1 -> r._2))},""" +
       s"""$stamps,"runs":$runsJson,"load":$loadJson$jobsJson}"""

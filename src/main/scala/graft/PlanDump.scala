@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write `.explain("formatted")` of named SparkEntry queries
   * to files — the plan-evidence discipline (`plans/rNN/<query>_<tag>.txt`).
   *
@@ -19,15 +17,7 @@ object PlanDump {
     require(args.length >= 3, "usage: PlanDump <outDir> <tag> <query> [query...]")
     val outDir = args(0); val tag = args(1); val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
@@ -37,8 +27,7 @@ object PlanDump {
         java.nio.file.Paths.get(s"$outDir/${name}_$tag.txt"),
         s"-- $name ($tag), sf=$sfDir\n$txt")
       println(s"dumped $name")
-      ops.Caches.releaseCaches(); ops.Caches.releaseStreamingState(spark)
-      spark.catalog.clearCache()
+      Harness.release(spark)
     }
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev measurement main (round-12 directive #6): merge cost of the
@@ -21,19 +20,12 @@ import org.apache.spark.sql.functions._
   * equivalent delta work and the ratio isolates corpus-size dependence.
   *
   * Usage: `sbt 'runMain graft.PrefixScale'` — prints one JSON line;
-  * `scripts/prefix_scale.sh` merges it into scaling_curves.json.
+  * `scripts/prefix_scale.sh` merges it into scaling_curves.json. Cores
+  * and session settings come from [[Harness]].
   */
 object PrefixScale {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.cpus)
 
     def docsOf(sf: String) = spark.read
       .parquet(s"/root/testdata/sf$sf/documents.parquet")
@@ -60,7 +52,7 @@ object PrefixScale {
 
     def minOf2(body: => Unit): Double = {
       val runs = (1 to 2).map { _ =>
-        ops.Caches.releaseCaches(); spark.catalog.clearCache(); System.gc()
+        Harness.release(spark); System.gc()
         val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
       }
       System.err.println(s"  runs: ${runs.map(r => f"$r%.2f").mkString(", ")}")
@@ -103,7 +95,7 @@ object PrefixScale {
           batchVec, 10, 4, 0L)
         ()
       }
-      ops.Caches.releaseCaches(); ops.Caches.releaseStreamingState(spark)
+      Harness.release(spark)
     }
     def fmt(d: Double) = BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     def ratio(fam: String) = fmt(out(s"${fam}_10x") / out(s"${fam}_1x"))

@@ -1,8 +1,8 @@
 package graft
 
 /** Dev profiling main (not part of the library surface): times named
-  * [[SparkEntry.queries]] at a given sfDir with the Bench harness's
-  * session settings, counting jobs/stages per run and printing the
+  * [[SparkEntry.queries]] at a given sfDir in the [[Harness]] session
+  * Bench uses, counting jobs/stages per run and printing the
   * per-job wall times with their call sites. This is the feedback loop
   * behind the round-9 iterative-op work — at fixture scale those
   * queries are JOB-COUNT dominated, so the first question is always
@@ -11,7 +11,6 @@ package graft
   *
   * Usage: `sbt 'runMain graft.ProfileQ <sfDir> <query> [query...]'`
   */
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerJobEnd, SparkListenerStageCompleted}
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -19,15 +18,7 @@ object ProfileQ {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("graph_modularity")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.cpus)
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -53,14 +44,14 @@ object ProfileQ {
     })
     // warmup at sf0.001
     names.foreach { n => try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count() catch { case _: Throwable => () } }
-    ops.Caches.releaseCaches(); ops.Caches.releaseStreamingState(spark); spark.catalog.clearCache(); System.gc()
+    Harness.release(spark); System.gc()
     names.foreach { n =>
       val dts = (1 to 2).map { _ =>
         jobs.set(0); stages.set(0); lines.clear()
         val t0 = System.nanoTime()
         SparkEntry.queries(n)(spark, sfDir).count()
         val dt = (System.nanoTime() - t0) / 1e9
-        ops.Caches.releaseCaches(); ops.Caches.releaseStreamingState(spark); spark.catalog.clearCache(); System.gc()
+        Harness.release(spark); System.gc()
         dt
       }
       println(f"== $n: ${dts.min}%6.2f s (runs: ${dts.map(d => f"$d%.2f").mkString(", ")}), jobs=${jobs.get}, stages=${stages.get} (last run)")

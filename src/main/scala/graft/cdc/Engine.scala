@@ -59,17 +59,9 @@ object Engine {
     val full = normalize(spark.read.parquet(changelogDir))
 
     // SNAPSHOT: base state as of low (bulk copy under REPEATABLE_READ in
-    // the reference; here the changelog prefix)
-    val snap = ChangelogApply.materializeEnvelope(full.filter(col("pos") < low), payloadCols)
-    snap.write.mode("overwrite").parquet(s"$workDir/snapshot")
-
-    // CATCHUP: bounded [low, high) replay merged over the snapshot
-    require(validTransition(Snapshot, Catchup))
-    val catchup = Watermark.catchupRange(full, low, high)
-    val caught = StreamingApply.mergeState(
-      spark.read.parquet(s"$workDir/snapshot"), catchup, payloadCols)
-    // seed the bucketed state store at version -1 (pre-stream)
-    StreamingApply.writeVersion(caught, s"$workDir/state", -1L, payloadCols = payloadCols)
+    // the reference; here the changelog prefix); CATCHUP: [low, high)
+    seed(full.filter(col("pos") < low), Watermark.catchupRange(full, low, high),
+      workDir, payloadCols)
 
     // STREAMING: everything >= high as micro-batches over the state
     require(validTransition(Catchup, Streaming))
@@ -79,6 +71,21 @@ object Engine {
       StreamingApply.applyBatch(s"$workDir/state", payloadCols = payloadCols) _)
 
     RunResult(low, high, s"$workDir/state")
+  }
+
+  /** SNAPSHOT then CATCHUP: write the LWW state of `snapshot` rows to
+    * `workDir/snapshot`, merge the `catchup` rows over it (overlap is
+    * absorbed by the idempotent LWW merge), and seed the bucketed state
+    * store at version -1 (pre-stream).
+    */
+  private def seed(snapshot: DataFrame, catchup: DataFrame, workDir: String,
+                   payloadCols: Seq[String]): Unit = {
+    ChangelogApply.materializeEnvelope(snapshot, payloadCols)
+      .write.mode("overwrite").parquet(s"$workDir/snapshot")
+    require(validTransition(Snapshot, Catchup))
+    val caught = StreamingApply.mergeState(
+      snapshot.sparkSession.read.parquet(s"$workDir/snapshot"), catchup, payloadCols)
+    StreamingApply.writeVersion(caught, s"$workDir/state", -1L, payloadCols = payloadCols)
   }
 
   /** User-facing current state after/between phases. */
@@ -118,15 +125,9 @@ object Engine {
       bounds._1, math.max(bounds._1 + 1, bounds._2), numPartitions,
       new java.util.Properties())
 
-    val snap = ChangelogApply.materializeEnvelope(
-      decode(live.filter(col(posCol) < low)), payloadCols)
-    snap.write.mode("overwrite").parquet(s"$workDir/snapshot")
-
-    require(validTransition(Snapshot, Catchup))
-    val catchup = decode(live.filter(col(posCol) >= low && col(posCol) < high))
-    val caught = StreamingApply.mergeState(
-      spark.read.parquet(s"$workDir/snapshot"), catchup, payloadCols)
-    StreamingApply.writeVersion(caught, s"$workDir/state", -1L, payloadCols = payloadCols)
+    // the position filters sit below `decode` so they push down to JDBC
+    seed(decode(live.filter(col(posCol) < low)),
+      decode(live.filter(col(posCol) >= low && col(posCol) < high)), workDir, payloadCols)
 
     require(validTransition(Catchup, Streaming))
     val stream = spark.readStream.format("graft-jdbc-cdc")

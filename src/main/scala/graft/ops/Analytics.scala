@@ -700,25 +700,6 @@ object Analytics {
       |FROM events e JOIN first f ON e.user_id = f.user_id
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  /** Exact interpolated percentiles per event type — the P50/P95/P99
-    * latency shape of the reference's metrics (BASELINE.md) as a data
-    * aggregation. Spark `percentile` and DuckDB `quantile_cont` share the
-    * linear-interpolation definition; results rounded to 4 dp.
-    *
-    * NOTE: `percentile`'s aggregation buffer holds every group value —
-    * O(|group|) reducer memory at corpus scale. This form is the
-    * fixture-scale audit; [[Sketches.valueQuantileSketch]] is the bounded
-    * (histogram-partial) scale path.
-    */
-  def valuePercentiles(events: DataFrame): DataFrame =
-    events.groupBy(col("event_type"))
-      .agg(
-        round(expr("percentile(value, 0.5)"), 4).as("p50"),
-        round(expr("percentile(value, 0.95)"), 4).as("p95"),
-        round(expr("percentile(value, 0.99)"), 4).as("p99"),
-        count(lit(1)).as("n"))
-      .orderBy("event_type")
-
   val valuePercentilesSql: String =
     """SELECT event_type,
       |  round(quantile_cont(value, 0.5), 4) AS p50,

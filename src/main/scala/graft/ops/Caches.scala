@@ -11,7 +11,7 @@ import org.apache.spark.sql.DataFrame
   * yet — so eviction is the caller's job. One session-level convention
   * keeps that from leaking in long-lived drivers: every op registers its
   * persists here, and the caller runs [[releaseCaches]] after consuming
-  * results (Bench/Verify's per-query `clearCache()` subsumes the
+  * results ([[graft.Harness.release]]'s `clearCache()` subsumes the
   * unpersist but not the reference cleanup).
   */
 object Caches {
@@ -53,8 +53,8 @@ object Caches {
     * forever) and memory-sink temp views. Measured effect: with five
     * other streaming queries' providers resident, events_hourly_stream
     * read 12.0 s; in a clean JVM, 2.6 s — the residue, not the query,
-    * was the cost. Bench/Verify/ProfileQ call this with releaseCaches
-    * between queries; a terminated AvailableNow query never needs its
+    * was the cost. Every main calls this through
+    * [[graft.Harness.release]] between queries; a terminated AvailableNow query never needs its
     * providers again (a restarted one reloads from the checkpoint).
     */
   def releaseStreamingState(spark: org.apache.spark.sql.SparkSession): Unit = {

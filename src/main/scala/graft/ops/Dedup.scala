@@ -443,37 +443,12 @@ object Dedup {
     * relation, not a partition: A≈B and B≈C chain into {A,B,C} even when
     * A and C never collided in any band, and the keep-one-per-group
     * decision needs the whole component (canonical survivor = min id).
-    *
-    * Algorithm: iterative min-label propagation (each node starts as its
-    * own label; every round each node takes the min of its own and its
-    * neighbors' labels). Converges in O(component diameter) rounds — for
-    * near-dup graphs the components are small dense clusters, so a
-    * handful of rounds; each round is one keyed join + partial-agg min,
-    * no global structure. Rounds are RELIABLY checkpointed (durable
-    * storage via the context checkpoint dir) on a fixed cadence
-    * ([[RoundCheckpointInterval]]), persisted in between: iterative
-    * plans otherwise re-derive all prior rounds on each action, and
-    * executor-memory checkpoints (`localCheckpoint`) would lose round
-    * state on executor failure — restarting a long CC job from zero.
-    * The oracle computes the same fixpoint as a recursive
-    * min-reachability CTE.
+    * See [[connectedComponents]] for the algorithm; the oracle computes
+    * the same fixpoint as a recursive min-reachability CTE.
     */
   def nearDupClusters(docs: DataFrame, threshold: Double): DataFrame =
     connectedComponents(minhashLsh(docs, threshold).select(col("doc_a"), col("doc_b")))
 
-  /** Connected components over an undirected pair relation
-    * (doc_a, doc_b) → (doc_id, cluster, cluster_size), cluster = min
-    * member id. See [[nearDupClusters]] for the algorithm and scale notes.
-    *
-    * Convergence bound: min-label propagation with the neighbor-min seed
-    * reaches the fixpoint in at most `diameter` rounds (+1 confirming
-    * round), and diameter < |V| always — so the loop terminates on any
-    * graph. `maxRounds` (default 64, i.e. diameter-64 chains) is a
-    * circuit-breaker for jobs whose components are pathologically
-    * chain-shaped; raise it per-call rather than letting a mis-specified
-    * edge relation spin — near-dup graphs are small dense clusters whose
-    * diameter is single-digit.
-    */
   /** Reliable (durable-storage) checkpoints truncate lineage AND survive
     * executor loss; on a real cluster point the checkpoint dir at the
     * job's DFS scratch path before calling (this default serves local runs).
@@ -494,12 +469,13 @@ object Dedup {
     ck
   }
 
-  /** Durable checkpoint every Nth CC round; in between, rounds only
-    * persist. The interval is a recovery-time trade, not a correctness
-    * one: a cache-evicted or executor-lost persist-only round replays at
-    * most `interval − 1` rounds from the last durable checkpoint, while
-    * the checkpoint write+read-back I/O (the dominant constant factor of
-    * the iterative loops at small scale) is paid 1/interval as often.
+  /** Durable checkpoint every Nth [[connectedComponents]] round; in
+    * between, rounds only persist. The interval is a recovery-time trade,
+    * not a correctness one: a cache-evicted or executor-lost persist-only
+    * round replays at most `interval − 1` rounds from the last durable
+    * checkpoint, while the checkpoint write+read-back I/O (the dominant
+    * constant factor of the star loop at small scale) is paid 1/interval
+    * as often.
     * Plan growth stays bounded the same way — lineage chains back at
     * most `interval` rounds before hitting a checkpointed scan.
     */
@@ -541,78 +517,20 @@ object Dedup {
     * contract ("one cluster build feeds every rider"). */
   private[graft] val ccBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  def connectedComponents(pairs: DataFrame, maxRounds: Int = 64): DataFrame = {
-    ccBuilds.incrementAndGet()
-    ensureCheckpointDir(pairs)
-    // the edge count rides the checkpoint materialization as an OBSERVED
-    // metric; it sizes the round shuffle width below (scale-adaptive:
-    // tiny graphs stop paying session-width task scheduling per round,
-    // big graphs run unscoped — guide §2)
-    val eObs = new Caches.Observed(pairs
-      .unionAll(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .toDF("src", "dst"), count(lit(1)).as("n"))
-    val edges = durable(eObs.df) // pair generation runs once; rounds reuse the edge list
-    val spark = pairs.sparkSession
-    val labelsOut =
-      Caches.withShuffleWidth(spark, Caches.roundWidth(spark, eObs.row.getLong(0))) {
-    // seed each node with min(self, direct neighbors) — the same shuffle
-    // as the plain distinct-nodes init, but it fuses the first propagation
-    // round: diameter-1 components (the bulk of near-dup graphs — pairs
-    // and stars) converge immediately and pay only the confirming round
-    var labels = edges.groupBy(col("src")).agg(min(col("dst")).as("nbr"))
-      .select(col("src").as("id"), least(col("src"), col("nbr")).as("label"))
-    var converged = false
-    var rounds = 0
-    val cadence = new RoundDurability
-    while (!converged && rounds < maxRounds) {
-      val nbrMin = edges.join(labels, col("src") === col("id"))
-        .groupBy(col("dst")).agg(min(col("label")).as("nbr_min"))
-      // convergence detection rides the round's materialization job as an
-      // observed metric — the standalone "did anything change" pass would
-      // re-scan the round output (an extra job locally, an extra full
-      // pass over |V| rows per round on a cluster)
-      val obs = org.apache.spark.sql.Observation()
-      val next = cadence.round(labels.join(nbrMin, col("id") === col("dst"), "left")
-        .select(col("id"), col("label").as("old"),
-          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-        .observe(obs, count(when(col("label") < col("old"), 1)).as("n_changed")))
-      // the metric event is posted by the checkpoint job but delivered on
-      // an async listener bus — a bounded wait covers the delivery gap;
-      // the explicit emptiness check remains as the timeout fallback
-      converged = scala.util.Try(scala.concurrent.Await.result(
-          obs.future, scala.concurrent.duration.Duration(30, "seconds"))) match {
-        case scala.util.Success(row) => row.getAs[Long]("n_changed") == 0L
-        case _ => next.filter(col("label") < col("old")).isEmpty
-      }
-      labels = next.select(col("id"), col("label"))
-      rounds += 1
-    }
-    cadence.finish()
-    require(converged,
-      s"label propagation hit the maxRounds=$maxRounds circuit-breaker " +
-        s"(components with diameter > $maxRounds; raise maxRounds)")
-    labels
-    }
-    val sizes = labelsOut.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
-    labelsOut.join(sizes, "label")
-      .select(col("id").as("doc_id"), col("label").as("cluster"), col("cluster_size"))
-      .orderBy("doc_id")
-  }
-
-  /** Connected components by alternating large-star / small-star rounds
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — the scale path for HIGH-DIAMETER graphs, where min-label
-    * propagation's O(diameter) rounds would dominate. Each round halves
-    * long chains (O(log² n) rounds worst-case, O(log n) in practice), so a
-    * pathological chain-of-near-dups component that would take
-    * [[connectedComponents]] hundreds of keyed joins collapses in ~a dozen.
+  /** Connected components of an undirected pair relation (its first two
+    * columns) → (doc_id, cluster = min member id, cluster_size), by
+    * alternating large-star / small-star rounds (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC'14). Each round
+    * halves long chains (O(log² n) rounds worst-case, O(log n) in
+    * practice), so a chain-of-near-dups component collapses in about a
+    * dozen rounds where label propagation would pay one keyed join per
+    * unit of diameter.
     *
     * Both phases are a single groupBy-min plus a join per round — no
     * global structure, partial aggregation does the min map-side — and
-    * rounds checkpoint on the same durable cadence as the min-label
-    * variant ([[RoundCheckpointInterval]]). The
-    * edge set can only shrink or re-point (never grows beyond 2|E|), so
-    * per-round cost is bounded by the input edge count.
+    * rounds checkpoint on a durable cadence ([[RoundCheckpointInterval]]).
+    * The edge set can only shrink or re-point (never grows beyond 2|E|),
+    * so per-round cost is bounded by the input edge count.
     *
     *   - large-star: every node u attaches each strictly-LARGER neighbor
     *     to m = min(Γ(u) ∪ u) — long chains fold toward their minimum.
@@ -622,12 +540,11 @@ object Dedup {
     *
     * Fixpoint = the edge set is round-invariant, at which point the graph
     * is a union of stars centered at component minima; labels read off the
-    * star centers. Same output contract as [[connectedComponents]]
-    * (doc_id, cluster = min member id, cluster_size) — the two are
-    * interchangeable, checked against the same oracle.
+    * star centers. `maxRounds` is a circuit-breaker against a
+    * mis-specified edge relation.
     */
-  def connectedComponentsStars(pairs: DataFrame, maxRounds: Int = 32): DataFrame =
-    connectedComponentsStarsWithRounds(pairs, maxRounds)._1
+  def connectedComponents(pairs: DataFrame, maxRounds: Int = 32): DataFrame =
+    connectedComponentsWithRounds(pairs, maxRounds)._1
 
   /** Rounds during which the star loop runs its structural fixpoint
     * check unconditionally (shallow graphs — the near-dup case — detect
@@ -635,9 +552,9 @@ object Dedup {
     * the check behind the free per-round signature. */
   private val StarEarlyCheckRounds = 2
 
-  /** [[connectedComponentsStars]] exposing the round count the loop took —
+  /** [[connectedComponents]] exposing the round count the loop took —
     * the number the O(log n) claim is specced against. */
-  def connectedComponentsStarsWithRounds(
+  private[graft] def connectedComponentsWithRounds(
       pairs: DataFrame, maxRounds: Int = 32): (DataFrame, Int) = {
     ccBuilds.incrementAndGet()
     ensureCheckpointDir(pairs)
@@ -756,11 +673,6 @@ object Dedup {
     (out, rounds)
   }
 
-  /** [[nearDupClusters]] with the star-contraction component algorithm —
-    * identical result (same oracle), diameter-robust round bound. */
-  def nearDupClustersStars(docs: DataFrame, threshold: Double): DataFrame =
-    connectedComponentsStars(minhashLsh(docs, threshold).select(col("doc_a"), col("doc_b")))
-
   /** Shared oracle CTE chain: LSH pairs → recursive min-reachability →
     * components + sizes (consumed by [[nearDupClustersSql]] and
     * [[canonicalDocsSql]]). */
@@ -821,14 +733,11 @@ object Dedup {
     * Each rider query remains able to build clusters from scratch
     * (bench isolation stays honest — see the delegating overloads).
     *
-    * The builder is the star-contraction variant: interchangeable output
-    * with [[nearDupClusters]] (same oracle, specced equal), diameter-
-    * robust at scale, and faster per build since its structural fixpoint
-    * test needs no confirming round. Min-label propagation remains as
-    * `dedup_clusters`' own query.
+    * The builder is [[nearDupClusters]] itself: the riders and
+    * `dedup_clusters` share one components loop and one oracle.
     */
   def clustersFor(corpus: DataFrame, threshold: Double): DataFrame =
-    Caches.tracked(nearDupClustersStars(corpus, threshold).persist())
+    Caches.tracked(nearDupClusters(corpus, threshold).persist())
 
   /** [[canonicalDocs]] over a precomputed cluster frame ([[clustersFor]]). */
   def canonicalDocsFrom(corpus: DataFrame, clustersIn: DataFrame): DataFrame = {
@@ -2377,7 +2286,7 @@ object Dedup {
     val corpus = nearDupCorpus(docs.select(col("doc_id"), col("text")))
     writeLshIndex(corpus.filter(col("doc_id") < 1000000L), idx)
     writeClusterMap(
-      nearDupClustersStars(corpus.filter(col("doc_id") < 1000000L), threshold), map)
+      nearDupClusters(corpus.filter(col("doc_id") < 1000000L), threshold), map)
     (idx, map)
   }
 
@@ -2939,8 +2848,8 @@ object Dedup {
     * structurally zero here, and the column is the PROOF (computed from
     * the assignment, not asserted).
     *
-    * Scale shape: clustering as [[nearDupClusters]] (keyed label
-    * propagation); the split decision is a pure hash projection on the
+    * Scale shape: clustering as [[nearDupClusters]] (star-contraction
+    * components); the split decision is a pure hash projection on the
     * cluster id; the audit is one aggregate per cluster then one per
     * split. Adding corpus requires no re-split of old clusters — the
     * hash is content-independent and stable.

@@ -2323,13 +2323,13 @@ object Similarity {
     * n-grams. Thresholding the kNN graph instead of all pairs is the
     * standard scale approximation (degree ≤ k by construction, so the
     * edge set is |corpus|·k-bounded and CC components cannot blow up
-    * through hub vectors); the CC itself is the star-contraction loop
-    * shared with the MinHash clusters ([[graft.ops.Dedup]]'s
-    * durable-checkpoint cadence). Only clustered vectors appear
+    * through hub vectors); the CC itself is
+    * [[graft.ops.Dedup.connectedComponents]], the loop the MinHash
+    * clusters run. Only clustered vectors appear
     * (unclustered = implicit singletons), mirroring `dedup_clusters`.
     */
   def semanticClustersFrom(knn: DataFrame, threshold: Double): DataFrame =
-    Dedup.connectedComponentsStars(
+    Dedup.connectedComponents(
         knn.filter(col("cosine") >= threshold)
           .select(least(col("anchor_id"), col("neighbor_id")).as("doc_a"),
             greatest(col("anchor_id"), col("neighbor_id")).as("doc_b"))

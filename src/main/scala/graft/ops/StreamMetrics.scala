@@ -20,7 +20,6 @@ final class StreamMetricsListener extends StreamingQueryListener {
                              durationMs: Long, watermark: String)
 
   private val stats = new ConcurrentLinkedQueue[BatchStat]()
-  @volatile private var terminated: Option[String] = None
 
   override def onQueryStarted(event: QueryStartedEvent): Unit = ()
 
@@ -34,8 +33,7 @@ final class StreamMetricsListener extends StreamingQueryListener {
     while (stats.size() > 256) stats.poll()
   }
 
-  override def onQueryTerminated(event: QueryTerminatedEvent): Unit =
-    terminated = Some(event.exception.getOrElse("clean"))
+  override def onQueryTerminated(event: QueryTerminatedEvent): Unit = ()
 
   def batches: Seq[BatchStat] = stats.asScala.toSeq
 
@@ -70,6 +68,4 @@ final class StreamMetricsListener extends StreamingQueryListener {
       lagMillis = batches.lastOption.map(_.durationMs).getOrElse(0L),
       errorRate = errorRate,
       queueUtilization = queueUtilization)
-
-  def isTerminatedCleanly: Option[Boolean] = terminated.map(_ == "clean")
 }

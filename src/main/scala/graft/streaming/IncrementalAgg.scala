@@ -42,12 +42,4 @@ object IncrementalAgg {
         .select(col("tbl"), col("d_count").as("n_rows"), col("d_sum").as("sum_value")))
       .groupBy(col("tbl"))
       .agg(sum(col("n_rows")).as("n_rows"), sum(col("sum_value")).as("sum_value"))
-
-  /** Ground-truth formulation for verification: aggregate the full
-    * materialized state.
-    */
-  def fromState(state: DataFrame): DataFrame =
-    state.filter(col("op") =!= "D")
-      .groupBy(col("tbl"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("value")).as("sum_value"))
 }

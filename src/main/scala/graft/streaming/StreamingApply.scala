@@ -425,30 +425,29 @@ object StreamingApply {
           .write.partitionBy("bucket")
           .mode("overwrite").parquet(s"$stateDir/v=$batchId")
         // compact from the same listing: each touched bucket now holds
-        // {v=batchId} ∪ old versions, so keeping `keepVersions`=2 total
-        // means keeping the single newest PRE-batch version per bucket
+        // {v=batchId} ∪ old versions, so keeping [[keepVersions]] total
+        // means keeping keepVersions − 1 PRE-batch versions per bucket
         // (replay entries at v=batchId were just overwritten, never old)
         dropSuperseded(spark, stateDir,
           bases.filter { case (v, bkt, _) => v < batchId && touched(bkt) },
-          keepPerBucket = 1)
+          keepPerBucket = keepVersions - 1)
       }
     } finally { b.unpersist(); () }
   }
 
-  /** Drop superseded bucket versions, keeping the newest `keepVersions`
-    * per bucket (≥ 2 so a crash-replay of the latest batch still finds
-    * its predecessor). `buckets` scopes the sweep (None = all) — the
-    * incremental path compacts only what it touched. Empty v= dirs are
+  /** Versions kept per bucket: the latest and its predecessor, which a
+    * crash-replay of the latest batch reads.
+    */
+  private val keepVersions = 2
+
+  /** Drop superseded versions of `buckets` (the ones a batch touched),
+    * keeping the newest [[keepVersions]] per bucket. Empty v= dirs are
     * removed once drained.
     */
-  def compact(spark: SparkSession, stateDir: String, keepVersions: Int = 2,
-              buckets: Option[Set[Int]] = None): Unit = {
-    require(keepVersions >= 2, "replay of the latest batch needs its predecessor")
+  def compact(spark: SparkSession, stateDir: String, buckets: Set[Int]): Unit =
     dropSuperseded(spark, stateDir,
-      listing(spark, stateDir).bases
-        .filter { case (_, b, _) => buckets.forall(_.contains(b)) },
+      listing(spark, stateDir).bases.filter { case (_, b, _) => buckets(b) },
       keepPerBucket = keepVersions)
-  }
 
   /** Delete all but the newest `keepPerBucket` versions per bucket in
     * `candidates` (an already-filtered listing — no re-walk), then drain

@@ -98,7 +98,7 @@ object StreamingEnrich {
             .map(col): _*)
           .write.partitionBy("bucket")
           .mode("overwrite").parquet(s"$outDir/v=$batchId")
-        StreamingApply.compact(spark, outDir, buckets = Some(touched))
+        StreamingApply.compact(spark, outDir, touched)
       }
     } finally { b.unpersist(); () }
   }

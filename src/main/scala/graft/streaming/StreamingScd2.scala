@@ -45,22 +45,10 @@ object StreamingScd2 {
   /** Rebuild intervals over (prior events ⊎ batch) per key. Delete rows
     * stay in the state as interval-closing tombstones (their own interval
     * columns are null/false).
-    */
-  def merge(prev: DataFrame, batch: DataFrame): DataFrame = {
-    val ev = Seq("tbl", "pk", "op", "ts", "pos", "value")
-    val events = prev.select(ev.map(col): _*)
-      .unionByName(batch.select(ev.map(col): _*))
-      .dropDuplicates("tbl", "pk", "pos")
-    val nextPos = lead(col("pos"), 1).over(
-      Window.partitionBy(col("tbl"), col("pk")).orderBy(col("pos")))
-    events
-      .withColumn("valid_to_pos", when(col("op") =!= "D", nextPos))
-      .withColumn("is_current", col("op") =!= "D" && nextPos.isNull)
-  }
-
-  /** [[merge]] under the bucket-aware apply contract
-    * ([[StreamingApply.applyBatchWith]]): one exchange on bucket, then
-    * the dedup aggregate and the interval window both run bucket-local —
+    *
+    * Bucket-aware apply contract ([[StreamingApply.applyBatchWith]]): one
+    * exchange on bucket, then the dedup aggregate and the interval window
+    * both run bucket-local —
     * their (bucket, tbl, pk)-prefixed keys are satisfied by the
     * hash(bucket) partitioning, so Catalyst adds no further exchange.
     */

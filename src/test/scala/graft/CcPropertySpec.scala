@@ -5,26 +5,25 @@ import graft.ops.Dedup
 /** Property sweep for the star-contraction components' STRUCTURAL
   * fixpoint test (round 9: "no node is both a center and a member"
   * decided on the round output, replacing the confirming round).
-  * Star-contraction and min-label propagation must produce identical
-  * (doc_id, cluster, cluster_size) frames on every graph shape — the
-  * deterministic-seed sweep covers mixtures of chains, cliques, stars,
-  * duplicate and reversed edges, and graphs denser than anything the
-  * LSH pair generator emits.
+  * [[Dedup.connectedComponents]] must produce the same
+  * (doc_id, cluster, cluster_size) rows as a sequential union-find over
+  * the collected edge list on every graph shape — the deterministic-seed
+  * sweep covers mixtures of chains, cliques, stars, duplicate and
+  * reversed edges, and graphs denser than anything the LSH pair
+  * generator emits.
   */
 class CcPropertySpec extends SparkSpec {
 
   import spark.implicits._
+  import CcPropertySpec.unionFind
 
   private def compare(edges: Seq[(Long, Long)], tag: String): Unit = {
-    val pairs = edges.toDF("doc_a", "doc_b")
-    val byStars = Dedup.connectedComponentsStars(pairs)
+    val got = Dedup.connectedComponents(edges.toDF("doc_a", "doc_b"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val byLabels = Dedup.connectedComponents(pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(byStars == byLabels, s"[$tag] star vs min-label diverged")
+    assert(got == unionFind(edges), s"[$tag] star loop vs union-find diverged")
   }
 
-  test("random-graph sweep: star fixpoint equals min-label on 12 seeded graphs") {
+  test("random-graph sweep: star fixpoint equals union-find on 12 seeded graphs") {
     // xorshift-ish deterministic generator; density and node-id spread
     // vary per seed so components range from singleton pairs to one
     // giant blob with internal chains
@@ -48,7 +47,7 @@ class CcPropertySpec extends SparkSpec {
     // device this spec pins against regression
     val pairs = ((1L to 8L).map(i => (0L, i)) ++ Seq((20L, 21L), (20L, 22L)))
       .toDF("doc_a", "doc_b")
-    val (out, rounds) = Dedup.connectedComponentsStarsWithRounds(pairs)
+    val (out, rounds) = Dedup.connectedComponentsWithRounds(pairs)
     assert(rounds == 1, s"star-set input should converge in 1 round, took $rounds")
     assert(out.collect().length == 12)
   }
@@ -59,7 +58,7 @@ class CcPropertySpec extends SparkSpec {
     // centers; the fixpoint test must also require each b exactly once,
     // else the loop splits one component of 5 into two clusters of 3
     val pairs = Seq((1L, 4L), (3L, 4L), (3L, 5L), (2L, 5L)).toDF("doc_a", "doc_b")
-    val (out, rounds) = Dedup.connectedComponentsStarsWithRounds(pairs)
+    val (out, rounds) = Dedup.connectedComponentsWithRounds(pairs)
     val rows = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(rows == (1L to 5L).map(i => (i, 1L, 5L)),
       s"expected one component of 5 centered at 1, got $rows (rounds=$rounds)")
@@ -67,8 +66,9 @@ class CcPropertySpec extends SparkSpec {
   }
 
   test("adversarial shapes: chains, bridged cliques, dup/reversed edges, empty") {
-    // worst case for min-label (min at the far end of a long chain),
-    // easy case it must not break for stars
+    // a long chain with its min at the far end (the deep case the
+    // signature-gated fixpoint check serves), and the star shapes that
+    // must converge at once
     compare((0L until 40L).map(i => (i + 1, i)), "chain-41-reversed")
     // two cliques bridged by one edge + duplicate and reversed copies
     val k1 = for (a <- 0L until 6L; b <- 0L until 6L if a < b) yield (a, b)
@@ -78,5 +78,27 @@ class CcPropertySpec extends SparkSpec {
     compare((1L to 12L).map(i => (i, 0L)), "star-reversed-spokes")
     compare(Seq.empty[(Long, Long)], "empty")
     compare(Seq((7L, 3L)), "single-edge")
+  }
+}
+
+object CcPropertySpec {
+  /** Reference components: sequential union-find over the edge list, the
+    * root of each set kept at its minimum. Self-loops carry no edge, so a
+    * node seen only in one is absent, as in the Spark loop's output.
+    * Returns (doc_id, cluster = min member, cluster_size) sorted by doc_id.
+    */
+  def unionFind(edges: Seq[(Long, Long)]): Seq[(Long, Long, Long)] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.filter { case (a, b) => a != b }.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val root = parent.keys.map(x => x -> find(x)).toMap
+    val size = root.values.groupBy(identity).map { case (r, m) => r -> m.size.toLong }
+    root.toSeq.sorted.map { case (x, r) => (x, r, size(r)) }
   }
 }

@@ -39,7 +39,7 @@ class ClusterMaintPropertySpec extends SparkSpec {
       val cut = next(n).toLong // originals split point; 0 = empty prefix
       Dedup.writeLshIndex(corpus.filter(col("doc_id") < cut), s"$root/index")
       Dedup.writeClusterMap(
-        Dedup.nearDupClustersStars(corpus.filter(col("doc_id") < cut), 0.5),
+        Dedup.nearDupClusters(corpus.filter(col("doc_id") < cut), 0.5),
         s"$root/map")
       val batches = Seq(
         corpus.filter(col("doc_id") >= cut && col("doc_id") < 1000000L),
@@ -52,7 +52,7 @@ class ClusterMaintPropertySpec extends SparkSpec {
       val got = spark.read.parquet(s"$root/map")
         .select(col("doc_id"), col("cluster"), col("cluster_size"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val want = Dedup.nearDupClustersStars(corpus, 0.5)
+      val want = Dedup.nearDupClusters(corpus, 0.5)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(got == want,
         s"[seed=$seed n=$n cut=$cut] incremental diverged: " +
@@ -105,7 +105,7 @@ class ClusterMaintPropertySpec extends SparkSpec {
     val root = graft.Scratch.dir("cm-jobs")
     Dedup.writeLshIndex(corpus.filter(col("doc_id") < 8), s"$root/index")
     Dedup.writeClusterMap(
-      Dedup.nearDupClustersStars(corpus.filter(col("doc_id") < 8), 0.5), s"$root/map")
+      Dedup.nearDupClusters(corpus.filter(col("doc_id") < 8), 0.5), s"$root/map")
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -116,12 +116,7 @@ class ClusterMaintPropertySpec extends SparkSpec {
     try {
       Dedup.maintainClusterMap(spark, s"$root/index", s"$root/map",
         corpus.filter(col("doc_id") >= 8), 0.5, 0L)
-      // listenerBus is private[spark]: drain via reflection (Bench's device)
-      val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-        .invoke(spark.sparkContext)
-      bus.getClass.getMethods
-        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-        .foreach(_.invoke(bus))
+      drainListenerBus()
     } finally spark.sparkContext.removeSparkListener(l)
     assert(jobs.get() <= 12,
       s"one cluster-map merge launched ${jobs.get()} jobs — the job diet " +

@@ -87,47 +87,36 @@ class DedupSpec extends SparkSpec {
 
   test("connected components: diameter-10 chain converges (reverse-ordered ids)") {
     import spark.implicits._
-    // a single chain 10-9-8-…-0 written worst-case for min propagation
-    // (the min label sits at one END of the chain, so it must travel the
-    // full diameter) + checkpointed rounds survive the whole walk
+    // a single chain 10-9-8-…-0 with the min at one END, so the rounds
+    // must carry it the full diameter + checkpointed rounds (every 3rd
+    // round is durable) survive the whole walk
     val pairs = (0L until 10L).map(i => (i + 1, i)).toDF("doc_a", "doc_b")
     val got = Dedup.connectedComponents(pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == (0L to 10L).map(i => (i, 0L, 11L)))
   }
 
-  test("star-contraction components: same result as min-label on chains + stars") {
-    import spark.implicits._
-    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("doc_a", "doc_b")
-    val got = Dedup.connectedComponentsStars(pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(got == Seq((1L, 1L, 3L), (2L, 1L, 3L), (3L, 1L, 3L), (5L, 5L, 2L), (6L, 5L, 2L)))
-  }
-
   test("star-contraction components: chain-64 converges in O(log n) rounds") {
     import spark.implicits._
-    // one 65-node chain with the min at the far end — min-label propagation
-    // needs 64 rounds here; star contraction must collapse it in ~log n
+    // one 65-node chain with the min at the far end — label propagation
+    // would need 64 rounds here; star contraction must collapse it in ~log n
     val pairs = (0L until 64L).map(i => (i + 1, i)).toDF("doc_a", "doc_b")
-    val (out, rounds) = Dedup.connectedComponentsStarsWithRounds(pairs, maxRounds = 16)
+    val (out, rounds) = Dedup.connectedComponentsWithRounds(pairs, maxRounds = 16)
     val got = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == (0L to 64L).map(i => (i, 0L, 65L)))
     assert(rounds <= 12, s"expected ~log(65) star rounds, took $rounds")
   }
 
-  test("star-contraction components: random graph agrees with min-label result") {
+  test("star-contraction components: random graph agrees with union-find result") {
     import spark.implicits._
     // deterministic pseudo-random edge soup: mixes chains, stars, singleton pairs
     val edges = (0 until 80).map { i =>
       val a = (i * 37 + 11) % 50; val b = (i * 53 + 29) % 50
       (a.toLong, b.toLong)
     }.filter { case (a, b) => a != b }
-    val pairs = edges.toDF("doc_a", "doc_b")
-    val byStars = Dedup.connectedComponentsStars(pairs)
+    val got = Dedup.connectedComponents(edges.toDF("doc_a", "doc_b"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val byLabels = Dedup.connectedComponents(pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(byStars == byLabels)
+    assert(got == CcPropertySpec.unionFind(edges))
   }
 
   test("canonical pick: longest cluster member survives, singletons self-canonical") {
@@ -560,7 +549,7 @@ class DedupSpec extends SparkSpec {
     val idx = s"$root/index"; val map = s"$root/map"
     Dedup.writeLshIndex(full.filter(col("doc_id") < 1000000L), idx)
     Dedup.writeClusterMap(
-      Dedup.nearDupClustersStars(full.filter(col("doc_id") < 1000000L), 0.5), map)
+      Dedup.nearDupClusters(full.filter(col("doc_id") < 1000000L), 0.5), map)
     def snap(): Set[(Long, Long, Long)] = spark.read.parquet(map)
       .select(col("doc_id"), col("cluster"), col("cluster_size"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -573,7 +562,7 @@ class DedupSpec extends SparkSpec {
 
     // incremental == from-scratch rebuild (the oracle relation, pinned
     // here on the hand corpus too)
-    val rebuild = Dedup.nearDupClustersStars(full, 0.5)
+    val rebuild = Dedup.nearDupClusters(full, 0.5)
       .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster"),
         r.getAs[Long]("cluster_size"))).toSet
     assert(merged == rebuild, s"incremental diverged: ${merged.diff(rebuild)} | ${rebuild.diff(merged)}")

@@ -21,7 +21,7 @@ class PartitionInvarianceSpec extends SparkSpec {
     "emb_cluster_profile",   // decimal mean + struct-min tie-break
     "cdc_gtid_frontier",     // island coalescing + string fold
     "emb_kmeans_refine",     // decimal dimension means + ordered rebuild
-    "dedup_clusters",        // iterative min-label propagation fixpoint
+    "dedup_clusters",        // iterative star-contraction fixpoint
     "events_anomaly",        // decimal moments + division-free sigma test
     "events_rolling_avg",    // decimal RANGE-window sums
     "ann_pq_adc",            // fixed-order ADC sum, rounded before rank

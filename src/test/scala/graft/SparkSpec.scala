@@ -9,29 +9,17 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 /** Shared local SparkSession for all specs (one JVM-wide session — specs
-  * run in a single forked JVM, so getOrCreate dedups).
+  * run in a single forked JVM, so getOrCreate dedups). Four cores
+  * whatever `SPARK_GRAFT_CPUS` says, so specs that count tasks or
+  * partitions see the same width on every machine.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session(4)
 
   def sqlc = spark.sqlContext
 
-  spark.sparkContext.setLogLevel("WARN")
-
-  /** Delivers every queued listener event (the bus is private[spark]). */
-  def drainListenerBus(): Unit = {
-    val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
-    bus.getClass.getMethods
-      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-      .foreach(_.invoke(bus))
-  }
+  /** Delivers every queued listener event. */
+  def drainListenerBus(): Unit = Harness.drainListenerBus(spark)
 
   /** Properties of every job started while `body` runs. */
   def jobProperties(body: => Unit): Seq[Properties] = {

@@ -53,7 +53,7 @@ class StreamClustersSpec extends SparkSpec {
     writeChunk(corpus.filter(col("doc_id") >= 1000002L), chunks, "chunk_1")
     // run 2 (RESTART, same checkpoint): processes only the new file
     Dedup.streamingClusterIngest(spark, chunks, schema, idx, map, 0.5, s"$root/ckpt")
-    val want = Dedup.nearDupClustersStars(corpus, 0.5)
+    val want = Dedup.nearDupClusters(corpus, 0.5)
       .collect().map(_.toSeq).toSet
     val got = spark.read.parquet(map)
       .select(col("doc_id"), col("cluster"), col("cluster_size"))

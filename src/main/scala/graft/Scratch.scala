@@ -16,13 +16,7 @@ object Scratch {
   private lazy val installHook: Unit = {
     hookInstalls.incrementAndGet()
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      created.forEach { p =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(); ()
-        }
-        rm(p.toFile)
-      }
+      created.forEach(p => ops.BucketSwap.rmTree(p.toFile))
     }))
   }
 
@@ -72,13 +66,7 @@ object Scratch {
     val cutoff = System.currentTimeMillis() - ageMs
     Option(root.toFile.listFiles()).getOrElse(Array.empty).toSeq
       .filter(f => f.lastModified() < cutoff)
-      .map { f =>
-        def rm(x: java.io.File): Unit = {
-          Option(x.listFiles()).foreach(_.foreach(rm))
-          x.delete(); ()
-        }
-        rm(f); f.getName
-      }
+      .map { f => ops.BucketSwap.rmTree(f); f.getName }
   }
 
   private lazy val base: java.nio.file.Path = {

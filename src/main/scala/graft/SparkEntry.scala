@@ -1563,7 +1563,7 @@ object SparkEntry {
       val schema = chunkSchema(s, chunks)
       Dedup.streamingNovelty(s, chunks, schema,
         s"$tmp/index", s"$tmp/out", s"$tmp/ckpt", 0.5)
-      s.read.parquet(s"$tmp/out").orderBy("doc_id")
+      s.read.parquet(s"$tmp/out").select("doc_id", "novel", "dup_of").orderBy("doc_id")
     }),
 
     // Post-maintenance index integrity: after a streaming-novelty run

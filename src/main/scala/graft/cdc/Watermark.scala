@@ -44,16 +44,9 @@ object Watermark {
     */
   final case class SnapshotWatermarks(low: Long, high: Long, createdAtMs: Long)
 
-  def persistWatermarks(dir: String, w: SnapshotWatermarks): Unit = {
-    val p = java.nio.file.Paths.get(dir, "watermarks.json")
-    val tmp = java.nio.file.Paths.get(dir, ".watermarks.json.tmp")
-    java.nio.file.Files.createDirectories(p.getParent)
-    java.nio.file.Files.writeString(tmp,
+  def persistWatermarks(dir: String, w: SnapshotWatermarks): Unit =
+    graft.ops.BucketSwap.writeAtomically(java.nio.file.Paths.get(dir, "watermarks.json"),
       s"""{"low": ${w.low}, "high": ${w.high}, "createdAtMs": ${w.createdAtMs}}""")
-    java.nio.file.Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
 
   def loadWatermarks(dir: String): Option[SnapshotWatermarks] = {
     val p = java.nio.file.Paths.get(dir, "watermarks.json")

@@ -1,48 +1,44 @@
 package graft.ops
 
-/** Crash-safe per-bucket directory swap for partitioned parquet
-  * artifacts maintained in place — the device behind the LSH-index
-  * compaction, the cluster map and the kNN graph: rewrite only touched
-  * `part=N` dirs into a sibling `.merge` tree, then per bucket move the
-  * live dir ASIDE (outside the artifact path, so partition discovery
-  * never sees it), move the rewrite in, and delete the aside LAST. A
-  * crash at any step leaves either the old or the new bucket intact on
+/** The one crash-safe mutation protocol for the partitioned parquet
+  * artifacts maintained in place — the LSH index, the cluster map and
+  * both kNN graphs. Two steps, each written once here:
+  *
+  *  - [[appendInOrder]], the guarded id-ordered append: skip a replayed
+  *    batch id, require the batch's ids to follow everything already
+  *    ingested, append, then advance the target's ingest frontier;
+  *  - [[commit]] / [[rewrite]], the rewrite transaction: recover, absorb
+  *    a batch id at or below the artifact's frontier, rewrite ONLY the
+  *    touched `part=N` dirs into the sibling staging tree [[staging]],
+  *    then per bucket move the live dir ASIDE (outside the artifact path,
+  *    so partition discovery never sees it), move the rewrite in, delete
+  *    the aside LAST, and advance the frontier after the swap.
+  *
+  * A crash at any step leaves either the old or the new bucket intact on
   * disk (never neither); [[recover]] heals on the next entry, and the
-  * caller's unadvanced frontier makes the interrupted batch replay.
+  * unadvanced frontier makes the interrupted batch replay.
   */
 private[graft] object BucketSwap {
+
+  private val IngestFrontier = "_ingest_frontier"
+
+  /** The staging tree a rewrite of `path` writes into. */
+  private def staging(path: String): String = s"$path.merge"
+  private def aside(path: String): String = s"${staging(path)}.aside"
 
   def rmTree(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
   }
 
-  /** Recursive copy (prefix artifacts are copied per maintenance
-    * exercise — maintenance mutates them). */
-  def copyTree(src: String, dst: String): Unit = {
-    val s0 = java.nio.file.Paths.get(src)
-    val d0 = java.nio.file.Paths.get(dst)
-    java.nio.file.Files.walk(s0).forEach { q =>
-      val t = d0.resolve(s0.relativize(q))
-      if (java.nio.file.Files.isDirectory(q)) java.nio.file.Files.createDirectories(t)
-      else {
-        java.nio.file.Files.createDirectories(t.getParent)
-        java.nio.file.Files.copy(q, t,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        ()
-      }
-    }
-    ()
-  }
-
   /** Hardlink tree: the near-free way to give a maintenance exercise its
-    * own mutable view of a prefix artifact (round-12 directive: the
-    * copyTree in the timed body dominated the maintenance boards at
+    * own mutable view of a prefix artifact (round-12 directive: a byte
+    * copy in the timed body dominated the maintenance boards at
     * fixture scale). SAFE because maintenance never writes a data file
     * in place — parquet writes create new files, [[swap]] moves/deletes
-    * directory ENTRIES, and [[writeFrontier]] goes through a fresh
-    * `.tmp` + ATOMIC_MOVE — so unlinking or replacing a link never
-    * touches the prefix's inodes. Falls back to a byte copy per file if
-    * the filesystem refuses the link (cross-device, no-hardlink fs). */
+    * directory ENTRIES, and frontiers go through [[writeAtomically]]'s
+    * fresh temp file — so unlinking or replacing a link never touches
+    * the prefix's inodes. Falls back to a byte copy per file if the
+    * filesystem refuses the link (cross-device, no-hardlink fs). */
   def linkTree(src: String, dst: String): Unit = {
     val s0 = java.nio.file.Paths.get(src)
     val d0 = java.nio.file.Paths.get(dst)
@@ -65,17 +61,17 @@ private[graft] object BucketSwap {
 
   /** Heal an artifact left by a swap interrupted mid-flight:
     *  - live bucket MISSING, aside present → restore the aside copy
-    *    (pre-merge data, still complete; the batch replays);
+    *    (pre-rewrite data, still complete; the batch replays);
     *  - live present AND aside present → the swap committed, drop the
     *    aside;
-    *  - a stale `.merge` rewrite tree → dead, drop it.
+    *  - a stale staging tree → dead, drop it.
     * Returns restored bucket ids. No-crash cost: two existence checks.
     */
   def recover(path: String, partCol: String): Seq[Int] = {
-    val aside = new java.io.File(s"$path.merge.aside")
+    val asideDir = new java.io.File(aside(path))
     val restored = scala.collection.mutable.ListBuffer[Int]()
-    if (aside.exists()) {
-      Option(aside.listFiles()).getOrElse(Array.empty).toSeq
+    if (asideDir.exists()) {
+      Option(asideDir.listFiles()).getOrElse(Array.empty).toSeq
         .filter(d => d.isDirectory && d.getName.startsWith(s"$partCol=")).foreach { d =>
           val live = new java.io.File(s"$path/${d.getName}")
           if (!live.exists()) {
@@ -83,31 +79,89 @@ private[graft] object BucketSwap {
             restored += d.getName.stripPrefix(s"$partCol=").toInt
           }
         }
-      rmTree(aside)
+      rmTree(asideDir)
     }
-    rmTree(new java.io.File(s"$path.merge"))
+    rmTree(new java.io.File(staging(path)))
     restored.toSeq.sorted
   }
 
-  /** Swap `buckets` of the `.merge` rewrite tree into the live artifact
-    * (see class doc for the crash-ordering argument). A bucket with no
+  /** Swap `buckets` of the staging tree into the live artifact (see the
+    * object doc for the crash-ordering argument). A bucket with no
     * rewrite dir is DRAINED: its live dir is removed. */
-  def swap(path: String, partCol: String, buckets: Seq[Int]): Unit = {
-    val tmp = s"$path.merge"
+  private def swap(path: String, partCol: String, buckets: Seq[Int]): Unit = {
     buckets.foreach { b =>
       val dst = java.nio.file.Paths.get(s"$path/$partCol=$b")
-      val asideB = java.nio.file.Paths.get(s"$tmp.aside/$partCol=$b")
+      val asideB = java.nio.file.Paths.get(s"${aside(path)}/$partCol=$b")
       java.nio.file.Files.createDirectories(asideB.getParent)
       if (java.nio.file.Files.exists(dst)) java.nio.file.Files.move(dst, asideB)
-      val src = java.nio.file.Paths.get(s"$tmp/$partCol=$b")
+      val src = java.nio.file.Paths.get(s"${staging(path)}/$partCol=$b")
       if (java.nio.file.Files.exists(src)) java.nio.file.Files.move(src, dst)
     }
-    rmTree(new java.io.File(s"$tmp.aside"))
-    rmTree(new java.io.File(tmp))
+    rmTree(new java.io.File(aside(path)))
+    rmTree(new java.io.File(staging(path)))
   }
 
-  /** Read `$path/$name` as "batchId,maxId", or the given defaults. */
-  def readFrontier(path: String, name: String): (Long, Long) = {
+  /** Rewrite part of an artifact outside any batch (compaction):
+    * recover, then [[stageAndSwap]]. Returns the swapped bucket ids. */
+  def rewrite(path: String, partCol: String)(stage: String => Seq[Int]): Seq[Int] = {
+    recover(path, partCol)
+    stageAndSwap(path, partCol, stage)
+  }
+
+  /** The rewrite transaction of one ingest batch, in order: recover;
+    * absorb a `batchId` at or below the artifact's `frontier` file
+    * (false, zero work); [[stageAndSwap]]; advance the frontier to
+    * `batchId` LAST, so a crash anywhere before it replays the batch
+    * over a healed artifact. Returns true when the batch merged. */
+  def commit(path: String, partCol: String, frontier: String, batchId: Long)(
+      stage: String => Seq[Int]): Boolean = {
+    recover(path, partCol)
+    if (batchId <= readFrontier(path, frontier)._1) false
+    else {
+      stageAndSwap(path, partCol, stage)
+      writeFrontier(path, frontier, batchId, 0L)
+      true
+    }
+  }
+
+  /** `stage` writes the buckets it rewrites into the staging tree it is
+    * handed and returns their ids; those buckets are swapped in. */
+  private def stageAndSwap(path: String, partCol: String,
+                           stage: String => Seq[Int]): Seq[Int] = {
+    val touched = stage(staging(path))
+    if (touched.nonEmpty) swap(path, partCol, touched)
+    touched
+  }
+
+  /** The guarded id-ordered append. `ids` is the batch's (min, max) id,
+    * null on an empty batch. A batch id at or below the target's ingest
+    * frontier is a replay whose rows are already in: skipped. A new
+    * batch must start above every id already ingested — the incremental
+    * merges key "earlier ingested" to "smaller id", so an out-of-order
+    * batch fails loudly instead of silently merging wrong — then
+    * `append` runs and the frontier advances. */
+  def appendInOrder(path: String, batchId: Long, ids: => org.apache.spark.sql.Row,
+                    idCol: String)(append: => Unit): Unit = {
+    val (last, maxId) = readFrontier(path, IngestFrontier)
+    lazy val range = ids
+    if (batchId > last && !range.isNullAt(0)) {
+      require(range.getLong(0) > maxId,
+        s"ingestion-order contract broken: batch $batchId min $idCol " +
+          s"${range.getLong(0)} <= already-ingested max $maxId in $path — incremental " +
+          s"maintenance assumes $idCol-ordered ingestion; re-ingest " +
+          "out-of-order data through a full rebuild instead")
+      append
+      writeFrontier(path, IngestFrontier, batchId, math.max(maxId, range.getLong(1)))
+    }
+  }
+
+  /** Stamp a freshly built target as holding every id up to `maxId`, so
+    * [[appendInOrder]] accepts only later ids. */
+  def markIngested(path: String, maxId: Long): Unit =
+    writeFrontier(path, IngestFrontier, -1L, maxId)
+
+  /** Read `$path/$name` as "batchId,maxId"; (-1, Long.MinValue) when absent. */
+  private def readFrontier(path: String, name: String): (Long, Long) = {
     val f = java.nio.file.Paths.get(s"$path/$name")
     if (java.nio.file.Files.exists(f)) {
       val parts = java.nio.file.Files.readString(f).trim.split(",")
@@ -115,13 +169,19 @@ private[graft] object BucketSwap {
     } else (-1L, Long.MinValue)
   }
 
-  /** Advance `$path/$name` to "batchId,maxId" via tmp + ATOMIC_MOVE
-    * (the watermark-persist device; underscore-prefixed names are
-    * invisible to parquet file listing). */
-  def writeFrontier(path: String, name: String, batchId: Long, maxId: Long): Unit = {
-    val tmpF = java.nio.file.Paths.get(s"$path/$name.tmp")
-    java.nio.file.Files.writeString(tmpF, s"$batchId,$maxId")
-    java.nio.file.Files.move(tmpF, java.nio.file.Paths.get(s"$path/$name"),
+  /** Advance `$path/$name` to "batchId,maxId" (underscore-prefixed names
+    * are invisible to parquet file listing). */
+  private def writeFrontier(path: String, name: String, batchId: Long, maxId: Long): Unit =
+    writeAtomically(java.nio.file.Paths.get(s"$path/$name"), s"$batchId,$maxId")
+
+  /** Replace `file` with `content` through a sibling temp file and an
+    * atomic rename: a reader sees the old or the new content, never a
+    * torn write. */
+  def writeAtomically(file: java.nio.file.Path, content: String): Unit = {
+    val tmp = file.resolveSibling(s".${file.getFileName}.tmp")
+    java.nio.file.Files.createDirectories(file.getParent)
+    java.nio.file.Files.writeString(tmp, content)
+    java.nio.file.Files.move(tmp, file,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     ()

@@ -1595,90 +1595,39 @@ object Dedup {
     * directory listing becomes the probe bottleneck within days at a
     * seconds-cadence ingest. Only over-threshold buckets are rewritten
     * (cold buckets are never touched), so the pass costs one scan of the
-    * hot buckets' signatures, not the index. Returns the
-    * (bucket, filesBefore) pairs it compacted.
+    * hot buckets' signatures, not the index. Returns the bucket ids it
+    * compacted.
     *
-    * The rewrite goes through a sibling temp dir and a per-bucket
-    * directory swap rather than a dynamic-partition overwrite: the
-    * source and destination are the same path, which Spark's insert
-    * path (rightly) refuses. On a real deployment this swap is the
-    * transactional commit a table format (Iceberg/Delta rewrite-files)
-    * provides; the device — rewrite only over-threshold buckets, swap
-    * atomically per bucket, readers keep a consistent view — is the same.
+    * The rewrite goes through [[BucketSwap.rewrite]] — a staging tree
+    * and a per-bucket directory swap — rather than a dynamic-partition
+    * overwrite: the source and destination are the same path, which
+    * Spark's insert path (rightly) refuses. On a real deployment this
+    * swap is the transactional commit a table format (Iceberg/Delta
+    * rewrite-files) provides; the device — rewrite only over-threshold
+    * buckets, swap per bucket, readers keep a consistent view — is the
+    * same. An interrupted compaction heals on the next
+    * [[BucketSwap.recover]] without replaying committed batches.
     */
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-  }
-
-  /** Heal an index left by a compaction interrupted mid-swap. The swap
-    * ordering in [[compactLshIndex]] guarantees every crash point leaves
-    * a recoverable state; this is the recovery:
-    *   - live bucket dir MISSING but its aside copy present (crash
-    *     between move-aside and move-in): restore the aside copy — the
-    *     pre-compaction data, still complete; the compaction simply
-    *     re-runs on the next maintenance cycle;
-    *   - live present and aside too (crash before the aside delete):
-    *     the live dir already holds the compacted data — drop the aside;
-    *   - a stale rewrite temp dir (crash mid-write): drop it.
-    * Returns the bucket ids whose live dirs were restored. A no-crash
-    * call costs two existence checks.
-    */
-  def recoverLshIndex(path: String): Seq[Int] = {
-    val aside = new java.io.File(s"$path.compact.aside")
-    val restored = scala.collection.mutable.ListBuffer[Int]()
-    if (aside.exists()) {
-      Option(aside.listFiles()).getOrElse(Array.empty).toSeq
-        .filter(d => d.isDirectory && d.getName.startsWith("bucket=")).foreach { d =>
-          val live = new java.io.File(s"$path/${d.getName}")
-          if (!live.exists()) {
-            java.nio.file.Files.move(d.toPath, live.toPath)
-            restored += d.getName.stripPrefix("bucket=").toInt
-          }
-        }
-      rmTree(aside)
-    }
-    rmTree(new java.io.File(s"$path.compact"))
-    restored.toSeq.sorted
-  }
-
   def compactLshIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                      maxFilesPerBucket: Int): Seq[(Int, Int)] = {
+                      maxFilesPerBucket: Int): Seq[Int] = {
     require(maxFilesPerBucket >= 1, s"maxFilesPerBucket must be >= 1: $maxFilesPerBucket")
-    recoverLshIndex(path) // self-heal any interrupted previous swap first
-    val over = lshIndexFileCounts(path).filter(_._2 > maxFilesPerBucket).toSeq.sorted
-    if (over.nonEmpty) {
-      val tmp = path + ".compact"
-      val buckets = over.map(_._1)
-      spark.read.parquet(path)
-        .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*))
-        // one partition per bucket → exactly one data file per bucket dir
-        .repartition(buckets.size, col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-      buckets.foreach { b =>
-        // Crash-safe ordering: rename the live bucket ASIDE (outside the
-        // index path, so partition discovery never sees it), move the
-        // compacted dir into place, delete the aside copy LAST — a
-        // failure at any step leaves either the old or the new bucket
-        // intact on disk (never neither), so an interrupted compaction
-        // is recoverable without replaying already-committed batches.
-        val dst = java.nio.file.Paths.get(s"$path/bucket=$b")
-        val old = java.nio.file.Paths.get(s"$tmp.aside/bucket=$b")
-        java.nio.file.Files.createDirectories(old.getParent)
-        java.nio.file.Files.move(dst, old)
-        java.nio.file.Files.move(java.nio.file.Paths.get(s"$tmp/bucket=$b"), dst)
-        rmTree(old.toFile)
-      }
-      rmTree(new java.io.File(s"$tmp.aside"))
-      rmTree(new java.io.File(tmp))
+    BucketSwap.rewrite(path, "bucket") { staging =>
+      val over = lshIndexFileCounts(path).filter(_._2 > maxFilesPerBucket).keys.toSeq.sorted
+      if (over.nonEmpty)
+        spark.read.parquet(path)
+          .filter(col("bucket").isin(over.map(Integer.valueOf): _*))
+          // one partition per bucket → exactly one data file per bucket dir
+          .repartition(over.size, col("bucket"))
+          .write.mode("overwrite").partitionBy("bucket").parquet(staging)
+      over
     }
-    over
   }
 
   /** Streaming first-occurrence novelty filter — continuous dedup as a
-    * real stream: each micro-batch of documents is checked against the
-    * PERSISTED bucket-partitioned signature index (all previously
-    * ingested docs) and against its own earlier rows, then every batch
-    * row's band signatures are APPENDED to the index — the stateful
+    * real stream: every micro-batch row's band signatures are APPENDED
+    * to the PERSISTED bucket-partitioned signature index, and the batch
+    * is checked against it (all previously ingested docs and its own
+    * earlier rows) — the stateful
     * composition of [[writeLshIndex]]/[[lshIndexProbe]] with the
     * micro-batch loop. A document is a duplicate when any
     * earlier-ingested document shares an LSH band and the 16-perm
@@ -1704,141 +1653,103 @@ object Dedup {
                        threshold: Double, compactEvery: Int = 2,
                        maxFilesPerBucket: Int = 2): Unit = {
     val stream = Bounded.readChunks(spark, chunks, schema).select(col("doc_id"), col("text"))
-    Bounded.foreachBatch(stream, checkpoint, Bounded.OnePerFile(chunks)) { (batch, batchId) =>
-        val s = batch.sparkSession
-        def phase(p: String): Unit =
-          s.sparkContext.setJobDescription(s"novelty b$batchId $p")
-        phase("build")
-        // batch-sized shuffle width: a micro-batch is a few thousand
-        // rows — the session's cluster-sized shuffle width would cut it
-        // into ~100-row tasks whose scheduling overhead dominates every
-        // one of the batch's small jobs. Scoped to the batch body
-        // (foreachBatch bodies run sequentially).
-        Caches.withBatchShuffleWidth(s) {
-        // one-file micro-batches arrive as ONE partition; the shingle
-        // explode behind minhashSignatures would run single-threaded
-        // without this spread
-        val docs = batch.repartition(s.sparkContext.defaultParallelism).persist()
-        // EAGER localCheckpoint, not persist: the band frame feeds FOUR
-        // consumers per batch (hit-bucket collect, probe join build,
-        // novelty output, index append), and persist does not cut the
-        // LOGICAL plan — each consumer re-analyzed the whole
-        // minhash/shingle lineage (the round-9 planning-gap lesson;
-        // measured here as ~17 jobs/batch of mostly plan time). The
-        // frame is batch-bounded and fixed-shape, the localCheckpoint
-        // eligibility rule; a lost executor fails the batch and
-        // foreachBatch replays it (at-least-once), which the ingest
-        // frontier below absorbs. The batch's min/max doc_id (frontier
-        // guard) and hit-bucket set ride the SAME checkpoint job as
-        // OBSERVED metrics — they were two extra jobs per micro-batch.
-        val dObs = new Caches.Observed(docs,
-          min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
-        val bObs = new Caches.Observed(
-          lshBandRows(minhashSignatures(dObs.df))
-            .withColumn("bucket",
-              pmod(PortableHash.tokenHash(col("bh")), lit(indexBuckets)).cast("int")),
-          collect_set(col("bucket")).as("hit"))
-        val bandsB = bObs.df.localCheckpoint()
-        val eq = (0 until 16).map(i =>
-          when(col(s"x.s$i") === col(s"y.s$i"), 1).otherwise(0): Column).reduce(_ + _)
-        // heal any swap a previous run's crash left half-done BEFORE
-        // probing — otherwise the probe silently misses the moved-aside
-        // bucket until the next maintenance cycle (no-crash cost: two
-        // existence checks)
-        recoverLshIndex(indexPath)
-        // The fused earlier-candidate probe keys "earlier ingested" to
-        // "smaller doc_id" (the x.doc_id < y.doc_id predicate below), so
-        // correctness DEPENDS on batches arriving in doc-id order. Assert
-        // that contract per batch instead of trusting it: the index
-        // carries its ingest frontier (max doc_id, stamped batch id) in a
-        // metadata file, and a NEW batch whose min doc_id does not exceed
-        // the frontier fails loudly rather than silently flipping
-        // duplicates to novel. A REPLAY of the stamped batch (foreachBatch
-        // is at-least-once: crash between index append and checkpoint
-        // commit) legitimately overlaps the frontier, so same-or-older
-        // batch ids skip the check.
-        val frontierFile = java.nio.file.Paths.get(s"$indexPath/_ingest_frontier")
-        val (recBatch, recMax) =
-          if (java.nio.file.Files.exists(frontierFile)) {
-            val parts = java.nio.file.Files.readString(frontierFile).trim.split(",")
-            (parts(0).toLong, parts(1).toLong)
-          } else (-1L, Long.MinValue)
-        val stats = dObs.row
-        val batchEmpty = stats.isNullAt(0)
-        if (!batchEmpty && batchId > recBatch)
-          require(stats.getLong(0) > recMax,
-            s"ingestion-order contract broken: batch $batchId min doc_id " +
-              s"${stats.getLong(0)} <= already-indexed max $recMax — the fused " +
-              "earlier-candidate probe assumes doc-id-ordered ingestion; " +
-              "re-ingest out-of-order data through a full rebuild instead")
-        // ONE probe join covers both the vs-index and the intra-batch
-        // comparison: ingestion order means "earlier" ≡ "smaller doc_id"
-        // on BOTH sides (the batch contract this op documents), so the
-        // index rows (bucket-pruned to the batch's buckets) and the
-        // batch's own band rows union into a single "earlier-candidate"
-        // side and one broadcast of the batch decides everything — half
-        // the joins/broadcast builds per micro-batch of the former
-        // two-join + union shape, same pairs by construction (same-bh
-        // rows share a bucket, so the bucket equality is a no-op on the
-        // intra part).
-        val probeCols = col("doc_id") +: col("band") +: col("bh") +: col("bucket") +:
-          (0 until nBands * rowsPerBand).map(i => col(s"s$i"))
-        val earlierSide: DataFrame =
-          if (new java.io.File(indexPath).exists()) {
-            val hit = bObs.row.getSeq[Int](0)
-            phase("probe+out")
-            s.read.parquet(indexPath)
-              .filter(col("bucket").isin(hit.map(Integer.valueOf): _*))
-              .select(probeCols: _*)
-              .unionByName(bandsB.select(probeCols: _*))
-          } else bandsB.select(probeCols: _*)
-        val dupOf = earlierSide.as("x")
-          .join(broadcast(bandsB.as("y")),
-            col("x.bucket") === col("y.bucket") && col("x.band") === col("y.band") &&
-              col("x.bh") === col("y.bh") && col("x.doc_id") < col("y.doc_id"))
-          .filter(eq / lit(16.0) >= threshold)
-          .select(col("y.doc_id").as("id"), col("x.doc_id").as("earlier"))
-          .groupBy(col("id")).agg(min(col("earlier")).as("dup_of"))
-        // batch-sized output: collapse to one task/file per micro-batch
-        // (32 shuffle-width files of a 12k-row frame are pure overhead)
-        docs.select(col("doc_id"))
-          .join(dupOf, col("doc_id") === col("id"), "left")
-          .select(col("doc_id"), col("dup_of").isNull.as("novel"), col("dup_of"))
-          .coalesce(1)
-          .write.mode("append").parquet(outPath)
-        phase("append")
-        // consolidate before the append: partitionBy from 32 task
-        // partitions would scatter up to 32x16 sliver files per batch —
-        // one shuffle to bucket-aligned partitions writes one file per
-        // bucket per batch (the writeLshIndex layout), keeping the
-        // index's file count linear in batches, not tasks x buckets
+    Bounded.foreachBatch(stream, checkpoint, Bounded.OnePerFile(chunks))(
+      noveltyBatch(indexPath, outPath, threshold, compactEvery, maxFilesPerBucket))
+    ()
+  }
+
+  /** One [[streamingNovelty]] micro-batch, replay-safe (foreachBatch is
+    * at-least-once): the index append goes through
+    * [[BucketSwap.appendInOrder]], so a replayed batch id appends
+    * nothing, and the batch's verdicts overwrite `outPath/v=<batchId>`,
+    * so a replay rewrites its own output instead of adding to it. */
+  def noveltyBatch(indexPath: String, outPath: String, threshold: Double,
+                   compactEvery: Int, maxFilesPerBucket: Int)(
+      batch: DataFrame, batchId: Long): Unit = {
+    val s = batch.sparkSession
+    def phase(p: String): Unit =
+      s.sparkContext.setJobDescription(s"novelty b$batchId $p")
+    phase("build")
+    // batch-sized shuffle width: a micro-batch is a few thousand
+    // rows — the session's cluster-sized shuffle width would cut it
+    // into ~100-row tasks whose scheduling overhead dominates every
+    // one of the batch's small jobs. Scoped to the batch body
+    // (foreachBatch bodies run sequentially).
+    Caches.withBatchShuffleWidth(s) {
+      // one-file micro-batches arrive as ONE partition; the shingle
+      // explode behind minhashSignatures would run single-threaded
+      // without this spread
+      val docs = batch.repartition(s.sparkContext.defaultParallelism).persist()
+      // EAGER localCheckpoint, not persist: the band frame feeds the
+      // hit-bucket collect, the index append and the probe join, and
+      // persist does not cut the LOGICAL plan — each consumer
+      // re-analyzed the whole minhash/shingle lineage (the round-9
+      // planning-gap lesson). The frame is batch-bounded and
+      // fixed-shape, the localCheckpoint eligibility rule; a lost
+      // executor fails the batch and foreachBatch replays it. The
+      // batch's min/max doc_id (append guard) and hit-bucket set ride
+      // the SAME checkpoint job as OBSERVED metrics.
+      val dObs = new Caches.Observed(docs,
+        min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
+      val bObs = new Caches.Observed(
+        lshBandRows(minhashSignatures(dObs.df))
+          .withColumn("bucket",
+            pmod(PortableHash.tokenHash(col("bh")), lit(indexBuckets)).cast("int")),
+        collect_set(col("bucket")).as("hit"))
+      val bandsB = bObs.df.localCheckpoint()
+      val eq = (0 until 16).map(i =>
+        when(col(s"x.s$i") === col(s"y.s$i"), 1).otherwise(0): Column).reduce(_ + _)
+      // heal any swap a previous run's crash left half-done BEFORE the
+      // append and the probe — otherwise the probe silently misses the
+      // moved-aside bucket until the next maintenance cycle
+      BucketSwap.recover(indexPath, "bucket")
+      // The probe below keys "earlier ingested" to "smaller doc_id" (the
+      // x.doc_id < y.doc_id predicate), so correctness DEPENDS on batches
+      // arriving in doc-id order: the guarded append checks that contract
+      // before anything is written. It runs FIRST so the index then holds
+      // the batch's own band rows too, and ONE probe join against it
+      // covers both the vs-index and the intra-batch comparison.
+      // Partitioned by bucket from one shuffle: one file per bucket per
+      // batch (the writeLshIndex layout), not tasks x buckets slivers.
+      phase("append")
+      BucketSwap.appendInOrder(indexPath, batchId, dObs.row, "doc_id") {
         bandsB.repartition(indexBuckets, col("bucket"))
           .write.mode("append").partitionBy("bucket").parquet(indexPath)
-        // advance the ingest frontier AFTER the append (tmp + ATOMIC_MOVE,
-        // the watermark-persist device): a crash between append and this
-        // write leaves the old frontier, and the replayed batch id skips
-        // the order check above. Underscore-prefixed = invisible to the
-        // parquet reader's file index.
-        if (!batchEmpty) {
-          val tmpF = java.nio.file.Paths.get(s"$indexPath/_ingest_frontier.tmp")
-          java.nio.file.Files.writeString(tmpF,
-            s"$batchId,${math.max(recMax, stats.getLong(1))}")
-          java.nio.file.Files.move(tmpF, frontierFile,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        }
-        docs.unpersist() // bandsB's checkpoint blocks are GC-reclaimed (ContextCleaner)
-        // maintenance rider: bound the index's per-bucket file count so
-        // continuous appends can't turn directory listing into the probe
-        // bottleneck (runs between batches — no reader is mid-scan)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          phase("compact")
-          compactLshIndex(s, indexPath, maxFilesPerBucket)
-        }
-        }
-        s.sparkContext.setJobDescription(null)
+      }
+      val probeCols = col("doc_id") +: col("band") +: col("bh") +: col("bucket") +:
+        (0 until nBands * rowsPerBand).map(i => col(s"s$i"))
+      val earlierSide: DataFrame =
+        if (new java.io.File(indexPath).exists()) {
+          val hit = bObs.row.getSeq[Int](0)
+          phase("probe+out")
+          s.read.parquet(indexPath)
+            .filter(col("bucket").isin(hit.map(Integer.valueOf): _*))
+            .select(probeCols: _*)
+        } else bandsB.select(probeCols: _*)
+      val dupOf = earlierSide.as("x")
+        .join(broadcast(bandsB.as("y")),
+          col("x.bucket") === col("y.bucket") && col("x.band") === col("y.band") &&
+            col("x.bh") === col("y.bh") && col("x.doc_id") < col("y.doc_id"))
+        .filter(eq / lit(16.0) >= threshold)
+        .select(col("y.doc_id").as("id"), col("x.doc_id").as("earlier"))
+        .groupBy(col("id")).agg(min(col("earlier")).as("dup_of"))
+      // batch-sized output: collapse to one task/file per micro-batch
+      // (32 shuffle-width files of a 12k-row frame are pure overhead)
+      docs.select(col("doc_id"))
+        .join(dupOf, col("doc_id") === col("id"), "left")
+        .select(col("doc_id"), col("dup_of").isNull.as("novel"), col("dup_of"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$outPath/v=$batchId")
+      docs.unpersist() // bandsB's checkpoint blocks are GC-reclaimed (ContextCleaner)
+      // maintenance rider: bound the index's per-bucket file count so
+      // continuous appends can't turn directory listing into the probe
+      // bottleneck (runs between batches — no reader is mid-scan)
+      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
+        phase("compact")
+        compactLshIndex(s, indexPath, maxFilesPerBucket)
+      }
     }
-    ()
+    s.sparkContext.setJobDescription(null)
   }
 
   /** Post-maintenance content audit of a persisted signature index:
@@ -2018,15 +1929,10 @@ object Dedup {
           col("id").as("cluster_size"), col("id").cast("int").as("cbucket"))
     }
 
-  /** Heal a cluster map left by a merge interrupted mid-swap — the
-    * [[recoverLshIndex]] ladder over `cbucket=` dirs and the `.merge`
-    * temp tree. An aside copy with a missing live dir is pre-merge data
-    * (restore it; the unadvanced `_cluster_frontier` makes the replayed
-    * batch re-merge); an aside next to a live dir means the swap
-    * committed (drop the aside); a stale temp tree is a dead rewrite.
-    * Returns the bucket ids restored. No-crash cost: two existence
-    * checks.
-    */
+  /** Heal a cluster map left by a merge interrupted mid-swap:
+    * [[BucketSwap.recover]] over the `cbucket=` dirs. Returns the bucket
+    * ids restored; the unadvanced `_cluster_frontier` makes the
+    * interrupted batch re-merge. */
   def recoverClusterMap(path: String): Seq[Int] = BucketSwap.recover(path, "cbucket")
 
   /** Merge ONE ingest batch into the persisted cluster map — the
@@ -2048,15 +1954,15 @@ object Dedup {
     * that runs anyway (round-14):
     *  1. batch band signatures, localCheckpoint-cut (batch-sized), with
     *     the batch's min/max doc_id OBSERVED on the same job;
-    *  2. earlier-candidate probe — the [[streamingNovelty]] device:
+    *  2. earlier-candidate probe:
     *     index rows bucket-pruned to the batch's band hashes union the
     *     batch's own rows, ONE broadcast of the batch, `x.doc_id <
     *     y.doc_id` keeps "earlier", `distinct` folds replay overlap —
     *     COLLECTED directly (the delta-bounded pair set feeds the
     *     driver-side union-find below regardless);
-    *  3. append the batch's bands to the index, guarded by the index
-    *     `_ingest_frontier` (a replay never double-appends) and the
-    *     doc-id ingestion-order contract (fails loudly out of order);
+    *  3. append the batch's bands to the index through
+    *     [[BucketSwap.appendInOrder]] (a replay never double-appends; an
+    *     out-of-doc-id-order batch fails loudly);
     *  4. contract endpoints through the stored map — one IN-filtered
     *     pass over the map relation resolves stored clusters of the
     *     delta's endpoints (delta-sized result collected) — then
@@ -2065,9 +1971,10 @@ object Dedup {
     *     clusters, insert newly clustered docs (old singletons and
     *     batch docs — decided by an in-plan anti-join, both sides
     *     delta-bounded), recount sizes bucket-locally (cluster-keyed
-    *     bucketing keeps each cluster whole inside one bucket), swap
-    *     per bucket through the aside device;
-    *  6. advance `_cluster_frontier` (tmp + ATOMIC_MOVE) LAST.
+    *     bucketing keeps each cluster whole inside one bucket) into the
+    *     staging tree of [[BucketSwap.commit]], which swaps them in per
+    *     bucket;
+    *  6. advance `_cluster_frontier` LAST (also [[BucketSwap.commit]]).
     *
     * Crash/replay: a batch id at or below the frontier is absorbed
     * (returns false, zero work). A crash at any earlier point replays
@@ -2081,10 +1988,8 @@ object Dedup {
   def maintainClusterMap(spark: org.apache.spark.sql.SparkSession,
                          indexPath: String, mapPath: String, batch: DataFrame,
                          threshold: Double, batchId: Long): Boolean = {
-    recoverClusterMap(mapPath)
-    recoverLshIndex(indexPath)
-    val (last, _) = BucketSwap.readFrontier(mapPath, "_cluster_frontier")
-    if (batchId <= last) return false
+    BucketSwap.recover(indexPath, "bucket")
+    BucketSwap.commit(mapPath, "cbucket", "_cluster_frontier", batchId) { staging =>
     // a maintenance batch is micro-batch-sized: the batch-width device
     // (scoped shuffle width + AQE off) applies exactly as in
     // streamingNovelty's foreachBatch body
@@ -2142,20 +2047,9 @@ object Dedup {
       .distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1)))
 
-    val (recBatch, recMax) = BucketSwap.readFrontier(indexPath, "_ingest_frontier")
-    if (batchId > recBatch) {
-      val stats = bObs.row
-      if (!stats.isNullAt(0)) {
-        require(stats.getLong(0) > recMax,
-          s"ingestion-order contract broken: batch $batchId min doc_id " +
-            s"${stats.getLong(0)} <= already-indexed max $recMax — cluster " +
-            "maintenance assumes doc-id-ordered ingestion; re-ingest " +
-            "out-of-order data through a full rebuild instead")
-        bands.repartition(indexBuckets, col("bucket"))
-          .write.mode("append").partitionBy("bucket").parquet(indexPath)
-        BucketSwap.writeFrontier(indexPath, "_ingest_frontier", batchId,
-          math.max(recMax, stats.getLong(1)))
-      }
+    BucketSwap.appendInOrder(indexPath, batchId, bObs.row, "doc_id") {
+      bands.repartition(indexBuckets, col("bucket"))
+        .write.mode("append").partitionBy("bucket").parquet(indexPath)
     }
 
     // ONE map relation serves the whole merge (endpoint resolution AND
@@ -2203,7 +2097,8 @@ object Dedup {
         edgesArr.flatMap { case (a, b) => Seq(a, b) }.distinct.map(n => n -> find(n))
       }
 
-    if (relabels.nonEmpty) {
+    if (relabels.isEmpty) Seq.empty
+    else {
       val nodes = relabels.map(_._1)
       val touched = relabels.flatMap { case (n, l) =>
         Seq((n % mapBuckets).toInt, (l % mapBuckets).toInt) }.distinct.sorted.toSeq
@@ -2236,12 +2131,11 @@ object Dedup {
         .select(col("doc_id"), col("cluster"), col("cluster_size"))
         .withColumn("cbucket", mapBucketCol(col("cluster")))
       out.repartition(math.max(1, touched.size), col("cbucket"))
-        .write.mode("overwrite").partitionBy("cbucket").parquet(s"$mapPath.merge")
-      BucketSwap.swap(mapPath, "cbucket", touched)
+        .write.mode("overwrite").partitionBy("cbucket").parquet(staging)
+      touched
     }
-    BucketSwap.writeFrontier(mapPath, "_cluster_frontier", batchId, 0L)
     }
-    true
+    }
   }
 
   /** Streaming document ingestion maintaining the persisted cluster map

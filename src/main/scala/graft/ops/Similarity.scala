@@ -1623,10 +1623,10 @@ object Similarity {
     * reproduces its rows bit-identically (the ordering is total), so
     * bucket-level rewrite needs no per-anchor bookkeeping.
     *
-    * Crash/replay mirrors the cluster map: `_knn_frontier` (advanced
-    * LAST) absorbs replayed batch ids; the vector append is guarded by
-    * the vector table's own `_ingest_frontier` plus the vec-id
-    * ingestion-order contract (fails loudly out of order); a crash
+    * Crash/replay mirrors the cluster map: the merge is one
+    * [[BucketSwap.commit]], whose `_knn_frontier` (advanced LAST) absorbs
+    * replayed batch ids; the vector append is
+    * [[BucketSwap.appendInOrder]] (fails loudly out of vec-id order); a crash
     * between append and graph commit replays cleanly — the scored pass
     * recomputes the same candidates, `distinct` folds rows already
     * merged, and [[BucketSwap.recover]] heals a half-swap. Returns true
@@ -1637,9 +1637,7 @@ object Similarity {
   def maintainKnnGraph(spark: org.apache.spark.sql.SparkSession,
                        vecPath: String, knnPath: String, batch: DataFrame,
                        k: Int, batchId: Long): Boolean = {
-    BucketSwap.recover(knnPath, "abucket")
-    val (last, _) = BucketSwap.readFrontier(knnPath, "_knn_frontier")
-    if (batchId <= last) return false
+    BucketSwap.commit(knnPath, "abucket", "_knn_frontier", batchId) { staging =>
     Caches.withBatchShuffleWidth(spark) {
 
     // batch min/max ride the batch materialization as OBSERVED metrics
@@ -1653,20 +1651,9 @@ object Similarity {
     // pass then reads one consistent table covering old + batch
     // (intra-batch pairs included; the candidate relation below is lazy
     // and only executes after this commit)
-    val (vb, vMax) = BucketSwap.readFrontier(vecPath, "_ingest_frontier")
-    if (batchId > vb) {
-      val stats = bObs.row
-      if (!stats.isNullAt(0)) {
-        require(stats.getLong(0) > vMax,
-          s"ingestion-order contract broken: batch $batchId min vec_id " +
-            s"${stats.getLong(0)} <= already-ingested max $vMax — kNN " +
-            "maintenance assumes vec-id-ordered ingestion; re-ingest " +
-            "out-of-order data through a full rebuild instead")
-        batch.select(col("vec_id"), col("embedding"))
-          .coalesce(1).write.mode("append").parquet(vecPath)
-        BucketSwap.writeFrontier(vecPath, "_ingest_frontier", batchId,
-          math.max(vMax, stats.getLong(1)))
-      }
+    BucketSwap.appendInOrder(vecPath, batchId, bObs.row, "vec_id") {
+      batch.select(col("vec_id"), col("embedding"))
+        .coalesce(1).write.mode("append").parquet(vecPath)
     }
 
     val stored = prepared(spark.read.parquet(vecPath))
@@ -1692,17 +1679,17 @@ object Similarity {
         .as("e"))
       .select(col("e.anchor_id"), col("e.neighbor_id"), col("e.cosine"))
 
-    admitAndRewrite(spark, knnPath, cand, k, batchId)
+    admitAndStage(spark, knnPath, staging, cand, k)
     }
-    true
+    }
   }
 
   /** Shared merge tail of the exact and ANN-assisted maintenance paths:
     * admission-filter the scored candidates against the stored k-th,
-    * re-rank and rewrite ONLY the touched anchor buckets through the
-    * aside-swap, then advance the frontier LAST. */
-  private def admitAndRewrite(spark: org.apache.spark.sql.SparkSession,
-      knnPath: String, cand: DataFrame, k: Int, batchId: Long): Unit = {
+    * re-rank ONLY the touched anchor buckets into `staging`, and return
+    * their ids for [[BucketSwap.commit]] to swap in. */
+  private def admitAndStage(spark: org.apache.spark.sql.SparkSession,
+      knnPath: String, staging: String, cand: DataFrame, k: Int): Seq[Int] = {
     // ONE graph relation serves both the k-th lookup and the rewrite
     // read (spark.read.parquet re-lists the tree per call)
     val knnRel = spark.read.parquet(knnPath)
@@ -1735,10 +1722,9 @@ object Similarity {
         .filter(col("rank") <= k)
         .withColumn("abucket", aBucketCol(col("anchor_id")))
       content.repartition(math.max(1, touched.size), col("abucket"))
-        .write.mode("overwrite").partitionBy("abucket").parquet(s"$knnPath.merge")
-      BucketSwap.swap(knnPath, "abucket", touched)
+        .write.mode("overwrite").partitionBy("abucket").parquet(staging)
     }
-    BucketSwap.writeFrontier(knnPath, "_knn_frontier", batchId, 0L)
+    touched
   }
 
   /** End-to-end incremental kNN maintenance exercise: the prefix vector
@@ -1805,7 +1791,7 @@ object Similarity {
     val prefix = emb.filter(col("vec_id") < cut0)
     prefix.select(col("vec_id"), col("embedding"))
       .write.mode("overwrite").parquet(vec)
-    BucketSwap.writeFrontier(vec, "_ingest_frontier", -1L, cut0 - 1)
+    BucketSwap.markIngested(vec, cut0 - 1)
     writeKnnMap(knnGraph(prefix, k), map)
     (vec, map)
   }
@@ -1862,7 +1848,7 @@ object Similarity {
     assignCells(stored, cent)
       .repartition(nlist, col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(cells)
-    BucketSwap.writeFrontier(cells, "_ingest_frontier", -1L, cut - 1)
+    BucketSwap.markIngested(cells, cut - 1)
     writeKnnMap(knnGraph(emb.filter(col("vec_id") < cut), k), map)
     (cents, cells, map)
   }
@@ -1899,10 +1885,10 @@ object Similarity {
     * nprobe/nlist of the corpus, partition-pruned I/O) — the shape a
     * 1e9-vector store needs, where the exact path's per-batch |B|·|C|
     * scan is the last brute-force production shape. The merge tail
-    * (admission filter, bucket rewrite, frontier) is the shared
-    * [[admitAndRewrite]]; crash/replay guarantees are identical. The
-    * price is approximation: a true neighbor outside the probed cells
-    * is missed — `emb_knn_maintenance_ann` audits exactly that recall
+    * (admission filter, bucket rewrite) is the shared [[admitAndStage]]
+    * inside the same [[BucketSwap.commit]]; crash/replay guarantees are
+    * identical. The price is approximation: a true neighbor outside the
+    * probed cells is missed — `emb_knn_maintenance_ann` audits exactly that recall
     * against the exact graph, per the ann_*_recall convention.
     */
   def maintainKnnGraphAnn(spark: org.apache.spark.sql.SparkSession,
@@ -1929,9 +1915,7 @@ object Similarity {
                           cent: DataFrame, cellsPath: String, knnPath: String,
                           batch: DataFrame, k: Int, nprobe: Int,
                           batchId: Long): Boolean = {
-    BucketSwap.recover(knnPath, "abucket")
-    val (last, _) = BucketSwap.readFrontier(knnPath, "_knn_frontier")
-    if (batchId <= last) return false
+    BucketSwap.commit(knnPath, "abucket", "_knn_frontier", batchId) { staging =>
     Caches.withBatchShuffleWidth(spark) {
 
     // batch min/max ride the localCheckpoint job as OBSERVED metrics
@@ -1941,20 +1925,9 @@ object Similarity {
 
     // guarded append of the batch's cell assignments (the vector-table
     // append of the exact path, in the cell-partitioned layout)
-    val (vb, vMax) = BucketSwap.readFrontier(cellsPath, "_ingest_frontier")
-    if (batchId > vb) {
-      val stats = bObs.row
-      if (!stats.isNullAt(0)) {
-        require(stats.getLong(0) > vMax,
-          s"ingestion-order contract broken: batch $batchId min vec_id " +
-            s"${stats.getLong(0)} <= already-ingested max $vMax — kNN " +
-            "maintenance assumes vec-id-ordered ingestion; re-ingest " +
-            "out-of-order data through a full rebuild instead")
-        assignCells(bPrep, cent)
-          .coalesce(1).write.mode("append").partitionBy("cell").parquet(cellsPath)
-        BucketSwap.writeFrontier(cellsPath, "_ingest_frontier", batchId,
-          math.max(vMax, stats.getLong(1)))
-      }
+    BucketSwap.appendInOrder(cellsPath, batchId, bObs.row, "vec_id") {
+      assignCells(bPrep, cent)
+        .coalesce(1).write.mode("append").partitionBy("cell").parquet(cellsPath)
     }
 
     // probe: the nprobe nearest cells per batch vector (probeCells'
@@ -1974,10 +1947,10 @@ object Similarity {
       collect_set(col("cell")).as("probed"))
     val probes = pObs.df.localCheckpoint()
     val probed = pObs.row.getSeq[Int](0).sorted
-    admitAndRewrite(spark, knnPath,
-      annCandidates(spark, cellsPath, probes, probed), k, batchId)
+    admitAndStage(spark, knnPath, staging,
+      annCandidates(spark, cellsPath, probes, probed), k)
     }
-    true
+    }
   }
 
   /** End-to-end ANN-assisted maintenance exercise + recall audit: stage

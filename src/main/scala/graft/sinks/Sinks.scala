@@ -77,7 +77,7 @@ object ParquetKeyedSink {
 
   /** Write-through upsert with an atomic version flip: write the merged
     * state to `dir/v=<version>` then let readers pick the max version —
-    * same recovery contract as the reference's tmp-write + ATOMIC_MOVE
+    * same recovery contract as the reference's tmp-write + atomic rename
     * offset file (coordinator/FileOffsetStore.scala:35-57).
     */
   def upsert(spark: SparkSession, dir: String, version: Long,

@@ -8,9 +8,9 @@ import graft.ops.Dedup
   * [[Dedup.connectedComponents]] must produce the same
   * (doc_id, cluster, cluster_size) rows as a sequential union-find over
   * the collected edge list on every graph shape — the deterministic-seed
-  * sweep covers mixtures of chains, cliques, stars, duplicate and
-  * reversed edges, and graphs denser than anything the LSH pair
-  * generator emits.
+  * sweeps cover mixtures of chains, cliques, stars, duplicate and
+  * reversed edges, graphs denser than anything the LSH pair generator
+  * emits, and paths with shuffled labels.
   */
 class CcPropertySpec extends SparkSpec {
 
@@ -38,6 +38,22 @@ class CcPropertySpec extends SparkSpec {
       val edges = (0 until nEdges).map(_ => (next(nodes), next(nodes)))
         .filter { case (a, b) => a != b }
       compare(edges, s"seed=$seed nodes=$nodes edges=${edges.size}")
+    }
+  }
+
+  test("shuffled-label path sweep: star fixpoint equals union-find on 36 seeded paths") {
+    // paths with shuffled labels: the shape of the two-center
+    // counterexample (1-4-3-5-2), where a round output can put a member
+    // under two centers while no node is both center and member — the
+    // case condition (ii) of the fixpoint test exists for
+    (1 to 12).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      Seq(5, 7, 11).foreach { n =>
+        val labels = rnd.shuffle((1L to n.toLong).toVector)
+        val edges = labels.zip(labels.tail).map { case (a, b) =>
+          if (rnd.nextBoolean()) (a, b) else (b, a) }
+        compare(edges, s"seed=$seed path=${labels.mkString("-")}")
+      }
     }
   }
 

@@ -19,6 +19,11 @@ class DedupSpec extends SparkSpec {
   private val aNear = a + " zz qq zz"
   private val b = "completely different words about spark shuffles partitions and codegen stages"
 
+  // 8 originals; nearDupCorpus adds a near-dup copy of each at
+  // doc_id + 1000000 (the zz-qq suffix), so the copies cluster in pairs
+  private def nearDupPairs: DataFrame = Dedup.nearDupCorpus(corpus((0L until 8L).map(i =>
+    i -> Seq.tabulate(60)(j => s"t${(i * 7 + j) % 37} w$j").mkString(" ")): _*))
+
   test("exact: identical normalized text groups; canonical is min id") {
     val got = Dedup.exact(corpus(1L -> a, 2L -> ("  " + a.toUpperCase + " "), 3L -> b)).collect()
     assert(got.length == 1)
@@ -471,37 +476,98 @@ class DedupSpec extends SparkSpec {
   }
 
   test("index recovery heals every compaction crash point without losing a band row") {
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.col
+    import graft.ops.{BucketSwap, Similarity}
+    import spark.implicits._
+    // crash points A, B, C: one artifact per bucketed layout the device
+    // maintains — the LSH index (bucket), the cluster map (cbucket), the
+    // kNN graph (abucket)
     val root = Scratch.dir("graft-recover-spec")
-    val idx = s"$root/index"
-    Dedup.writeLshIndex(
-      Dedup.nearDupCorpus(spark.read.parquet("/root/testdata/sf0.001/documents.parquet")), idx)
-    val before = Dedup.indexContentAudit(spark, idx).collect().map(_.toString).toSeq
-    val buckets = Dedup.lshIndexFileCounts(idx).keys.toSeq.sorted
-    val (b0, b1) = (buckets.head, buckets(1))
-    // crash point A: bucket b0 moved aside, compacted copy never landed
-    val aside = new java.io.File(s"$idx.compact.aside"); aside.mkdirs()
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(s"$idx/bucket=$b0"),
-      java.nio.file.Paths.get(s"$idx.compact.aside/bucket=$b0"))
-    // crash point B: bucket b1 swapped in, its aside copy not yet deleted
-    // (stage a duplicate aside dir with a sentinel file)
-    val staleB = new java.io.File(s"$idx.compact.aside/bucket=$b1"); staleB.mkdirs()
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$idx.compact.aside/bucket=$b1/stale.parquet"), "x")
-    // crash point C: a half-written rewrite temp dir
-    val tmp = new java.io.File(s"$idx.compact/bucket=$b0"); tmp.mkdirs()
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$idx.compact/bucket=$b0/partial.parquet"), "x")
+    val full = nearDupPairs
+    Dedup.writeLshIndex(full, s"$root/index")
+    Dedup.writeClusterMap(Dedup.nearDupClusters(full, 0.5), s"$root/map")
+    Similarity.writeKnnMap(Similarity.knnGraph((0L until 24L).map { i =>
+      (i, Array(math.cos(i * 0.7).toFloat, math.sin(i * 1.3).toFloat,
+        math.cos(i * 2.1 + 1).toFloat, math.sin(i * 0.4 + 2).toFloat))
+    }.toDF("vec_id", "embedding"), 5), s"$root/knn")
+    def content(path: String): Seq[String] =
+      spark.read.parquet(path).collect().map(_.toString).toSeq.sorted
+    def bucketIds(path: String, partCol: String): Seq[Int] =
+      new java.io.File(path).listFiles().toSeq.map(_.getName)
+        .filter(_.startsWith(s"$partCol=")).map(_.stripPrefix(s"$partCol=").toInt).sorted
+    for ((path, partCol) <- Seq(s"$root/index" -> "bucket", s"$root/map" -> "cbucket",
+                                s"$root/knn" -> "abucket")) {
+      val before = content(path)
+      val bs = bucketIds(path, partCol)
+      val (b0, b1) = (bs(0), bs(1))
+      // crash point A: bucket b0 moved aside, its rewrite never landed
+      new java.io.File(s"$path.merge.aside").mkdirs()
+      java.nio.file.Files.move(
+        java.nio.file.Paths.get(s"$path/$partCol=$b0"),
+        java.nio.file.Paths.get(s"$path.merge.aside/$partCol=$b0"))
+      // crash point B: bucket b1 swapped in, its aside copy not yet deleted
+      // (stage a duplicate aside dir with a sentinel file)
+      new java.io.File(s"$path.merge.aside/$partCol=$b1").mkdirs()
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$path.merge.aside/$partCol=$b1/stale.parquet"), "x")
+      // crash point C: a half-written staging tree
+      new java.io.File(s"$path.merge/$partCol=$b0").mkdirs()
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$path.merge/$partCol=$b0/partial.parquet"), "x")
 
-    val restored = Dedup.recoverLshIndex(idx)
-    assert(restored == Seq(b0), s"expected only bucket $b0 restored: $restored")
-    assert(!new java.io.File(s"$idx.compact.aside").exists())
-    assert(!new java.io.File(s"$idx.compact").exists())
-    val after = Dedup.indexContentAudit(spark, idx).collect().map(_.toString).toSeq
-    assert(after == before, "recovered index content differs from pre-crash content")
-    // idempotent on a healthy index
-    assert(Dedup.recoverLshIndex(idx).isEmpty)
+      val restored = BucketSwap.recover(path, partCol)
+      assert(restored == Seq(b0), s"[$partCol] expected only bucket $b0 restored: $restored")
+      assert(!new java.io.File(s"$path.merge.aside").exists())
+      assert(!new java.io.File(s"$path.merge").exists())
+      assert(content(path) == before, s"[$partCol] recovered content differs from pre-crash content")
+      // idempotent on a healthy artifact
+      assert(BucketSwap.recover(path, partCol).isEmpty)
+    }
+
+    // crash point D, cluster map: the batch's swap finished and the
+    // index took its bands, but `_cluster_frontier` never advanced; the
+    // replayed batch must merge again and end equal to the rebuild
+    val idx = s"$root/d/index"; val map = s"$root/d/map"
+    Dedup.writeLshIndex(full.filter(col("doc_id") < 1000000L), idx)
+    Dedup.writeClusterMap(
+      Dedup.nearDupClusters(full.filter(col("doc_id") < 1000000L), 0.5), map)
+    val batch = full.filter(col("doc_id") >= 1000000L)
+    assert(Dedup.maintainClusterMap(spark, idx, map, batch, 0.5, 0L))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$map/_cluster_frontier"))
+    assert(Dedup.maintainClusterMap(spark, idx, map, batch, 0.5, 0L),
+      "a batch whose frontier never advanced must merge again, not be absorbed")
+    val got = spark.read.parquet(map)
+      .select(col("doc_id"), col("cluster"), col("cluster_size"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val rebuild = Dedup.nearDupClusters(full, 0.5)
+      .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster"),
+        r.getAs[Long]("cluster_size"))).toSet
+    assert(got.nonEmpty && got == rebuild,
+      s"replayed merge diverged: ${got.diff(rebuild)} | ${rebuild.diff(got)}")
+    graft.ops.Caches.releaseCaches(); spark.catalog.clearCache()
+  }
+
+  test("streaming novelty: a replayed batch leaves the verdicts and the index equal to a single run") {
+    import org.apache.spark.sql.functions.col
+    // batch 0 = the originals, batch 1 = their near-dup copies
+    val batches = Seq(nearDupPairs.filter(col("doc_id") < 1000000L),
+      nearDupPairs.filter(col("doc_id") >= 1000000L))
+    val root = Scratch.dir("graft-novelty-replay")
+    def run(tag: String, ids: Seq[Int]): (Seq[String], Seq[String]) = {
+      val d = s"$root/$tag"
+      ids.foreach(i => Dedup.noveltyBatch(s"$d/index", s"$d/out", 0.5, 2, 2)(batches(i), i.toLong))
+      (spark.read.parquet(s"$d/out").select("doc_id", "novel", "dup_of")
+        .collect().map(_.toString).toSeq.sorted,
+        Dedup.indexContentAudit(spark, s"$d/index").collect().map(_.toString).toSeq)
+    }
+    val (outOnce, indexOnce) = run("once", Seq(0, 1))
+    val (outReplayed, indexReplayed) = run("replayed", Seq(0, 1, 1))
+    assert(outOnce.size == 16 && outOnce.exists(_.contains(",false,")),
+      s"fixture must hold a verdict per doc and at least one duplicate: $outOnce")
+    val (sameOut, sameIndex) = (outReplayed == outOnce, indexReplayed == indexOnce)
+    assert(sameOut, s"a replayed batch changed the verdicts: ${outReplayed.size} rows, not ${outOnce.size}")
+    assert(sameIndex, s"a replayed batch changed the index content: ${indexReplayed.diff(indexOnce)}")
+    graft.ops.Caches.releaseCaches(); spark.catalog.clearCache()
   }
 
   test("shingle sweep: planted pairs verify at every k, shingle mass shrinks as k grows") {

@@ -761,7 +761,7 @@ object SparkEntry {
       val chunks = chunkedEvents(s, dir)
       Bounded.foreachBatch(changelogStream(s, chunks, Normalizer.normalize),
         s"$tmp/ckpt", Bounded.OnePerFile(chunks))(
-        StreamingScd2.applyBatch(s"$tmp/state", nBuckets = 8) _)
+        StreamingScd2.applyBatch(s"$tmp/state", nBuckets = 8))
       StreamingScd2.currentHistory(s, s"$tmp/state")
         .orderBy("tbl", "pk", "valid_from_pos")
     }),
@@ -2081,7 +2081,7 @@ object SparkEntry {
     "cdc_normalize" -> s"$clSql ORDER BY pos",
 
     "cdc_lww_state" ->
-      (ChangelogApply.materializeSql(clSql) + " ORDER BY tbl, pk"),
+      (ChangelogApply.materializeWideSql(clSql, Seq("value")) + " ORDER BY tbl, pk"),
 
     "cdc_view_maintenance" -> ChangelogApply.viewMaintenanceSql(clSql),
 
@@ -2274,7 +2274,7 @@ object SparkEntry {
 
     "cdc_enriched_state" ->
       s"""SELECT s.tbl, s.pk, s.value, c.c_name, c.c_mktsegment
-         |FROM (${ChangelogApply.materializeSql(clSql)}) s
+         |FROM (${ChangelogApply.materializeWideSql(clSql, Seq("value"))}) s
          |LEFT JOIN customer c ON s.pk = c.c_custkey
          |ORDER BY tbl, pk""".stripMargin,
 
@@ -2288,7 +2288,7 @@ object SparkEntry {
       graft.streaming.StreamingEnrich.batchSql(clSql),
 
     "cdc_jdbc_stream" ->
-      (ChangelogApply.materializeSql(clSql) + " ORDER BY tbl, pk"),
+      (ChangelogApply.materializeWideSql(clSql, Seq("value")) + " ORDER BY tbl, pk"),
 
     "events_stream_dedup" ->
       """SELECT DISTINCT event_id, ts, user_id, event_type, value, props

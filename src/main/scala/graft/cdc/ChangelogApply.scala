@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   */
 object ChangelogApply {
 
-  /** Materialize current state from a changelog envelope
-    * (tbl, pk, op, ts, pos, value).
+  /** The LWW kernel: per `keys` group, the `carried` columns of the row
+    * with the greatest `pos`, flattened back to top-level columns.
     *
     * Implementation note: `max_by(struct(...), pos)` instead of a
     * `row_number` window — the aggregate gets map-side partial aggregation
@@ -34,28 +34,16 @@ object ChangelogApply {
     * partition. On 100 TB of changelog that is the difference between one
     * shuffle of pre-combined partials and a full sort.
     */
-  def materialize(changelog: DataFrame): DataFrame = {
-    changelog
-      .groupBy(col("tbl"), col("pk"))
-      .agg(max_by(struct(col("op"), col("ts"), col("pos"), col("value")), col("pos")).as("last"))
-      .filter(col("last.op") =!= "D")
-      .select(
-        col("tbl"), col("pk"),
-        col("last.op").as("op"),
-        col("last.ts").as("ts"),
-        col("last.pos").as("pos"),
-        col("last.value").as("value")
-      )
-  }
+  def lastByPos(df: DataFrame, keys: Seq[String], carried: Seq[String]): DataFrame =
+    df.groupBy(keys.map(col): _*)
+      .agg(max_by(struct(carried.map(col): _*), col("pos")).as("last"))
+      .select(keys.map(col) ++ carried.map(c => col(s"last.$c").as(c)): _*)
 
-  /** Oracle SQL for [[materialize]] given a changelog CTE named `cl`. */
-  def materializeSql(clCte: String): String =
-    s"""WITH cl AS ($clCte),
-       |ranked AS (
-       |  SELECT *, row_number() OVER (PARTITION BY tbl, pk ORDER BY pos DESC) AS rn
-       |  FROM cl)
-       |SELECT tbl, pk, op, ts, pos, value
-       |FROM ranked WHERE rn = 1 AND op <> 'D'""".stripMargin
+  /** Materialize current state from a changelog envelope
+    * (tbl, pk, op, ts, pos, value).
+    */
+  def materialize(changelog: DataFrame): DataFrame =
+    materializeWide(changelog, Seq("value"))
 
   /** Kafka-style log compaction with tombstone GC: the compacted log
     * keeps exactly the LATEST event per (tbl, pk) — INCLUDING delete
@@ -69,20 +57,15 @@ object ChangelogApply {
     * broadcast into the filter — no second pass over the log.
     */
   def compactLog(changelog: DataFrame, gcFraction: Double): DataFrame = {
-    val last = changelog.groupBy(col("tbl"), col("pk"))
-      .agg(max_by(struct(col("op"), col("ts"), col("pos"), col("value")), col("pos")).as("last"))
+    val last = lastByPos(changelog, Seq("tbl", "pk"), Seq("op", "ts", "pos", "value"))
     val frontier = changelog.agg(
       (min(col("pos")) +
         floor(lit(gcFraction) * (max(col("pos")) - min(col("pos")))).cast("long"))
         .as("gc_frontier"))
     last.crossJoin(broadcast(frontier))
-      .filter(!(col("last.op") === "D" && col("last.pos") <= col("gc_frontier")))
-      .select(col("tbl"), col("pk"),
-        col("last.op").as("op"),
-        col("last.ts").as("ts"),
-        col("last.pos").as("pos"),
-        col("last.value").as("value"),
-        (col("last.op") === "D").as("is_tombstone"))
+      .filter(!(col("op") === "D" && col("pos") <= col("gc_frontier")))
+      .select(col("tbl"), col("pk"), col("op"), col("ts"), col("pos"), col("value"),
+        (col("op") === "D").as("is_tombstone"))
   }
 
   def compactLogSql(clCte: String, gcFraction: Double): String =
@@ -125,21 +108,12 @@ object ChangelogApply {
     * can't resurrect deleted keys).
     */
   def materializeEnvelope(changelog: DataFrame,
-                          payloadCols: Seq[String] = Seq("value")): DataFrame = {
-    val carried = Seq("op", "ts", "pos") ++ payloadCols
-    changelog
-      .groupBy(col("tbl"), col("pk"))
-      .agg(max_by(struct(carried.map(col): _*), col("pos")).as("last"))
-      .select(col("tbl") +: col("pk") +: carried.map(c => col(s"last.$c").as(c)): _*)
-  }
+                          payloadCols: Seq[String] = Seq("value")): DataFrame =
+    lastByPos(changelog, Seq("tbl", "pk"), Seq("op", "ts", "pos") ++ payloadCols)
 
   /** Like [[materialize]] but keeps Delete rows (needed by the merge). */
   def materializeAll(changelog: DataFrame): DataFrame =
-    changelog
-      .groupBy(col("pk"))
-      .agg(max_by(struct(col("op"), col("pos"), col("value")), col("pos")).as("last"))
-      .select(col("pk"), col("last.op").as("op"), col("last.pos").as("pos"),
-        col("last.value").as("value"))
+    lastByPos(changelog, Seq("pk"), Seq("op", "pos", "value"))
 
   /** Point-in-time (as-of) lookup: for each (tbl, pk, asof_pos) probe,
     * the row state as of that log position — time-travel reads over the
@@ -166,21 +140,17 @@ object ChangelogApply {
     */
   def asOfLookupWide(changelog: DataFrame, probes: DataFrame,
                      payloadCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
     val p = probes.select(col("tbl").as("p_tbl"), col("pk").as("p_pk"), col("asof_pos"))
-    val carried = "op" +: payloadCols
-    val hits = changelog
+    val hits = lastByPos(changelog
       .join(broadcast(p),
         col("p_tbl") === col("tbl") && col("p_pk") === col("pk") &&
-          col("pos") <= col("asof_pos"), "inner")
-      .groupBy(col("p_tbl"), col("p_pk"), col("asof_pos"))
-      .agg(max_by(struct(carried.map(col): _*), col("pos")).as("last"))
+          col("pos") <= col("asof_pos"), "inner"),
+      Seq("p_tbl", "p_pk", "asof_pos"), "op" +: payloadCols)
     broadcast(hits)
       .join(p, Seq("p_tbl", "p_pk", "asof_pos"), "right_outer")
       .select(Seq(col("p_tbl").as("tbl"), col("p_pk").as("pk"), col("asof_pos"),
-        coalesce(col("last.op"), lit("X")).as("op")) ++
-        payloadCols.map(c =>
-          when(col("last.op").isNotNull && col("last.op") =!= "D", col(s"last.$c")).as(c)): _*)
+        coalesce(col("op"), lit("X")).as("op")) ++
+        payloadCols.map(c => when(col("op").isNotNull && col("op") =!= "D", col(c)).as(c)): _*)
       .orderBy("tbl", "pk", "asof_pos")
   }
 
@@ -208,19 +178,13 @@ object ChangelogApply {
   }
 
   /** Wide-envelope LWW: one row per live (tbl, pk) carrying the FULL
-    * after-image (every payload column), not just a scalar. Same
-    * single-shuffle max_by shape as [[materialize]] — the payload rides
-    * inside the partial-aggregated struct, so widening the row adds bytes
-    * but no new shuffle or sort.
+    * after-image (every payload column), not just a scalar —
+    * [[materializeEnvelope]] with the tombstones dropped. The payload
+    * rides inside the kernel's partial-aggregated struct, so widening the
+    * row adds bytes but no new shuffle or sort.
     */
-  def materializeWide(changelog: DataFrame, payloadCols: Seq[String]): DataFrame = {
-    val carried = Seq("op", "ts", "pos") ++ payloadCols
-    changelog
-      .groupBy(col("tbl"), col("pk"))
-      .agg(max_by(struct(carried.map(col): _*), col("pos")).as("last"))
-      .filter(col("last.op") =!= "D")
-      .select(col("tbl") +: col("pk") +: carried.map(c => col(s"last.$c").as(c)): _*)
-  }
+  def materializeWide(changelog: DataFrame, payloadCols: Seq[String]): DataFrame =
+    materializeEnvelope(changelog, payloadCols).filter(col("op") =!= "D")
 
   /** Oracle SQL for [[materializeWide]]: `clCte` must yield the decoded
     * wide envelope (tbl, pk, op, ts, pos, payload...).
@@ -756,12 +720,8 @@ object ChangelogApply {
     val wc = changelog
       .withColumn("chunk", expr(s"CAST(((pk - $lo) * $nChunks) DIV (${hi - lo} + 1) AS BIGINT)"))
       .withColumn("cut", expr(s"CAST(((chunk + 1) * $mp) DIV $nChunks AS BIGINT)"))
-    def lww(df: DataFrame): DataFrame = df
-      .groupBy(col("tbl"), col("pk"), col("chunk"))
-      .agg(max_by(struct(col("op"), col("pos"), col("value")), col("pos")).as("last"))
-      .select(col("tbl"), col("pk"), col("chunk"), col("last.op").as("op"),
-        col("last.pos").as("pos"), col("last.value").as("value"))
-      .filter(col("op") =!= "D")
+    def lww(df: DataFrame): DataFrame =
+      lastByPos(df, Seq("tbl", "pk", "chunk"), Seq("op", "pos", "value")).filter(col("op") =!= "D")
     val rowHash = graft.functions.PortableHash.tokenHash(
       concat_ws("|", col("pk"), col("pos"), floor(col("value") * 100).cast("long")))
       .cast("decimal(38,0)")

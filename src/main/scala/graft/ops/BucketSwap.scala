@@ -6,7 +6,9 @@ package graft.ops
   *
   *  - [[appendInOrder]], the guarded id-ordered append: skip a replayed
   *    batch id, require the batch's ids to follow everything already
-  *    ingested, append, then advance the target's ingest frontier;
+  *    ingested, stage the batch, delete what an interrupted attempt of
+  *    the same batch moved in, move the staged files in under names that
+  *    carry the batch id, then advance the target's ingest frontier;
   *  - [[commit]] / [[rewrite]], the rewrite transaction: recover, absorb
   *    a batch id at or below the artifact's frontier, rewrite ONLY the
   *    touched `part=N` dirs into the sibling staging tree [[staging]],
@@ -138,10 +140,17 @@ private[graft] object BucketSwap {
     * frontier is a replay whose rows are already in: skipped. A new
     * batch must start above every id already ingested — the incremental
     * merges key "earlier ingested" to "smaller id", so an out-of-order
-    * batch fails loudly instead of silently merging wrong — then
-    * `append` runs and the frontier advances. */
+    * batch fails loudly instead of silently merging wrong.
+    *
+    * `stage` then writes the batch, by overwrite, into the staging tree it
+    * is handed, in the target's layout. Its data files move into the live
+    * partition dirs as `ingest-<batchId>-<name>`, and the frontier
+    * advances LAST. A crash anywhere before the frontier write leaves the
+    * frontier behind, so the batch replays and passes the order check
+    * again; the replay first deletes every `ingest-<batchId>-` file its
+    * interrupted attempt moved in, so the batch's rows land exactly once. */
   def appendInOrder(path: String, batchId: Long, ids: => org.apache.spark.sql.Row,
-                    idCol: String)(append: => Unit): Unit = {
+                    idCol: String)(stage: String => Unit): Unit = {
     val (last, maxId) = readFrontier(path, IngestFrontier)
     lazy val range = ids
     if (batchId > last && !range.isNullAt(0)) {
@@ -150,8 +159,24 @@ private[graft] object BucketSwap {
           s"${range.getLong(0)} <= already-ingested max $maxId in $path — incremental " +
           s"maintenance assumes $idCol-ordered ingestion; re-ingest " +
           "out-of-order data through a full rebuild instead")
-      append
+      import java.nio.file.{Files, Path, Paths}
+      import scala.jdk.CollectionConverters._
+      val (live, staged) = (Paths.get(path), Paths.get(s"$path.append"))
+      stage(staged.toString)
+      val tag = s"ingest-$batchId-"
+      def files(root: Path): List[Path] =
+        if (!Files.exists(root)) Nil
+        else scala.util.Using.resource(Files.walk(root))(
+          _.iterator().asScala.filter(Files.isRegularFile(_)).toList)
+      files(live).filter(_.getFileName.toString.startsWith(tag)).foreach(Files.delete)
+      files(staged).filterNot(f => Seq("_", ".").exists(f.getFileName.toString.startsWith))
+        .foreach { f =>
+          val dst = live.resolve(staged.relativize(f)).resolveSibling(tag + f.getFileName)
+          Files.createDirectories(dst.getParent)
+          Files.move(f, dst)
+        }
       writeFrontier(path, IngestFrontier, batchId, math.max(maxId, range.getLong(1)))
+      rmTree(staged.toFile)
     }
   }
 

@@ -1712,9 +1712,9 @@ object Dedup {
       // Partitioned by bucket from one shuffle: one file per bucket per
       // batch (the writeLshIndex layout), not tasks x buckets slivers.
       phase("append")
-      BucketSwap.appendInOrder(indexPath, batchId, dObs.row, "doc_id") {
+      BucketSwap.appendInOrder(indexPath, batchId, dObs.row, "doc_id") { staged =>
         bandsB.repartition(indexBuckets, col("bucket"))
-          .write.mode("append").partitionBy("bucket").parquet(indexPath)
+          .write.mode("overwrite").partitionBy("bucket").parquet(staged)
       }
       val probeCols = col("doc_id") +: col("band") +: col("bh") +: col("bucket") +:
         (0 until nBands * rowsPerBand).map(i => col(s"s$i"))
@@ -2047,9 +2047,9 @@ object Dedup {
       .distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1)))
 
-    BucketSwap.appendInOrder(indexPath, batchId, bObs.row, "doc_id") {
+    BucketSwap.appendInOrder(indexPath, batchId, bObs.row, "doc_id") { staged =>
       bands.repartition(indexBuckets, col("bucket"))
-        .write.mode("append").partitionBy("bucket").parquet(indexPath)
+        .write.mode("overwrite").partitionBy("bucket").parquet(staged)
     }
 
     // ONE map relation serves the whole merge (endpoint resolution AND

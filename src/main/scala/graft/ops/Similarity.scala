@@ -1651,9 +1651,9 @@ object Similarity {
     // pass then reads one consistent table covering old + batch
     // (intra-batch pairs included; the candidate relation below is lazy
     // and only executes after this commit)
-    BucketSwap.appendInOrder(vecPath, batchId, bObs.row, "vec_id") {
+    BucketSwap.appendInOrder(vecPath, batchId, bObs.row, "vec_id") { staged =>
       batch.select(col("vec_id"), col("embedding"))
-        .coalesce(1).write.mode("append").parquet(vecPath)
+        .coalesce(1).write.mode("overwrite").parquet(staged)
     }
 
     val stored = prepared(spark.read.parquet(vecPath))
@@ -1925,9 +1925,9 @@ object Similarity {
 
     // guarded append of the batch's cell assignments (the vector-table
     // append of the exact path, in the cell-partitioned layout)
-    BucketSwap.appendInOrder(cellsPath, batchId, bObs.row, "vec_id") {
+    BucketSwap.appendInOrder(cellsPath, batchId, bObs.row, "vec_id") { staged =>
       assignCells(bPrep, cent)
-        .coalesce(1).write.mode("append").partitionBy("cell").parquet(cellsPath)
+        .coalesce(1).write.mode("overwrite").partitionBy("cell").parquet(staged)
     }
 
     // probe: the nprobe nearest cells per batch vector (probeCells'

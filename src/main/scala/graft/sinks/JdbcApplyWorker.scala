@@ -15,24 +15,27 @@ import java.sql.{Connection, DriverManager}
   * CDCEngineUtils.scala:128-170 batched writes + commit cadence).
   * Spark-first that becomes `foreachPartition`: repartition by key so
   * each key lands in exactly one task, one connection + prepared
-  * statements per partition, addBatch/executeBatch at `batchSize`.
+  * statements per partition, addBatch/executeBatch every [[batchSize]]
+  * rows.
   *
   * Idempotent by construction — replaying the same batch rewrites the
   * same rows:
   *   - op ≠ 'D': UPDATE, and INSERT only when no row matched (the
-  *     try-update-else-insert upsert — portable to any JDBC target;
-  *     MySQL/StarRocks deployments swap in their native upsert SQL from
-  *     [[JdbcUpsertDialect]])
+  *     try-update-else-insert upsert — portable to any JDBC target; the
+  *     statements are fixed here, so the native upserts that
+  *     [[JdbcUpsertDialect]] renders for MySQL/StarRocks are not used)
   *   - op = 'D': DELETE (absent row ⇒ no-op)
   */
 object JdbcApplyWorker {
+
+  /** Rows per addBatch/executeBatch round trip and per commit. */
+  private val batchSize = 500
 
   /** Apply `batch` to `table`. `valueCols` are the non-key payload
     * columns; the frame must carry `pkCols ++ valueCols ++ op`.
     */
   def applyBatch(batch: DataFrame, url: String, table: String,
-                 pkCols: Seq[String], valueCols: Seq[String],
-                 batchSize: Int = 500): Unit = {
+                 pkCols: Seq[String], valueCols: Seq[String]): Unit = {
     val cols = pkCols ++ valueCols
     val updateSql = {
       val sets = valueCols.map(c => s"$c = ?").mkString(", ")
@@ -50,7 +53,7 @@ object JdbcApplyWorker {
         if (rows.hasNext) {
           val conn = DriverManager.getConnection(url)
           try applyPartition(rows, conn, updateSql, insertSql, deleteSql,
-            pkCols.size, valueCols.size, batchSize)
+            pkCols.size, valueCols.size)
           finally conn.close()
         }
       }
@@ -67,7 +70,7 @@ object JdbcApplyWorker {
     */
   private def applyPartition(rows: Iterator[Row], conn: Connection,
                              updateSql: String, insertSql: String, deleteSql: String,
-                             nPk: Int, nVal: Int, batchSize: Int): Unit = {
+                             nPk: Int, nVal: Int): Unit = {
     conn.setAutoCommit(false)
     val del = conn.prepareStatement(deleteSql)
     val ins = conn.prepareStatement(insertSql)

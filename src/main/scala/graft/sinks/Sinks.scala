@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
   * connectors (reference: connector/sink/mysql/MySQLSinkConnector.scala:81-108
   * — INSERT ... ON DUPLICATE KEY UPDATE with doubled params;
   * connector/sink/starrocks/StarRocksSinkConnector.scala:79-105 — plain
-  * INSERT upserts natively on a PK-model table). Pure string builders:
-  * unit-tested, executed through `foreachPartition` JDBC writers in
-  * production, no live DB needed in the harness.
+  * INSERT upserts natively on a PK-model table). Pure string builders,
+  * unit-tested without a live DB. Nothing in the engine executes them:
+  * [[JdbcApplyWorker]], the one JDBC writer, runs its own portable
+  * UPDATE-then-INSERT and DELETE statements.
   */
 sealed trait JdbcUpsertDialect {
   def name: String

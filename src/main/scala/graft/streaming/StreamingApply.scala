@@ -74,9 +74,13 @@ import java.util.concurrent.ConcurrentHashMap
   * group, tags, SQL execution id, `streaming.sql.batchId`), so stopping
   * the query cannot cancel a fold and fold jobs are not the batch's jobs.
   *
-  * [[StreamingScd2]] and [[StreamingEnrich]] keep the synchronous
-  * [[applyBatchWith]] path (`v=<batchId>` per batch, no deltas): their
-  * interval recompute needs the prior rows.
+  * [[StreamingScd2]] and [[StreamingEnrich]] write synchronously, one
+  * `v=<batchId>` per batch and no deltas, because their interval
+  * recompute needs the prior rows: the SCD2 history through
+  * [[applyBatchWith]], then the enrichment output over the buckets that
+  * apply returns. They, the fold and the seed ([[writeVersion]]) all
+  * write a version through [[writeBuckets]], which then compacts the
+  * buckets it wrote.
   *
   * All state-directory listing/deleting goes through Hadoop [[FileSystem]]
   * so the same code is correct when stateDir is hdfs:// or s3a:// on a
@@ -143,13 +147,9 @@ object StreamingApply {
   def mergeStateBucketed(prev: DataFrame, batch: DataFrame,
                          payloadCols: Seq[String], nBuckets: Int): DataFrame = {
     val cols = stateCols(payloadCols) :+ "bucket"
-    val carried = Seq("op", "ts", "pos") ++ payloadCols
-    byBucket(prev.select(cols.map(col): _*)
-      .unionByName(batch.select(cols.map(col): _*)), nBuckets)
-      .groupBy(col("bucket"), col("tbl"), col("pk"))
-      .agg(max_by(struct(carried.map(col): _*), col("pos")).as("last"))
-      .select(col("bucket") +: col("tbl") +: col("pk") +:
-        carried.map(c => col(s"last.$c").as(c)): _*)
+    ChangelogApply.lastByPos(byBucket(prev.select(cols.map(col): _*)
+      .unionByName(batch.select(cols.map(col): _*)), nBuckets),
+      Seq("bucket", "tbl", "pk"), Seq("op", "ts", "pos") ++ payloadCols)
   }
 
   private def emptyState(spark: SparkSession, schema: StructType): DataFrame =
@@ -271,17 +271,16 @@ object StreamingApply {
   }
 
   /** Write a full state frame as one bucketed version — the seeding path
-    * for snapshot/catchup phases (Engine). A seed version must lie below
-    * the first batch id streamed on top of it: deltas at or below the
-    * newest base count as folded.
+    * for snapshot/catchup phases (Engine), through [[writeBuckets]]. A
+    * seed version must lie below the first batch id streamed on top of
+    * it: deltas at or below the newest base count as folded.
     */
   def writeVersion(state: DataFrame, stateDir: String, version: Long,
                    nBuckets: Int = defaultBuckets,
                    payloadCols: Seq[String] = defaultPayload): Unit =
-    byBucket(state.select(stateCols(payloadCols).map(col): _*)
-      .withColumn("bucket", bucketOf(nBuckets)), nBuckets)
-      .write.partitionBy("bucket")
-      .mode("overwrite").parquet(s"$stateDir/v=$version")
+    writeBuckets(state.sparkSession, stateDir, version, payloadCols, (0 until nBuckets).toSet)(_ =>
+      byBucket(state.select(stateCols(payloadCols).map(col): _*)
+        .withColumn("bucket", bucketOf(nBuckets)), nBuckets))
 
   /** The foreachBatch body: write the batch's rows as `d=<batchId>`
     * (overwrite, so a replay rewrites its own delta), then start a fold
@@ -381,11 +380,13 @@ object StreamingApply {
     folderOf(spark, stateDir).await()
 
   /** Generic bucketed apply: merge a batch into the latest bases of the
-    * buckets it touches and write them as `v=<batchId>`, with a pluggable
-    * batch preparation (pad state-only columns) and state merge — the
-    * SAME versioned-bucket/replay/compaction machinery serves any
-    * order-insensitive merge (the LWW fold here, interval recompute in
-    * [[StreamingScd2]]).
+    * buckets it touches and write them as `v=<batchId>` through
+    * [[writeBuckets]], with a pluggable batch preparation (pad state-only
+    * columns) and state merge — the SAME versioned-bucket/replay/compaction
+    * machinery serves any order-insensitive merge (the LWW fold here,
+    * interval recompute in [[StreamingScd2]]). Returns the touched buckets,
+    * so a store derived from this one ([[StreamingEnrich]]) rewrites the
+    * same buckets without probing the batch again.
     *
     * Merge contract: both frames carry a `bucket` column and the merged
     * output must retain it. Implementations repartition ONCE on bucket
@@ -396,42 +397,27 @@ object StreamingApply {
     *
     * The touched-bucket probe is a driver-side collect BOUNDED BY
     * nBuckets (a few ints, never data rows) — the same legitimate scalar
-    * probe shape as Watermark.latestPosition. Compaction afterwards is
-    * scoped to the touched buckets, so its cost follows the batch.
+    * probe shape as Watermark.latestPosition.
     */
   def applyBatchWith(stateDir: String, nBuckets: Int, payloadCols: Seq[String],
                      prepare: DataFrame => DataFrame,
                      merge: (DataFrame, DataFrame) => DataFrame)(
-      batch: DataFrame, batchId: Long): Unit = {
+      batch: DataFrame, batchId: Long): Set[Int] = {
     val spark = batch.sparkSession
-    val cols = stateCols(payloadCols)
-    val b = prepare(batch).select(cols.map(col): _*)
+    val b = prepare(batch).select(stateCols(payloadCols).map(col): _*)
       .withColumn("bucket", bucketOf(nBuckets)).persist()
     try {
       val touched = b.select(col("bucket")).distinct()
         .collect().map(_.getLong(0).toInt).toSet
-      if (touched.nonEmpty) {
-        // ONE state listing serves both the merge read and the
-        // post-write compaction (a second full walk per micro-batch is
-        // pure fixed overhead — and on object stores, a LIST storm)
-        val bases = listing(spark, stateDir).bases
+      if (touched.nonEmpty) writeBuckets(spark, stateDir, batchId, payloadCols, touched) { bases =>
         // bucket is re-derived, not read back: the per-bucket paths are
         // read directly so the partition column isn't in the footer
         val prev = basesBefore(spark, bases, batchId, Some(touched), payloadCols)
           .getOrElse(emptyState(spark, b.drop("bucket").schema))
           .withColumn("bucket", bucketOf(nBuckets))
         merge(prev, b)
-          .select((cols :+ "bucket").map(col): _*)
-          .write.partitionBy("bucket")
-          .mode("overwrite").parquet(s"$stateDir/v=$batchId")
-        // compact from the same listing: each touched bucket now holds
-        // {v=batchId} ∪ old versions, so keeping [[keepVersions]] total
-        // means keeping keepVersions − 1 PRE-batch versions per bucket
-        // (replay entries at v=batchId were just overwritten, never old)
-        dropSuperseded(spark, stateDir,
-          bases.filter { case (v, bkt, _) => v < batchId && touched(bkt) },
-          keepPerBucket = keepVersions - 1)
       }
+      touched
     } finally { b.unpersist(); () }
   }
 
@@ -440,30 +426,29 @@ object StreamingApply {
     */
   private val keepVersions = 2
 
-  /** Drop superseded versions of `buckets` (the ones a batch touched),
-    * keeping the newest [[keepVersions]] per bucket. Empty v= dirs are
-    * removed once drained.
+  /** The one bucketed version write: `rows` — built from the bases of the
+    * state listing taken before the write, and carrying a `bucket` column
+    * — become `v=<version>` (overwrite, so a replay rewrites its own
+    * version). Then each of `buckets` keeps [[keepVersions]] versions,
+    * `v=<version>` and the newest older one, and `v=` dirs left empty are
+    * removed. ONE listing serves the caller's read and the compaction (a
+    * second full walk per write is pure fixed overhead — and on object
+    * stores, a LIST storm), and compaction cost follows the buckets
+    * written, not the state.
     */
-  def compact(spark: SparkSession, stateDir: String, buckets: Set[Int]): Unit =
-    dropSuperseded(spark, stateDir,
-      listing(spark, stateDir).bases.filter { case (_, b, _) => buckets(b) },
-      keepPerBucket = keepVersions)
-
-  /** Delete all but the newest `keepPerBucket` versions per bucket in
-    * `candidates` (an already-filtered listing — no re-walk), then drain
-    * v= dirs left empty.
-    */
-  private def dropSuperseded(spark: SparkSession, stateDir: String,
-                             candidates: Seq[(Long, Int, Path)],
-                             keepPerBucket: Int): Unit = {
+  private[streaming] def writeBuckets(spark: SparkSession, stateDir: String, version: Long,
+                                      payloadCols: Seq[String], buckets: Set[Int])(
+      rows: Seq[(Long, Int, Path)] => DataFrame): Unit = {
+    val bases = listing(spark, stateDir).bases
+    rows(bases).select((stateCols(payloadCols) :+ "bucket").map(col): _*)
+      .write.partitionBy("bucket")
+      .mode("overwrite").parquet(s"$stateDir/v=$version")
     val hfs = fs(spark, stateDir)
-    candidates.groupBy(_._2).foreach { case (_, vs) =>
-      vs.sortBy(-_._1).drop(keepPerBucket).foreach { case (_, _, path) =>
-        hfs.delete(path, true)
+    bases.filter { case (v, b, _) => v < version && buckets(b) }.groupBy(_._2)
+      .foreach { case (_, vs) =>
+        vs.sortBy(-_._1).drop(keepVersions - 1).foreach(v => hfs.delete(v._3, true))
       }
-    }
-    val root = new Path(stateDir)
-    if (hfs.exists(root)) hfs.listStatus(root).toSeq
+    hfs.listStatus(new Path(stateDir)).toSeq
       .filter(v => v.isDirectory && v.getPath.getName.startsWith("v="))
       .filter(v => !hfs.listStatus(v.getPath).exists(_.getPath.getName.startsWith("bucket=")))
       .foreach(v => hfs.delete(v.getPath, true))
@@ -473,9 +458,8 @@ object StreamingApply {
     * retained deltas), tombstones dropped.
     */
   def currentState(spark: SparkSession, stateDir: String,
-                   payloadCols: Seq[String] = defaultPayload,
-                   emptySchema: StructType = graft.model.ChangeEvent.envelopeSchema): DataFrame =
-    stateBefore(spark, stateDir, Long.MaxValue, None, payloadCols, emptySchema)
+                   payloadCols: Seq[String] = defaultPayload): DataFrame =
+    stateBefore(spark, stateDir, Long.MaxValue, None, payloadCols)
       .filter(col("op") =!= "D")
 
   /** [[applyBatch]] with dead-letter quarantine in front: one parse of each

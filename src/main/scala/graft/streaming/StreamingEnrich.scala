@@ -62,45 +62,32 @@ object StreamingEnrich {
   }
 
   /** foreachBatch body: fold into SCD2, then rewrite the enrichment of
-    * every touched bucket from the merged history. The touched-bucket
-    * probe is bounded by nBuckets (same scalar-probe shape as
-    * [[StreamingApply.applyBatchWith]]).
+    * the buckets that fold touched (the set [[StreamingScd2.applyBatch]]
+    * returns, so the batch is probed once) from the merged history, as
+    * `outDir/v=<batchId>` through the same bucketed version write and
+    * compaction as the SCD2 store ([[StreamingApply.writeBuckets]]).
     */
   def applyBatch(scd2Dir: String, outDir: String,
                  nBuckets: Int = StreamingApply.defaultBuckets)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    // persisted: consumed by the SCD2 fold AND the touched probe — the
-    // probe would otherwise re-run the source scan + normalize
-    val b = batch.persist()
-    try {
-      StreamingScd2.applyBatch(scd2Dir, nBuckets)(b, batchId)
-      val touched = b
-        .select(StreamingApply.bucketOf(nBuckets).as("bucket")).distinct()
-        .collect().map(_.getLong(0).toInt).toSet
-      if (touched.nonEmpty) {
-        // the merged history of the touched buckets (events + intervals,
-        // tombstones included) — written by the applyBatch above. ONE
-        // repartition on bucket feeds both join sides: with bucket in the
-        // join keys, hash(bucket) partitioning satisfies the join's
-        // distribution, so the temporal join adds no further exchange.
-        val hist = StreamingApply.byBucket(StreamingApply.stateBefore(spark, scd2Dir, batchId + 1,
-            Some(touched), StreamingScd2.payloadCols, StreamingScd2.stateSchema)
-          .withColumn("bucket", StreamingApply.bucketOf(nBuckets)), nBuckets)
-        val events = hist.select("bucket", "tbl", "pk", "op", "ts", "pos", "value")
-        val versions = hist.filter(col("op") =!= "D")
-          .select(col("bucket"), col("tbl"), col("pk"), col("value"),
-            col("pos").as("valid_from_pos"), col("valid_to_pos"))
-        // aligned write: the join output is already hash(bucket)
-        // partitioned — writeVersion's repartition would re-shuffle it
-        enrichAgainst(versions, events, bucketed = true)
-          .select((Seq("tbl", "pk", "op", "ts", "pos") ++ payloadCols :+ "bucket")
-            .map(col): _*)
-          .write.partitionBy("bucket")
-          .mode("overwrite").parquet(s"$outDir/v=$batchId")
-        StreamingApply.compact(spark, outDir, touched)
-      }
-    } finally { b.unpersist(); () }
+    val touched = StreamingScd2.applyBatch(scd2Dir, nBuckets)(batch, batchId)
+    if (touched.nonEmpty) StreamingApply.writeBuckets(spark, outDir, batchId, payloadCols, touched) { _ =>
+      // the merged history of the touched buckets (events + intervals,
+      // tombstones included) — written by the applyBatch above. ONE
+      // repartition on bucket feeds both join sides: with bucket in the
+      // join keys, hash(bucket) partitioning satisfies the join's
+      // distribution, so the temporal join adds no further exchange and
+      // the join output is already aligned for the bucketed write.
+      val hist = StreamingApply.byBucket(StreamingApply.stateBefore(spark, scd2Dir, batchId + 1,
+          Some(touched), StreamingScd2.payloadCols, StreamingScd2.stateSchema)
+        .withColumn("bucket", StreamingApply.bucketOf(nBuckets)), nBuckets)
+      val events = hist.select("bucket", "tbl", "pk", "op", "ts", "pos", "value")
+      val versions = hist.filter(col("op") =!= "D")
+        .select(col("bucket"), col("tbl"), col("pk"), col("value"),
+          col("pos").as("valid_from_pos"), col("valid_to_pos"))
+      enrichAgainst(versions, events, bucketed = true)
+    }
   }
 
   /** The enriched changelog: latest version of every output bucket. */

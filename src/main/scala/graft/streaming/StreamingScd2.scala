@@ -64,8 +64,9 @@ object StreamingScd2 {
       .withColumn("is_current", col("op") =!= "D" && nextPos.isNull)
   }
 
+  /** foreachBatch body; returns the buckets the batch touched. */
   def applyBatch(stateDir: String, nBuckets: Int = StreamingApply.defaultBuckets)(
-      batch: DataFrame, batchId: Long): Unit =
+      batch: DataFrame, batchId: Long): Set[Int] =
     StreamingApply.applyBatchWith(stateDir, nBuckets, payloadCols, pad,
       mergeBucketed(_, _, nBuckets))(batch, batchId)
 

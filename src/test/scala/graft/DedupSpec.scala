@@ -547,27 +547,75 @@ class DedupSpec extends SparkSpec {
     graft.ops.Caches.releaseCaches(); spark.catalog.clearCache()
   }
 
-  test("streaming novelty: a replayed batch leaves the verdicts and the index equal to a single run") {
+  /** `nearDupPairs` as two novelty batches: 0 = the originals, 1 = their
+    * near-dup copies. */
+  private def noveltyBatches: Seq[DataFrame] = {
     import org.apache.spark.sql.functions.col
-    // batch 0 = the originals, batch 1 = their near-dup copies
-    val batches = Seq(nearDupPairs.filter(col("doc_id") < 1000000L),
-      nearDupPairs.filter(col("doc_id") >= 1000000L))
-    val root = Scratch.dir("graft-novelty-replay")
-    def run(tag: String, ids: Seq[Int]): (Seq[String], Seq[String]) = {
-      val d = s"$root/$tag"
-      ids.foreach(i => Dedup.noveltyBatch(s"$d/index", s"$d/out", 0.5, 2, 2)(batches(i), i.toLong))
-      (spark.read.parquet(s"$d/out").select("doc_id", "novel", "dup_of")
-        .collect().map(_.toString).toSeq.sorted,
-        Dedup.indexContentAudit(spark, s"$d/index").collect().map(_.toString).toSeq)
+    Seq(nearDupPairs.filter(col("doc_id") < 1000000L), nearDupPairs.filter(col("doc_id") >= 1000000L))
+  }
+
+  /** Apply novelty batches `ids` in order over the artifacts under `d`,
+    * calling `beforeStep(step)` ahead of each, then return the sorted
+    * verdicts and the index content audit. */
+  private def noveltyRun(d: String, ids: Seq[Int])(beforeStep: Int => Unit): (Seq[String], Seq[String]) = {
+    ids.zipWithIndex.foreach { case (i, step) =>
+      beforeStep(step)
+      Dedup.noveltyBatch(s"$d/index", s"$d/out", 0.5, 2, 2)(noveltyBatches(i), i.toLong)
     }
-    val (outOnce, indexOnce) = run("once", Seq(0, 1))
-    val (outReplayed, indexReplayed) = run("replayed", Seq(0, 1, 1))
+    (spark.read.parquet(s"$d/out").select("doc_id", "novel", "dup_of")
+      .collect().map(_.toString).toSeq.sorted,
+      Dedup.indexContentAudit(spark, s"$d/index").collect().map(_.toString).toSeq)
+  }
+
+  test("streaming novelty: a replayed batch leaves the verdicts and the index equal to a single run") {
+    val root = Scratch.dir("graft-novelty-replay")
+    val (outOnce, indexOnce) = noveltyRun(s"$root/once", Seq(0, 1))(_ => ())
+    val (outReplayed, indexReplayed) = noveltyRun(s"$root/replayed", Seq(0, 1, 1))(_ => ())
     assert(outOnce.size == 16 && outOnce.exists(_.contains(",false,")),
       s"fixture must hold a verdict per doc and at least one duplicate: $outOnce")
     val (sameOut, sameIndex) = (outReplayed == outOnce, indexReplayed == indexOnce)
     assert(sameOut, s"a replayed batch changed the verdicts: ${outReplayed.size} rows, not ${outOnce.size}")
     assert(sameIndex, s"a replayed batch changed the index content: ${indexReplayed.diff(indexOnce)}")
     graft.ops.Caches.releaseCaches(); spark.catalog.clearCache()
+  }
+
+  /** Replays novelty batch 0 over the artifacts of a run of it that
+    * crashed before its ingest frontier advanced: the pre-batch frontier
+    * (none) is restored, and `undoMoves` takes back the data files the
+    * crashed append had not yet moved into the live index. Then batch 1
+    * runs; verdicts and index must equal the uninterrupted run. */
+  private def crashReplay(tag: String)(undoMoves: Seq[java.nio.file.Path] => Unit): Unit = {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Scratch.dir(s"graft-novelty-$tag")
+    val index = Paths.get(s"$root/crashed/index")
+    def dataFiles: Seq[Path] =
+      scala.util.Using.resource(Files.walk(index))(_.iterator().asScala.toList)
+        .filter(f => Files.isRegularFile(f) && !Seq("_", ".").exists(f.getFileName.toString.startsWith))
+    val (outOnce, indexOnce) = noveltyRun(s"$root/once", Seq(0, 1))(_ => ())
+    val (outCrashed, indexCrashed) = noveltyRun(s"$root/crashed", Seq(0, 0, 1)) { step =>
+      if (step == 1) { // the crash, before batch 0's replay
+        val frontier = index.resolve("_ingest_frontier")
+        assert(Files.exists(frontier), "batch 0 must have advanced the ingest frontier")
+        Files.delete(frontier)
+        undoMoves(dataFiles.sortBy(_.toString))
+      }
+    }
+    assert(outCrashed == outOnce, s"the replay changed the verdicts: ${outCrashed.diff(outOnce)}")
+    assert(indexCrashed == indexOnce,
+      s"the replay changed the index content: ${indexCrashed.diff(indexOnce)} | ${indexOnce.diff(indexCrashed)}")
+    graft.ops.Caches.releaseCaches(); spark.catalog.clearCache()
+  }
+
+  test("streaming novelty: a batch replayed after a crash before its ingest-frontier write appends its rows once") {
+    crashReplay("crash-frontier")(_ => ())
+  }
+
+  test("streaming novelty: a batch replayed after a crash part-way through its move-in appends its rows once") {
+    crashReplay("crash-move") { moved =>
+      assert(moved.size > 1, s"batch 0 must write more than one index file: $moved")
+      moved.zipWithIndex.filter(_._2 % 2 == 1).foreach(f => java.nio.file.Files.delete(f._1))
+    }
   }
 
   test("shingle sweep: planted pairs verify at every k, shingle mass shrinks as k grows") {

@@ -91,6 +91,25 @@ class StreamingScd2Spec extends SparkSpec {
     assert(rows(3).isNullAt(rows(3).fieldIndex("prev_value"))) // key absent before re-insert
   }
 
+  test("one enrichment batch runs the SCD2 apply's jobs plus the enrichment write: the touched buckets are probed once") {
+    import graft.streaming.StreamingEnrich
+    val cl = changelog(120)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_senrj").toString
+    def jobs(batch: DataFrame, batchId: Long): Int = {
+      val group = s"enrich-${System.nanoTime()}"
+      jobProperties {
+        spark.sparkContext.setJobGroup(group, "enrichment batch")
+        try StreamingEnrich.applyBatch(s"$tmp/scd2", s"$tmp/out", nBuckets = 4)(batch, batchId)
+        finally spark.sparkContext.clearJobGroup()
+      }.count(_.getProperty("spark.jobGroup.id") == group)
+    }
+    // per batch: the SCD2 apply (its touched-bucket probe and its
+    // bucketed write), then the enrichment write; the enrichment reuses
+    // the SCD2 apply's touched set, so the batch is probed once
+    val counts = Seq(jobs(cl.filter(col("pos") <= 60), 0L), jobs(cl.filter(col("pos") > 60), 1L))
+    assert(counts == Seq(9, 9), s"jobs per enrichment batch: $counts")
+  }
+
   test("late delete re-closes the interval it lands before") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_sscd2d").toString
     val state = s"$tmp/state"

@@ -84,8 +84,20 @@ object LogPosition {
         uuid -> ivs.flatMap { iv => GtidSet.subtractOne(iv, os) }
       }.filter(_._2.nonEmpty))
 
-    def add(uuid: String, txn: Long): GtidSet =
-      union(GtidSet(Map(uuid -> Vector((txn, txn)))))
+    /** `this ∪ {uuid:txn}`. A txn at or past the end of its uuid's last
+      * interval — a log read in order — extends or appends to that interval
+      * in place, so a run of consecutive txns costs no `union`. */
+    def add(uuid: String, txn: Long): GtidSet = {
+      val ivs = intervals.getOrElse(uuid, Vector.empty)
+      if (ivs.isEmpty) GtidSet(intervals.updated(uuid, Vector((txn, txn))))
+      else {
+        val (a, b) = ivs.last
+        if (txn > b) GtidSet(intervals.updated(uuid,
+          if (txn == b + 1) ivs.updated(ivs.length - 1, (a, txn)) else ivs :+ ((txn, txn))))
+        else if (txn >= a) this
+        else union(GtidSet(Map(uuid -> Vector((txn, txn)))))
+      }
+    }
 
     def txnCount: Long = intervals.valuesIterator.flatten.map { case (a, b) => b - a + 1 }.sum
 

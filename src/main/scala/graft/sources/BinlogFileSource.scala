@@ -46,17 +46,23 @@ import scala.jdk.CollectionConverters._
   *     still applies, up to the transactions logged when the trigger
   *     started
   *
-  * Per-trigger cost is O(unconsumed bytes), not O(log): the driver keeps
-  * two byte cursors that rest on line boundaries — a tail cursor with the
-  * set folded so far ([[BinlogMicroBatchStream.reportLatestOffset]] reads
-  * only what was appended since), and a consumed-prefix cursor with the
-  * set every line before it belongs to (`latestOffset` seeks there when
-  * its start set contains that set, and scans from byte 0 otherwise).
-  * Each batch's partition reads from its first line to the end of the log
-  * as it was when the batch was planned, so every line of a transaction
-  * the batch takes is read even when `maxPerBatch` cut the scan inside
-  * it. Only complete `\n`-terminated lines are read, so a line a writer
-  * is still appending is left for a later trigger.
+  * A fresh instance reads the log once; each later trigger reads only
+  * bytes no batch has consumed yet. The driver keeps two byte cursors
+  * that rest on line boundaries — a tail cursor with the set folded so
+  * far ([[BinlogMicroBatchStream.reportLatestOffset]] reads only past
+  * it), and a consumed-prefix cursor with the set every line before it
+  * belongs to (`latestOffset` seeks there when its start set contains
+  * that set, and scans from byte 0 otherwise). Once `latestOffset`'s scan
+  * passes the tail cursor, it folds the lines it reads into the tail, so
+  * on a fresh instance `reportLatestOffset` reads only what lies past the
+  * cap point. Scans find each line's gtid in its bytes
+  * ([[BinlogFileSource.LogLines]]); only a line a batch emits is decoded
+  * and split into fields. Each batch's partition reads from its first
+  * line to the end of the log as it was when the batch was planned, so
+  * every line of a transaction the batch takes is read even when
+  * `maxPerBatch` cut the scan inside it. Only complete `\n`-terminated
+  * lines are read, so a line a writer is still appending is left for a
+  * later trigger.
   *
   * The log is append-only. A cursor is reused only while the line that
   * ends at it is still in place; when a truncation or a rewrite moved or
@@ -122,30 +128,23 @@ object BinlogFileSource {
     s"$pos,$tbl,$pk,$op,$tsMs,$value,$gtidUuid:$gtidTxn,$payloadJson"
   }
 
-  /** (uuid, txn) of one log line: field 7 if present, else the synthetic
-    * file-position transaction.
-    */
-  private[sources] def gtidOf(parts: Array[String]): (String, Long) =
-    if (parts.length >= 7 && parts(6).nonEmpty) {
-      val i = parts(6).lastIndexOf(':')
-      (parts(6).substring(0, i), parts(6).substring(i + 1).toLong)
-    } else (FileposUuid, parts(0).toLong + 1L)
-
   /** Field count before the payload tail — the split limit. */
   private[sources] val NFields = 8
 
-  /** Whether `line` and its `\n` are the bytes that end at `at` in a log
-    * of `size` bytes — the check a cursor passes before it is reused.
+  /** Whether `line` (its `\n` included) is the bytes that end at `at` in
+    * a log of `size` bytes — the check a cursor passes before it is reused.
     */
-  private[sources] def endsWithLine(path: String, size: Long, at: Long, line: String): Boolean = {
-    val want = (line + "\n").getBytes(StandardCharsets.UTF_8)
-    at <= size && at >= want.length && {
-      val got = ByteBuffer.allocate(want.length)
+  private[sources] def endsWithLine(path: String, size: Long, at: Long, line: Array[Byte]): Boolean =
+    at <= size && at >= line.length && {
       val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
-      try while (got.hasRemaining && ch.read(got, at - want.length + got.position()) > 0) {}
-      finally ch.close()
-      java.util.Arrays.equals(got.array(), want)
+      try java.util.Arrays.equals(readFully(ch, at - line.length, at), line) finally ch.close()
     }
+
+  /** Bytes `[from, until)` of `ch`. */
+  private def readFully(ch: FileChannel, from: Long, until: Long): Array[Byte] = {
+    val got = ByteBuffer.allocate((until - from).toInt)
+    while (got.hasRemaining && ch.read(got, from + got.position()) > 0) {}
+    got.array()
   }
 
   /** Bytes in the log now; 0 before the file exists. */
@@ -154,62 +153,126 @@ object BinlogFileSource {
     if (Files.exists(p)) Files.size(p) else 0L
   }
 
-  /** The complete `\n`-terminated lines of `path` in the byte range
-    * `[from, until)`, read forward once. A trailing line without its `\n`
-    * (a writer mid-append) is never returned. `lineStart` and `end` bound
-    * the last line returned, so a cursor taken from `end` always rests on
-    * a line boundary; `line` is that line.
+  /** A forward scan over the complete `\n`-terminated lines of `path` in the
+    * byte range `[from, until)`. A trailing line without its `\n` (a writer
+    * mid-append) is never returned.
+    *
+    * [[next]] finds each line's gtid in the bytes: field 6 (between the 6th
+    * and 7th comma, or to the end of the line) split at its last `:`, else
+    * the synthetic file-position transaction `pos + 1`. Nothing else of the
+    * line is decoded; [[text]] decodes the current line for a caller that
+    * needs its fields. The uuid `String` is reused while its bytes repeat.
     */
-  private[sources] final class LogLines(path: String, from: Long, until: Long)
-    extends Iterator[String] with AutoCloseable {
+  private[graft] final class LogLines(path: String, from: Long, until: Long) extends AutoCloseable {
     private val ch =
       if (from < until) FileChannel.open(Paths.get(path), StandardOpenOption.READ) else null
     private var buf = new Array[Byte](1 << 16)
-    private var lo = 0 // buf[lo, hi) is read from the file but not yet returned
+    private var ls = 0 // buf[ls, lo) is the current line and its `\n`
+    private var lo = 0 // buf[lo, hi) is read from the file but not yet scanned
     private var hi = 0
     private var readAt = from // file offset of buf(hi)
-    private var pending: String = null
-    private var pendingEnd = from
+    private var uuidBytes = Array.emptyByteArray
+    private var uuidText: String = null // decoded `uuidBytes`
+    /** File offsets of the current line's first byte and of the byte past
+      * its `\n`; both stay at `from` until a line is read, so a cursor taken
+      * from `end` always rests on a line boundary. */
     var lineStart: Long = from
     var end: Long = from
-    var line: String = null
+    /** The current line's gtid. */
+    var uuid: String = null
+    var txn: Long = 0L
 
-    override def hasNext: Boolean = pending != null || { pending = readLine(); pending != null }
-
-    override def next(): String = {
-      if (!hasNext) throw new NoSuchElementException("no complete line left")
-      val l = pending
-      pending = null
-      lineStart = end
-      end = pendingEnd
-      line = l
-      l
-    }
-
-    private def readLine(): String = {
+    /** Moves to the next complete line and reads its gtid; false when no
+      * complete line is left. */
+    def next(): Boolean = {
       var scan = lo
       while (true) {
-        while (scan < hi) {
-          if (buf(scan) == '\n') {
-            val l = new String(buf, lo, scan - lo, StandardCharsets.UTF_8)
-            pendingEnd = readAt - hi + scan + 1
-            lo = scan + 1
-            return l
-          }
-          scan += 1
+        while (scan < hi && buf(scan) != '\n') scan += 1
+        if (scan < hi) {
+          ls = lo
+          lo = scan + 1
+          lineStart = end
+          end = readAt - hi + lo
+          readGtid(scan)
+          return true
         }
-        if (readAt >= until) return null
-        if (lo > 0) {
-          System.arraycopy(buf, lo, buf, 0, hi - lo)
-          scan -= lo; hi -= lo; lo = 0
+        if (readAt >= until) return false
+        if (ls > 0) { // keep the current line: `lineBytes` may still want it
+          System.arraycopy(buf, ls, buf, 0, hi - ls)
+          scan -= ls; lo -= ls; hi -= ls; ls = 0
         }
         if (hi == buf.length) buf = java.util.Arrays.copyOf(buf, 2 * buf.length)
         val n = ch.read(ByteBuffer.wrap(buf, hi, math.min(buf.length - hi, until - readAt).toInt), readAt)
-        if (n <= 0) return null
+        if (n <= 0) return false
         hi += n; readAt += n
       }
-      null
+      false
     }
+
+    /** The current line, decoded, without its `\n`. */
+    def text: String = new String(buf, ls, lo - 1 - ls, StandardCharsets.UTF_8)
+
+    /** The bytes of a line this scan read, `[start, stop)` in the file, its
+      * `\n` included. */
+    def lineBytes(start: Long, stop: Long): Array[Byte] = {
+      val base = readAt - hi // file offset of buf(0)
+      if (start >= base) java.util.Arrays.copyOfRange(buf, (start - base).toInt, (stop - base).toInt)
+      else readFully(ch, start, stop)
+    }
+
+    /** The gtid of the line `buf[ls, nl)`. */
+    private def readGtid(nl: Int): Unit = {
+      var i = ls
+      var commas = 0
+      var posEnd = nl // field 0 is `[ls, posEnd)`
+      var gtidStart = -1 // field 6 is `[gtidStart, gtidEnd)`
+      while (i < nl && commas < NFields - 1) {
+        if (buf(i) == ',') {
+          commas += 1
+          if (commas == 1) posEnd = i
+          if (commas == 6) gtidStart = i + 1
+        }
+        i += 1
+      }
+      val gtidEnd = if (commas == NFields - 1) i - 1 else nl
+      if (gtidStart >= 0 && gtidEnd > gtidStart) {
+        var colon = gtidEnd - 1
+        while (colon >= gtidStart && buf(colon) != ':') colon -= 1
+        if (colon < gtidStart) malformed(s"gtid '${decode(gtidStart, gtidEnd)}' has no ':'")
+        uuid = uuidOf(gtidStart, colon)
+        txn = number(colon + 1, gtidEnd, "gtid txn")
+      } else {
+        uuid = FileposUuid
+        txn = number(ls, posEnd, "pos") + 1L
+      }
+    }
+
+    private def uuidOf(start: Int, stop: Int): String = {
+      if (uuidText == null || !java.util.Arrays.equals(buf, start, stop, uuidBytes, 0, uuidBytes.length)) {
+        uuidBytes = java.util.Arrays.copyOfRange(buf, start, stop)
+        uuidText = new String(uuidBytes, StandardCharsets.UTF_8)
+      }
+      uuidText
+    }
+
+    /** `buf[start, stop)` as a `Long`, parsed as `String.toLong` parses it. */
+    private def number(start: Int, stop: Int, what: String): Long = {
+      var v = 0L
+      var i = start
+      while (i < stop && i - start < 18 && buf(i) >= '0' && buf(i) <= '9') {
+        v = v * 10 + (buf(i) - '0')
+        i += 1
+      }
+      if (i == stop && stop > start) v
+      else try java.lang.Long.parseLong(decode(start, stop)) catch {
+        case _: NumberFormatException => malformed(s"$what '${decode(start, stop)}' is not a number")
+      }
+    }
+
+    private def decode(start: Int, stop: Int): String = new String(buf, start, stop - start, StandardCharsets.UTF_8)
+
+    private def malformed(what: String): Nothing =
+      throw new IllegalArgumentException(s"graft-binlog: malformed line at byte $lineStart of $path: $what")
 
     override def close(): Unit = if (ch != null) ch.close()
   }
@@ -247,24 +310,29 @@ private[sources] class BinlogMicroBatchStream(path: String, maxPerBatch: Long, s
   extends MicroBatchStream with SupportsTriggerAvailableNow {
   import BinlogFileSource.{LogLines, endsWithLine, logSize}
 
-  /** A line boundary `at`, the line that ends there (`""` at byte 0) and a
-    * set every line before `at` belongs to. */
-  private case class Cursor(at: Long, last: String, gtids: GtidSet) {
+  /** A line boundary `at`, the bytes of the line that ends there (empty at
+    * byte 0) and a set every line before `at` belongs to. */
+  private case class Cursor(at: Long, last: Array[Byte], gtids: GtidSet) {
     /** Whether the log of `size` bytes still holds the lines this cursor
       * passed (checked by the line that ends at `at`). */
     def holds(size: Long): Boolean = at == 0L || endsWithLine(path, size, at, last)
   }
 
-  /** The cursor just past the last line `lines` returned. */
-  private def cursorAt(lines: LogLines, gtids: GtidSet): Cursor = Cursor(lines.end, lines.line, gtids)
+  /** The cursor at byte 0 with the set `gtids`. */
+  private def origin(gtids: GtidSet): Cursor = Cursor(0L, Array.emptyByteArray, gtids)
+
+  /** `here` with the set `gtids` when `at` is `here.at`; else the cursor
+    * just past the line `lines` read in `[start, at)`. */
+  private def cursorAt(lines: LogLines, start: Long, at: Long, gtids: GtidSet, here: Cursor): Cursor =
+    if (at == here.at) here.copy(gtids = gtids) else Cursor(at, lines.lineBytes(start, at), gtids)
 
   /** `startGtids` ∪ every line before `at`: where [[reportLatestOffset]]
     * resumes its fold. */
-  private var tail = Cursor(0L, "", startGtids)
+  private var tail = origin(startGtids)
 
   /** Every line before `at` is in `gtids`, so a `latestOffset` whose
     * start contains `gtids` has nothing to take before `at`. */
-  private var prefix = Cursor(0L, "", GtidSet.empty)
+  private var prefix = origin(GtidSet.empty)
 
   /** (start, end, from, to) of the last batch `latestOffset` chose: its
     * lines lie in the byte range `[from, to)`, `to` being the log's size
@@ -292,6 +360,8 @@ private[sources] class BinlogMicroBatchStream(path: String, maxPerBatch: Long, s
     * counter — decides what is new). The scan starts at the consumed
     * prefix when `start` contains the set it was proven under, and at
     * byte 0 otherwise (a fresh instance, a truncated or rewritten log).
+    * Once the scan passes the tail cursor, the lines it reads are folded
+    * into the tail too, so [[reportLatestOffset]] does not read them again.
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[GtidOffset].gtids
@@ -300,23 +370,35 @@ private[sources] class BinlogMicroBatchStream(path: String, maxPerBatch: Long, s
       case _ => Long.MaxValue
     }
     val size = logSize(path)
-    if (!prefix.gtids.isSubsetOf(s) || !prefix.holds(size)) prefix = Cursor(0L, "", GtidSet.empty)
+    if (!prefix.gtids.isSubsetOf(s) || !prefix.holds(size)) prefix = origin(GtidSet.empty)
+    if (!tail.holds(size)) tail = origin(startGtids)
     val lines = new LogLines(path, prefix.at, size)
     try {
       var end = s
       var taken = 0L
       var from = -1L
-      var covered = prefix // every line before `covered.at` is in `end`
-      while (taken < cap && lines.hasNext) {
-        val (uuid, txn) = BinlogFileSource.gtidOf(lines.next().split(",", BinlogFileSource.NFields))
-        if (!end.contains(uuid, txn) && availableNowEnd.forall(_.contains(uuid, txn))) {
+      var covered = prefix.at // every line before `covered` is in `end`
+      var coveredStart = prefix.at
+      var folded = if (tail.at == prefix.at) tail.gtids else null // the tail's set, once the scan reaches it
+      while (taken < cap && lines.next()) {
+        val uuid = lines.uuid
+        val txn = lines.txn
+        var in = end.contains(uuid, txn)
+        if (!in && availableNowEnd.forall(_.contains(uuid, txn))) {
           end = end.add(uuid, txn)
+          in = true
           taken += 1
           if (from < 0) from = lines.lineStart
         }
-        if (covered.at == lines.lineStart && end.contains(uuid, txn)) covered = cursorAt(lines, end)
+        if (in && covered == lines.lineStart) {
+          coveredStart = covered
+          covered = lines.end
+        }
+        if (folded != null) folded = folded.add(uuid, txn)
+        else if (lines.end == tail.at) folded = tail.gtids
       }
-      prefix = covered.copy(gtids = end)
+      prefix = cursorAt(lines, coveredStart, covered, end, prefix)
+      if (folded != null) tail = cursorAt(lines, lines.lineStart, lines.end, folded, tail)
       // the cap may stop the scan on a transaction's first line: its later
       // lines lie past `lines.end`, so the batch reads to `size`
       if (taken > 0) planned = Some((s, end, from, size))
@@ -327,18 +409,16 @@ private[sources] class BinlogMicroBatchStream(path: String, maxPerBatch: Long, s
   override def getDefaultReadLimit: ReadLimit =
     if (maxPerBatch == Long.MaxValue) ReadLimit.allAvailable() else ReadLimit.maxRows(maxPerBatch)
 
-  /** `startGtids` ∪ every complete line, folding only the bytes appended
-    * since the last call. */
+  /** `startGtids` ∪ every complete line, folding only the bytes past the
+    * tail cursor. */
   override def reportLatestOffset(): Offset = {
     val size = logSize(path)
-    val from = if (tail.holds(size)) tail else Cursor(0L, "", startGtids)
-    val lines = new LogLines(path, from.at, size)
+    if (!tail.holds(size)) tail = origin(startGtids)
+    val lines = new LogLines(path, tail.at, size)
     try {
-      val gtids = lines.foldLeft(from.gtids) { (acc, l) =>
-        val (uuid, txn) = BinlogFileSource.gtidOf(l.split(",", BinlogFileSource.NFields))
-        acc.add(uuid, txn)
-      }
-      tail = if (lines.line == null) from else cursorAt(lines, gtids)
+      var gtids = tail.gtids
+      while (lines.next()) gtids = gtids.add(lines.uuid, lines.txn)
+      tail = cursorAt(lines, lines.lineStart, lines.end, gtids, tail)
     } finally lines.close()
     GtidOffset(tail.gtids)
   }
@@ -381,10 +461,9 @@ private[sources] class BinlogReaderFactory extends PartitionReaderFactory {
       private val lines = new BinlogFileSource.LogLines(p.path, p.from, p.to)
       private var current: InternalRow = _
       override def next(): Boolean = {
-        while (lines.hasNext) {
-          val parts = lines.next().split(",", BinlogFileSource.NFields)
-          val (uuid, txn) = BinlogFileSource.gtidOf(parts)
-          if (delta.contains(uuid, txn)) {
+        while (lines.next()) {
+          if (delta.contains(lines.uuid, lines.txn)) {
+            val parts = lines.text.split(",", BinlogFileSource.NFields)
             current = InternalRow(
               UTF8String.fromString(parts(1)),
               parts(2).toLong,
@@ -392,7 +471,7 @@ private[sources] class BinlogReaderFactory extends PartitionReaderFactory {
               parts(4).toLong,
               parts(0).toLong,
               parts(5).toDouble,
-              UTF8String.fromString(s"$uuid:$txn"),
+              UTF8String.fromString(s"${lines.uuid}:${lines.txn}"),
               if (parts.length >= 8) UTF8String.fromString(parts(7)) else null)
             return true
           }

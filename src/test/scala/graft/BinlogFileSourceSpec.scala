@@ -10,6 +10,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
@@ -57,6 +58,106 @@ class BinlogFileSourceSpec extends SparkSpec {
 
   private def appendBytes(path: String, bytes: Array[Byte]): Unit =
     Files.write(Paths.get(path), bytes, StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+
+  /** The split-based parse of a line's gtid — field 6 split at its last
+    * `:`, else the file-position transaction `pos + 1` — the reference the
+    * source's byte scan must agree with. */
+  private def gtidOf(line: String): (String, Long) = {
+    val parts = line.split(",", 8)
+    if (parts.length >= 7 && parts(6).nonEmpty) {
+      val i = parts(6).lastIndexOf(':')
+      (parts(6).substring(0, i), parts(6).substring(i + 1).toLong)
+    } else (BinlogFileSource.FileposUuid, parts(0).toLong + 1L)
+  }
+
+  /** Overwrites `bytes.length` bytes of `path` at `at` in place. */
+  private def overwrite(path: String, at: Long, bytes: Array[Byte]): Unit = {
+    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.WRITE)
+    try ch.write(ByteBuffer.wrap(bytes), at) finally ch.close()
+  }
+
+  test("the byte scan reads the same (uuid, txn) as the split-based parse, line for line") {
+    val tables = Seq("t0", "tä", "表_orders")
+    val uuids = Seq("a", "3E11FA47-71CA-11E1-9E33-C80AA9429562", "ü∂-源", "host:port", "")
+    val payloads = Seq("", "{}", """{"k": "a,b:c", "n": [1, 2]}""", "naïve, 日本語: ok", ",,::,")
+    for (seed <- 1 to 6) {
+      val rnd = new scala.util.Random(seed)
+      val dir = Files.createTempDirectory("graft_src_kernel").toString
+      val log = s"$dir/changelog.log"
+      var uuid = uuids.head
+      var txn = 0L
+      // enough lines to cross the scan's 64 KiB buffer several times
+      val lines = (0 until 3000).map { i =>
+        if (rnd.nextInt(6) == 0) uuid = uuids(rnd.nextInt(uuids.size)) // a uuid switch
+        if (rnd.nextInt(3) != 0) txn += 1 // else one more row of the same transaction
+        val pad = "0" * rnd.nextInt(3) // txns such as 007
+        val head = s"$i,${tables(rnd.nextInt(tables.size))},${rnd.nextInt(50)},U,$i,${i * 0.5}"
+        rnd.nextInt(6) match {
+          case 0 => head // a narrow 6-field line
+          case 1 => s"$head," // an empty gtid field
+          case 2 => s"$head,,${payloads(rnd.nextInt(payloads.size))}" // an empty gtid field and a payload
+          case 3 => s"$head,$uuid:$pad$txn"
+          case _ => s"$head,$uuid:$pad$txn,${payloads(rnd.nextInt(payloads.size))}"
+        }
+      }
+      Files.write(Paths.get(log), lines.map(_ + "\n").mkString.getBytes(StandardCharsets.UTF_8))
+      val scan = new BinlogFileSource.LogLines(log, 0L, Files.size(Paths.get(log)))
+      try {
+        var at = 0L
+        for (l <- lines) {
+          assert(scan.next(), s"seed $seed: scan ended before $l")
+          assert((scan.uuid, scan.txn) == gtidOf(l), s"seed $seed: $l")
+          assert(scan.text == l && scan.lineStart == at, s"seed $seed: $l")
+          at += l.getBytes(StandardCharsets.UTF_8).length + 1
+          assert(scan.end == at, s"seed $seed: $l")
+        }
+        assert(!scan.next())
+      } finally scan.close()
+    }
+  }
+
+  private val goodLines = (1L to 2L).map(i => BinlogFileSource.renderLine("t0", i, "I", 1000L * i, i, 1.0, "a", i))
+
+  /** A fresh instance's `latestOffset` and `reportLatestOffset` both fail on
+    * `bad`, the line after `goodLines`, naming the log, the line's byte
+    * offset and `why`. */
+  private def failsOn(dirPrefix: String, bad: String, why: String): Unit = {
+    val log = s"${Files.createTempDirectory(dirPrefix)}/changelog.log"
+    writeLines(log, goodLines :+ bad)
+    for (call <- Seq[Stream => Offset](s => s.latestOffset(s.initialOffset(), limit(Long.MaxValue)),
+                                       _.reportLatestOffset())) {
+      val e = intercept[IllegalArgumentException](call(stream(log)))
+      assert(e.getMessage.contains(log) && e.getMessage.contains(s"byte ${goodLines.map(_.length + 1).sum}"),
+        e.getMessage)
+      assert(e.getMessage.contains(why), e.getMessage)
+    }
+  }
+
+  test("a gtid field without ':' fails the trigger with the log path and the line's byte offset") {
+    failsOn("graft_src_nocolon", "3,t0,3,I,3000,3.0,a3,{}", "gtid 'a3' has no ':'")
+  }
+
+  test("a non-numeric gtid txn fails the trigger with the log path and the line's byte offset") {
+    failsOn("graft_src_badtxn", "3,t0,3,I,3000,3.0,a:3x", "gtid txn '3x' is not a number")
+  }
+
+  test("a fresh instance reads the log once: after a capped latestOffset, reportLatestOffset reads only past the cap") {
+    val dir = Files.createTempDirectory("graft_src_once").toString
+    val log = s"$dir/changelog.log"
+    val lines = (1L to 20L).map(i => BinlogFileSource.renderLine("t0", i, "I", 1000L * i, i, i * 1.0, "a", i))
+    writeLines(log, lines)
+    val s = stream(log, "a:1-5")
+    val o0 = s.initialOffset()
+    val o1 = s.latestOffset(o0, limit(4))
+    assert(o1.json == "a:1-9")
+    // line a:3 lies before the cap point: garble it in place
+    overwrite(log, lines.take(2).map(_.length + 1).sum.toLong, Array.fill(lines(2).length)('#'.toByte))
+    assert(s.reportLatestOffset().json == "a:1-20")
+    assert(rows(s, o0, o1) == (6L to 9L).map(i => i -> s"a:$i"))
+    val o2 = s.latestOffset(o1, limit(Long.MaxValue))
+    assert(o2.json == "a:1-20")
+    assert(rows(s, o1, o2) == (10L to 20L).map(i => i -> s"a:$i"))
+  }
 
   test("a torn trailing line stays out of the offset until its newline lands, then streams once") {
     val dir = Files.createTempDirectory("graft_src_torn").toString

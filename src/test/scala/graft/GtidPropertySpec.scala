@@ -62,4 +62,26 @@ class GtidPropertySpec extends AnyFunSuite {
         s"a=$a b=$b inter=$inter")
     }
   }
+
+  test("add ≡ union with the one-txn set, in order, out of order and on a new uuid") {
+    for (i <- 0 until 30) {
+      val rnd = new scala.util.Random(900L + i)
+      val base = genSet(Gen.Parameters.default, Seed(100L + i)).get
+      // mostly runs that extend the last interval, with jumps, repeats and stragglers
+      val adds = (0 until 60).scanLeft(("U1", 1L)) { case ((u, t), _) =>
+        rnd.nextInt(8) match {
+          case 0 => (uuids(rnd.nextInt(uuids.size)) + (if (rnd.nextBoolean()) "" else "x"), 1L + rnd.nextInt(80))
+          case 1 => (u, t + 2 + rnd.nextInt(5))
+          case 2 => (u, t)
+          case _ => (u, t + 1)
+        }
+      }
+      adds.foldLeft(base) { case (acc, (u, t)) =>
+        val got = acc.add(u, t)
+        val want = acc.union(GtidSet(Map(u -> Vector((t, t)))))
+        assert(got == want && got.toString == want.toString, s"$acc + $u:$t")
+        got
+      }
+    }
+  }
 }

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 /** Dev measurement main (round-12 directive #6): merge cost of the
   * incremental-maintenance paths vs PREFIX artifact size at FIXED batch
   * size — the delta-bounded claim is that the cluster merge is (nearly)
-  * independent of |corpus|, while the exact kNN merge carries its |C|
-  * term and the ANN-assisted merge carries nprobe/nlist of it. The 1×
+  * independent of |corpus|, while the exact kNN merge (the one-cell
+  * index) carries its |C| term and the ANN-assisted merge carries
+  * nprobe/nlist of it. The 1×
   * prefix is built from sf0.01, the 10× prefix from sf0.1 (same
   * generator); min of 2 runs on fresh hardlinked artifacts per
   * measurement.
@@ -73,27 +74,20 @@ object PrefixScale {
           batchDocs, 0.5, 0L)
         ()
       }
-      // exact kNN merge (the |C| term, by design)
-      val (pv, pk) = ops.Similarity.buildKnnMaintPrefix(
-        spark, embOf(sf), 10, graft.Scratch.dir(s"ps-knn-$label"))
-      out(s"knn_exact_merge_$label") = minOf2 {
-        val r = graft.Scratch.dir(s"ps-knn-run-$label")
-        ops.BucketSwap.linkTree(pv, s"$r/vectors")
-        ops.BucketSwap.linkTree(pk, s"$r/knn")
-        ops.Similarity.maintainKnnGraph(spark, s"$r/vectors", s"$r/knn",
-          batchVec, 10, 0L)
-        ()
-      }
-      // ANN-assisted kNN merge (nprobe/nlist of the |C| term)
-      val (pc, pcl, pk2) = ops.Similarity.buildIvfKnnMaintPrefix(
-        spark, embOf(sf), 10, 32, graft.Scratch.dir(s"ps-ann-$label"))
-      out(s"knn_ann_merge_$label") = minOf2 {
-        val r = graft.Scratch.dir(s"ps-ann-run-$label")
-        ops.BucketSwap.linkTree(pcl, s"$r/cells")
-        ops.BucketSwap.linkTree(pk2, s"$r/knn")
-        ops.Similarity.maintainKnnGraphAnn(spark, pc, s"$r/cells", s"$r/knn",
-          batchVec, 10, 4, 0L)
-        ()
+      // kNN merges: exact (one-cell index — the |C| term, by design)
+      // and ANN-assisted (nprobe/nlist of the |C| term)
+      Seq(("knn_exact_merge", 1, 1), ("knn_ann_merge", 32, 4)).foreach {
+        case (fam, nlist, nprobe) =>
+          val (pc, pcl, pk) = ops.Similarity.buildIvfKnnMaintPrefix(
+            spark, embOf(sf), 10, nlist, graft.Scratch.dir(s"ps-$fam-$label"))
+          out(s"${fam}_$label") = minOf2 {
+            val r = graft.Scratch.dir(s"ps-$fam-run-$label")
+            ops.BucketSwap.linkTree(pcl, s"$r/cells")
+            ops.BucketSwap.linkTree(pk, s"$r/knn")
+            ops.Similarity.maintainKnnGraph(spark, spark.read.parquet(pc),
+              s"$r/cells", s"$r/knn", batchVec, 10, nprobe, 0L)
+            ()
+          }
       }
       Harness.release(spark)
     }

@@ -331,27 +331,19 @@ object SparkEntry {
         t(s, dir, "documents").select(col("doc_id"), col("text")), 0.5,
         scratchDir("graft_cm_prefix")))
 
-  /** Prefix state for the kNN-maintenance exercise ([[maintPrefix]]'s
-    * ANN-family twin): vector table + from-scratch kNN artifact, built
-    * once per process per sfDir and copied per invocation. */
-  private val knnMaintPrefixCache = scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-  private def knnMaintPrefix(s: SparkSession, dir: String): (String, String) =
-    knnMaintPrefixCache.getOrElseUpdate(dir,
-      ops.Similarity.buildKnnMaintPrefix(s,
-        t(s, dir, "embeddings"), 10,
-        scratchDir("graft_knn_prefix")))
-
-  /** Prefix state for the ANN-assisted kNN-maintenance exercise: the
-    * persisted IVF index (centroid table + cell-partitioned vector
-    * layout) + kNN graph over the first 4/5 of the id space, built once
-    * per process per sfDir; the query hardlinks the mutable artifacts
-    * per invocation. */
-  private val ivfMaintPrefixCache = scala.collection.concurrent.TrieMap.empty[String, (String, String, String)]
-  private def ivfMaintPrefix(s: SparkSession, dir: String): (String, String, String) =
-    ivfMaintPrefixCache.getOrElseUpdate(dir,
+  /** Prefix state for the kNN-maintenance exercises ([[maintPrefix]]'s
+    * ANN-family twin): the persisted IVF index (centroid table +
+    * cell-partitioned vector layout) + kNN graph over the first 4/5 of
+    * the id space, built once per process per (sfDir, nlist); the
+    * queries hardlink the mutable artifacts per invocation. nlist = 1
+    * is the exact entries' one-cell index. */
+  private val ivfMaintPrefixCache =
+    scala.collection.concurrent.TrieMap.empty[(String, Int), (String, String, String)]
+  private def ivfMaintPrefix(s: SparkSession, dir: String, nlist: Int): (String, String, String) =
+    ivfMaintPrefixCache.getOrElseUpdate((dir, nlist),
       ops.Similarity.buildIvfKnnMaintPrefix(s,
-        t(s, dir, "embeddings"), 10, 32,
-        scratchDir("graft_ivf_prefix")))
+        t(s, dir, "embeddings"), 10, nlist,
+        scratchDir(s"graft_ivf_prefix_$nlist")))
 
   /** Event chunks with every row duplicated IN-chunk and the previous
     * chunk's tail replayed at the next chunk's head — the adversarial
@@ -416,38 +408,39 @@ object SparkEntry {
         })
     })
 
-  /** Suffix vectors (vec_id past the kNN-maintenance prefix cut) as two
-    * ordered chunk files — the ingest feed for `emb_knn_stream`. Built
-    * once per process per sfDir. */
-  private val knnChunkCache = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def knnChunks(s: SparkSession, dir: String): String =
-    knnChunkCache.getOrElseUpdate(dir, {
-      val emb = t(s, dir, "embeddings")
-      val mx = emb.agg(max(col("vec_id"))).head().getLong(0)
-      val cut0 = (mx + 1) * 3 / 5
-      val cut1 = (mx + 1) * 4 / 5
-      Bounded.writeChunks(s"${scratchDir("graft_knnchunks")}/chunks",
-        Seq((cut0, cut1), (cut1, mx + 1)).map { case (lo, hi) =>
-          emb.filter(col("vec_id") >= lo && col("vec_id") < hi)
-        })
-    })
-
-  /** Suffix vectors past the IVF-maintenance prefix cut (4/5 of the id
+  /** Suffix vectors past the kNN-maintenance prefix cut (4/5 of the id
     * space) as two ordered chunk files — the ingest feed for
-    * `emb_knn_stream_ann`, split at 9/10 to match the oracle's two
+    * `emb_knn_stream(_ann)`, split at 9/10 to match the oracle's two
     * unrolled merges. Built once per process per sfDir. */
-  private val annChunkCache = scala.collection.concurrent.TrieMap.empty[String, String]
+  private val knnChunkCache = scala.collection.concurrent.TrieMap.empty[String, String]
   private def annChunks(s: SparkSession, dir: String): String =
-    annChunkCache.getOrElseUpdate(dir, {
+    knnChunkCache.getOrElseUpdate(dir, {
       val emb = t(s, dir, "embeddings")
       val mx = emb.agg(max(col("vec_id"))).head().getLong(0)
       val cut = (mx + 1) * 4 / 5
       val mid = (mx + 1) * 9 / 10
-      Bounded.writeChunks(s"${scratchDir("graft_annchunks")}/chunks",
+      Bounded.writeChunks(s"${scratchDir("graft_knnchunks")}/chunks",
         Seq((cut, mid), (mid, mx + 1)).map { case (lo, hi) =>
           emb.filter(col("vec_id") >= lo && col("vec_id") < hi)
         })
     })
+
+  /** Streams [[annChunks]] through [[ops.Similarity.streamingAnnIngest]]
+    * into hardlinked copies of the (dir, nlist) prefix; returns the
+    * maintained graph. */
+  private def knnStream(s: SparkSession, dir: String, nlist: Int, nprobe: Int): DataFrame = {
+    val (cents, cells0, knn0) = ivfMaintPrefix(s, dir, nlist)
+    val root = scratchDir("graft_knn_stream")
+    val cells = s"$root/cells"; val map = s"$root/knn"
+    ops.BucketSwap.linkTree(cells0, cells)
+    ops.BucketSwap.linkTree(knn0, map)
+    val chunks = annChunks(s, dir)
+    ops.Similarity.streamingAnnIngest(s, chunks, chunkSchema(s, chunks), cents, cells, map,
+      10, nprobe, s"$root/ckpt")
+    s.read.parquet(map)
+      .select(col("anchor_id"), col("neighbor_id"), col("cosine"), col("rank"))
+      .orderBy(col("anchor_id"), col("rank"))
+  }
 
   /** A LIVE in-JVM Derby database holding the normalized changelog — the
     * upstream server the graft-jdbc-cdc source tails. Loaded once per
@@ -1603,60 +1596,35 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
     // Incremental kNN-graph maintenance: the ANN-family twin of the
-    // cluster-map merge (same artifact/frontier/aside-swap devices);
-    // oracle = the from-scratch kNN rebuild
+    // cluster-map merge (same artifact/frontier/aside-swap devices).
+    // Exact = the IVF merge over a one-cell index (nlist = nprobe = 1:
+    // the probe covers every vector); oracle = the from-scratch rebuild
     "emb_knn_maintenance" -> ((s, dir) => {
-      val (vec, map) = knnMaintPrefix(s, dir)
-      ops.Similarity.knnMaintenanceRun(s,
-        t(s, dir, "embeddings"), 10, vec, map)
+      val (cents, cells, knn) = ivfMaintPrefix(s, dir, 1)
+      ops.Similarity.annMaintenanceRun(s,
+        t(s, dir, "embeddings"), 10, 1, cents, cells, knn)
     }),
     // ANN-assisted maintenance (round-12 directive #1): the scored pass
-    // probes the persisted IVF index for candidate cells and reads ONLY
-    // those cell partitions, instead of scanning the full vector table —
-    // the 1e9-vector shape. Output = per-anchor recall@k of the
+    // probes 4 of the index's 32 cells and reads ONLY those cell
+    // partitions, instead of scanning the full vector table — the
+    // 1e9-vector shape. Output = per-anchor recall@k of the
     // ANN-maintained graph vs the exact from-scratch rebuild (the
     // ann_*_recall audit shape); the oracle unrolls the whole
     // deterministic merge, so the gate proves the ANN path end-to-end
     "emb_knn_maintenance_ann" -> ((s, dir) => {
-      val (cents, cells, knn) = ivfMaintPrefix(s, dir)
-      ops.Similarity.annMaintenanceRun(s,
-        t(s, dir, "embeddings"), 10, 4, cents, cells, knn)
+      val (cents, cells, knn) = ivfMaintPrefix(s, dir, 32)
+      val emb = t(s, dir, "embeddings")
+      ops.Similarity.knnRecallAudit(
+        ops.Similarity.annMaintenanceRun(s, emb, 10, 4, cents, cells, knn), emb, 10)
     }),
     // Streaming vector ingestion over the same maintenance path: one
     // chunk file per micro-batch merges into the kNN artifact through
-    // foreachBatch (replay-absorbing frontiers); same rebuild oracle
-    "emb_knn_stream" -> ((s, dir) => {
-      val (vec0, map0) = knnMaintPrefix(s, dir)
-      val root = scratchDir("graft_knn_stream")
-      val vec = s"$root/vectors"; val map = s"$root/knn"
-      ops.BucketSwap.linkTree(vec0, vec)
-      ops.BucketSwap.linkTree(map0, map)
-      val chunks = knnChunks(s, dir)
-      val schema = chunkSchema(s, chunks)
-      ops.Similarity.streamingKnnIngest(s, chunks, schema, vec, map, 10, s"$root/ckpt")
-      s.read.parquet(map)
-        .select(col("anchor_id"), col("neighbor_id"), col("cosine"), col("rank"))
-        .orderBy(col("anchor_id"), col("rank"))
-    }),
-
-    // Streaming vector ingestion through the ANN-assisted merge: the
-    // batch/stream x exact/ANN maintenance matrix's fourth cell — each
-    // micro-batch probes the persisted IVF index and scores only the
-    // probed cell partitions; oracle unrolls both sequential merges
-    "emb_knn_stream_ann" -> ((s, dir) => {
-      val (cents, cells0, knn0) = ivfMaintPrefix(s, dir)
-      val root = scratchDir("graft_ann_stream")
-      val cells = s"$root/cells"; val map = s"$root/knn"
-      ops.BucketSwap.linkTree(cells0, cells)
-      ops.BucketSwap.linkTree(knn0, map)
-      val chunks = annChunks(s, dir)
-      val schema = chunkSchema(s, chunks)
-      ops.Similarity.streamingAnnIngest(s, chunks, schema, cents, cells, map,
-        10, 4, s"$root/ckpt")
-      s.read.parquet(map)
-        .select(col("anchor_id"), col("neighbor_id"), col("cosine"), col("rank"))
-        .orderBy(col("anchor_id"), col("rank"))
-    }),
+    // foreachBatch (replay-absorbing frontiers); exact one-cell index,
+    // same rebuild oracle
+    "emb_knn_stream" -> ((s, dir) => knnStream(s, dir, 1, 1)),
+    // ... and through the 32-cell index probing 4 cells per vector;
+    // the oracle unrolls both sequential merges
+    "emb_knn_stream_ann" -> ((s, dir) => knnStream(s, dir, 32, 4)),
 
     // Pair relation -> dedup groups: connected components over LSH pairs
     "dedup_clusters" -> ((s, dir) =>
@@ -1671,10 +1639,12 @@ object SparkEntry {
       Dedup.clusterProfileFrom(
         Dedup.nearDupCorpus(t(s, dir, "documents").select(col("doc_id"), col("text"))),
         aT(s, clusterArtifact(s, dir)))),
-    // The same build as dedup_clusters, kept under the name the board
-    // and the gate have tracked the large-star/small-star loop by
+    // The large-star/small-star loop on DEEP components: one
+    // shuffled-label path per doc_id residue class (near-dup pairs only
+    // ever form shallow ones); closed-form oracle = min id per class
     "dedup_clusters_star" -> ((s, dir) =>
-      Dedup.nearDupClusters(Dedup.nearDupCorpus(t(s, dir, "documents")), 0.5)),
+      Dedup.connectedComponents(
+        Dedup.shuffledPathPairs(t(s, dir, "documents").select(col("doc_id")), 8))),
     // The keep-one decision after clustering: longest member survives,
     // every doc flagged canonical/dropped (singletons are their own
     // cluster). Rider over the persisted cluster artifact — see
@@ -2643,7 +2613,7 @@ object SparkEntry {
     "emb_knn_stream_ann" -> ops.Similarity.annStreamSql(10, 32, 4),
 
     "dedup_clusters" -> Dedup.nearDupClustersSql(0.5),
-    "dedup_clusters_star" -> Dedup.nearDupClustersSql(0.5),
+    "dedup_clusters_star" -> Dedup.shuffledPathClustersSql(8),
     "dedup_canonical" -> Dedup.canonicalDocsSql(0.5),
     "dedup_cross_source" -> Dedup.crossSourceDupSql(0.5),
     "dedup_effective_tokens" -> Dedup.effectiveTokensSql(0.5),

@@ -673,6 +673,31 @@ object Dedup {
     (out, rounds)
   }
 
+  /** Deep-graph input for [[connectedComponents]]: the ids fall into
+    * `groups` residue classes (id % groups) and each class is chained
+    * into ONE path in [[PortableHash]] order — shuffled labels, the shape
+    * of CcPropertySpec's path sweep, with a diameter that grows with the
+    * corpus (near-dup pairs form shallow components that converge in
+    * two rounds). Returns the (doc_a, doc_b) path edges. */
+  def shuffledPathPairs(ids: DataFrame, groups: Int): DataFrame = {
+    require(groups >= 1, s"groups must be >= 1: $groups")
+    val id = col(ids.columns(0))
+    val w = Window.partitionBy(pmod(id, lit(groups.toLong)))
+      .orderBy(PortableHash.tokenHash(id.cast("string")), id)
+    ids.select(lag(id, 1).over(w).as("doc_a"), id.as("doc_b"))
+      .filter(col("doc_a").isNotNull)
+  }
+
+  /** Closed-form oracle of [[connectedComponents]] over
+    * [[shuffledPathPairs]] of `documents.doc_id`: each residue class with
+    * at least two ids is one component labelled by its minimum id. */
+  def shuffledPathClustersSql(groups: Int): String =
+    s"""SELECT doc_id, min(doc_id) OVER (PARTITION BY doc_id % $groups) AS cluster,
+       |       count(*) OVER (PARTITION BY doc_id % $groups) AS cluster_size
+       |FROM documents
+       |QUALIFY cluster_size >= 2
+       |ORDER BY doc_id""".stripMargin
+
   /** Shared oracle CTE chain: LSH pairs → recursive min-reachability →
     * components + sizes (consumed by [[nearDupClustersSql]] and
     * [[canonicalDocsSql]]). */
@@ -2140,7 +2165,7 @@ object Dedup {
 
   /** Streaming document ingestion maintaining the persisted cluster map
     * — the streaming composition of [[maintainClusterMap]] (round-12
-    * directive #5), i.e. the [[graft.ops.Similarity.streamingKnnIngest]]
+    * directive #5), i.e. the [[graft.ops.Similarity.streamingAnnIngest]]
     * shape for the dedup family: each micro-batch of documents merges
     * into the map artifact through foreachBatch under the same
     * `_cluster_frontier` replay-absorption, ingestion-order, and
@@ -2169,7 +2194,7 @@ object Dedup {
     * — as an on-disk artifact under `root`. One from-scratch CC, the
     * cost [[clusterMaintenanceRun]] deliberately does NOT re-measure
     * (the artifact convention: build cost belongs to
-    * `dedup_clusters_star`, the maintenance query measures the
+    * `dedup_clusters`, the maintenance query measures the
     * incremental path).
     */
   def buildClusterMaintPrefix(spark: org.apache.spark.sql.SparkSession,

@@ -41,7 +41,7 @@ object Similarity {
   private def cosine(a: Column, an: Column, b: Column, bn: Column): Column =
     round(dotD(a, b) / (an * bn), 6)
 
-  private def prepared(emb: DataFrame): DataFrame = {
+  private[graft] def prepared(emb: DataFrame): DataFrame = {
     graft.functions.VectorFunctions.register(emb.sparkSession)
     emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", norm(col("v")))
@@ -67,10 +67,7 @@ object Similarity {
   }
 
   def bruteForceTopKSql(nQueries: Int, k: Int): String =
-    s"""WITH e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-       |  FROM embeddings),
+    s"""WITH $embSql,
        |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM e WHERE vec_id < $nQueries),
        |scored AS (
        |  SELECT q.query_id, e.vec_id,
@@ -125,10 +122,7 @@ object Similarity {
   }
 
   def hardNegativesSql(nAnchors: Int, k: Int, dupThreshold: Double): String =
-    s"""WITH e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-       |  FROM embeddings),
+    s"""WITH $embSql,
        |q AS (SELECT vec_id AS anchor_id, v AS qv, nrm AS qn FROM e WHERE vec_id < $nAnchors),
        |scored AS (
        |  SELECT q.anchor_id, e.vec_id,
@@ -163,6 +157,12 @@ object Similarity {
     * the same scalar-probe shape as Watermark.latestPosition; this IS the
     * "index build" step of IVF — at 100 TB the centroid table is exactly
     * the artifact you'd persist and broadcast with the index.
+    *
+    * Each centroid also carries `cidx`, its dense index 0..nlist−1 in
+    * the hash order: the persisted kNN-maintenance index partitions its
+    * vector layout by this small stable int instead of the centroid's
+    * corpus-valued vec_id, so the cell dirs read back with a fixed
+    * narrow type. Consumers that key cells by cent_id select past it.
     */
   private def centroids(e: DataFrame, nlist: Int): DataFrame = {
     val spark = e.sparkSession
@@ -174,7 +174,10 @@ object Similarity {
         col("vec_id"))
       .limit(nlist)
       .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cn"))
-    spark.createDataFrame(java.util.Arrays.asList(sel.collect(): _*), sel.schema)
+    val rows = sel.collect().zipWithIndex.map { case (r, i) =>
+      org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i) }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      sel.schema.add("cidx", org.apache.spark.sql.types.IntegerType))
   }
 
   /** IVF cell assignment: one broadcast join + max_by partial agg — no
@@ -183,22 +186,29 @@ object Similarity {
     * arg_max takes scalar keys only; round() before the cast because the
     * double sits ~1e-9 off the integer and Spark's cast truncates where
     * DuckDB's rounds. Tiebreak assumes cent_id < 1e7 — a corpus with
-    * more vector ids than that needs a wider multiplier.
+    * more vector ids than that needs a wider multiplier. `cell` names the
+    * centroid column reported as the cell: cent_id for the serving
+    * index, cidx for the persisted maintenance layout.
     */
-  private def cellAssignments(e: DataFrame, cent: DataFrame): DataFrame =
+  private[graft] def cellAssignments(e: DataFrame, cent: DataFrame,
+                                     cell: String = "cent_id"): DataFrame =
     e.join(broadcast(cent), lit(true))
-      .select(col("vec_id"), col("v"), col("nrm"), col("cent_id"),
+      .select(col("vec_id"), col("v"), col("nrm"), col("cent_id"), col(cell).as("cell"),
         cosine(col("cv"), col("cn"), col("v"), col("nrm")).as("ccos"))
       .groupBy(col("vec_id"), col("v"), col("nrm"))
-      .agg(max_by(col("cent_id"),
+      .agg(max_by(col("cell"),
         round(col("ccos") * 1000000).cast("long") * 10000000L - col("cent_id")).as("cell"))
+
+  /** Oracle CTE `e`: the embedding table as DOUBLE[] vectors + norms. */
+  private val embSql: String =
+    """e AS (
+      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+      |         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
+      |  FROM embeddings)""".stripMargin
 
   /** Shared oracle CTEs: `e` → `cent` → `assigned`. */
   private def cellSql(nlist: Int): String =
-    s"""e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-       |  FROM embeddings),
+    s"""$embSql,
        |cent AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM e
        |         ORDER BY ${graft.functions.PortableHash.tokenHashSql("CAST(vec_id AS VARCHAR)")}, vec_id LIMIT $nlist),
        |assigned AS (
@@ -365,10 +375,7 @@ object Similarity {
 
   def ivfPqRecallAuditSql(nQueries: Int, k: Int, nlist: Int, nprobe: Int,
                           m: Int, ncode: Int, dim: Int): String =
-    s"""WITH e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-       |  FROM embeddings),
+    s"""WITH $embSql,
        |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM e WHERE vec_id < $nQueries),
        |l2 AS (
        |  SELECT q.query_id, e.vec_id,
@@ -1352,10 +1359,7 @@ object Similarity {
        |  SELECT query_id, vec_id,
        |         CAST(round(cosine * 1e6, 0) AS BIGINT) AS rel6
        |  FROM (${bruteForceTopKSql(nQueries, nCand)})),
-       |e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-       |  FROM embeddings),
+       |$embSql,
        |cv AS (
        |  SELECT c.query_id, c.vec_id, e.v, e.nrm
        |  FROM cand c JOIN e ON e.vec_id = c.vec_id),
@@ -1562,19 +1566,21 @@ object Similarity {
     * device).
     */
   private def knnCtes(k: Int): String =
-    s"""e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-       |  FROM embeddings),
-       |scored AS (
+    s"""$embSql,
+       |${pairTopKCtes("scored", "knn", "e", k)}""".stripMargin
+
+  /** All-pairs top-k CTEs over the vector CTE `src`: `scored` holds
+    * every ordered pair's 6 dp cosine, `knn` its per-anchor top-k. */
+  private def pairTopKCtes(scored: String, knn: String, src: String, k: Int): String =
+    s"""$scored AS (
        |  SELECT a.vec_id AS anchor_id, b.vec_id AS neighbor_id,
        |         round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) + 0.0 AS cosine
-       |  FROM e a, e b WHERE a.vec_id <> b.vec_id),
-       |knn AS (
+       |  FROM $src a, $src b WHERE a.vec_id <> b.vec_id),
+       |$knn AS (
        |  SELECT anchor_id, neighbor_id, cosine,
        |         CAST(row_number() OVER (PARTITION BY anchor_id
        |                                 ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rank
-       |  FROM scored
+       |  FROM $scored
        |  QUALIFY rank <= $k)""".stripMargin
 
   def knnGraphSql(k: Int): String =
@@ -1600,94 +1606,149 @@ object Similarity {
       .write.mode("overwrite").partitionBy("abucket").parquet(path)
   }
 
-  /** Merge ONE batch of new vectors into the persisted kNN graph — the
-    * incremental-maintenance path for the kNN artifact, the ANN-family
-    * twin of [[graft.ops.Dedup.maintainClusterMap]]: instead of
-    * re-scoring |corpus|² per refresh, the batch scores against the
-    * stored vector table ONCE (broadcast batch, one streamed pass —
-    * |B|·|C|, the inherent delta cost), and only anchors whose top-k
-    * can change are re-ranked and rewritten.
-    *
-    * Why merged ≡ from-scratch: for an old anchor, the new top-k over
-    * the full corpus is the top-k of (stored top-k ∪ candidates from
-    * the batch) — a vector outside the stored top-k can only be
-    * displaced further down by additions, and every new vector IS a
-    * candidate. Candidates that cannot enter (cosine below the stored
-    * k-th, or tied with a larger neighbor id) are filtered before the
-    * re-rank, so the rewrite touches only improved anchors' buckets;
-    * anchors with fewer than k stored rows admit every candidate (null
-    * k-th). New anchors rank their complete candidate set (all stored
-    * vectors + the batch itself — the vector table is read AFTER the
-    * guarded append, so the one scored pass covers intra-batch pairs
-    * too). Re-ranking an untouched anchor in a touched bucket
-    * reproduces its rows bit-identically (the ordering is total), so
-    * bucket-level rewrite needs no per-anchor bookkeeping.
-    *
-    * Crash/replay mirrors the cluster map: the merge is one
-    * [[BucketSwap.commit]], whose `_knn_frontier` (advanced LAST) absorbs
-    * replayed batch ids; the vector append is
-    * [[BucketSwap.appendInOrder]] (fails loudly out of vec-id order); a crash
-    * between append and graph commit replays cleanly — the scored pass
-    * recomputes the same candidates, `distinct` folds rows already
-    * merged, and [[BucketSwap.recover]] heals a half-swap. Returns true
-    * when merged, false when absorbed. Oracle of
-    * `emb_knn_maintenance` = the from-scratch rebuild, so the gate
-    * proves incremental ≡ rebuild.
-    */
-  def maintainKnnGraph(spark: org.apache.spark.sql.SparkSession,
-                       vecPath: String, knnPath: String, batch: DataFrame,
-                       k: Int, batchId: Long): Boolean = {
-    BucketSwap.commit(knnPath, "abucket", "_knn_frontier", batchId) { staging =>
-    Caches.withBatchShuffleWidth(spark) {
+  /** Prefix state for the maintenance exercises: the IVF index a
+    * production vector store persists — the centroid table (nlist rows,
+    * [[centroids]]' hash-min pick over the stored vectors), the vector
+    * table laid out PARTITIONED BY CELL (`cidx`, so a probe reads only
+    * its cells' directories, with its ingest frontier) and the
+    * from-scratch kNN graph, all over vec_id < 4/5 of the id space.
+    * nlist = 1 is the exact layout: one cell holds every vector.
+    * Returns (centroids, cells, knn) paths. */
+  def buildIvfKnnMaintPrefix(spark: org.apache.spark.sql.SparkSession,
+                             emb: DataFrame, k: Int, nlist: Int,
+                             root: String): (String, String, String) = {
+    require(k >= 1 && nlist >= 1, s"k and nlist must be >= 1: k=$k nlist=$nlist")
+    val cents = s"$root/centroids"
+    val cells = s"$root/cells"
+    val map = s"$root/knn"
+    val mx = emb.agg(max(col("vec_id"))).head().getLong(0)
+    val cut = (mx + 1) * 4 / 5
+    val stored = prepared(emb.filter(col("vec_id") < cut))
+    val cent = centroids(stored, nlist)
+    cent.write.mode("overwrite").parquet(cents)
+    cellAssignments(stored, cent, "cidx")
+      .repartition(nlist, col("cell"))
+      .write.mode("overwrite").partitionBy("cell").parquet(cells)
+    BucketSwap.markIngested(cells, cut - 1)
+    writeKnnMap(knnGraph(emb.filter(col("vec_id") < cut), k), map)
+    (cents, cells, map)
+  }
 
-    // batch min/max ride the batch materialization as OBSERVED metrics
-    // (the separate `.agg().head()` job the append guard used to pay —
-    // micro-batch merges are job-count bound)
-    val bObs = new Caches.Observed(batch.select(col("vec_id"), col("embedding")),
-      min(col("vec_id")).as("mn"), max(col("vec_id")).as("mx"))
-    val bNew = prepared(bObs.df).localCheckpoint()
-
-    // guarded vector-table append BEFORE any candidate scan: the scored
-    // pass then reads one consistent table covering old + batch
-    // (intra-batch pairs included; the candidate relation below is lazy
-    // and only executes after this commit)
-    BucketSwap.appendInOrder(vecPath, batchId, bObs.row, "vec_id") { staged =>
-      batch.select(col("vec_id"), col("embedding"))
-        .coalesce(1).write.mode("overwrite").parquet(staged)
-    }
-
-    val stored = prepared(spark.read.parquet(vecPath))
-    // ONE streamed pass over the vector table scores every unordered
-    // (stored, new) pair exactly once: the ingestion-order contract
-    // (batch ids > all stored ids) makes `sid < bid` the unordered-pair
-    // enumeration — old×batch pairs always satisfy it, batch×batch pairs
-    // satisfy it in exactly one orientation. Both directed candidates
-    // then come from the same scored row by projection, so no distinct
-    // (a full shuffle of the scored set) is needed; batch replays never
-    // reach this point (the frontier guard above returns first).
-    val cand = stored.as("s")
-      .join(broadcast(bNew.select(col("vec_id").as("bid"),
-          col("v").as("bv"), col("nrm").as("bn"))),
-        col("s.vec_id") < col("bid"))
-      .select(col("s.vec_id").as("sid"), col("bid"),
-        (cosine(col("s.v"), col("s.nrm"), col("bv"), col("bn")) + lit(0.0)).as("cosine"))
-      // both orientations by explode over ONE scored row — a unionAll of
-      // two projections would re-run the scoring pass per branch
+  /** The candidate pass of the merge: the scan of the cell-partitioned
+    * vector layout is FILTERED TO THE PROBED CELLS (collected as ≤ nlist
+    * ints), so it partition-prunes to those directories instead of
+    * streaming the full vector table. `probes` = (bid, bv, bn, cell),
+    * one row per (batch vector, probed cell); the ingestion-order
+    * contract (batch ids > all stored ids) makes `vec_id < bid` the
+    * once-per-unordered-pair enumeration — old×batch pairs always
+    * satisfy it, batch×batch pairs in exactly one orientation — and both
+    * directed candidates come from the one scored row by explode (a
+    * unionAll of two projections would re-run the scoring per branch).
+    * With one cell this is the exact stored × batch pass. */
+  private[graft] def annCandidates(spark: org.apache.spark.sql.SparkSession,
+      cellsPath: String, probes: DataFrame, probedCells: Seq[Int]): DataFrame =
+    spark.read.parquet(cellsPath)
+      .filter(col("cell").isin(probedCells.map(Integer.valueOf): _*))
+      .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
+      .join(broadcast(probes), Seq("cell"))
+      .filter(col("vec_id") < col("bid"))
+      .select(col("vec_id").as("sid"), col("bid"),
+        (cosine(col("v"), col("nrm"), col("bv"), col("bn")) + lit(0.0)).as("cosine"))
       .select(explode(array(
         struct(col("sid").as("anchor_id"), col("bid").as("neighbor_id"), col("cosine")),
         struct(col("bid").as("anchor_id"), col("sid").as("neighbor_id"), col("cosine"))))
         .as("e"))
       .select(col("e.anchor_id"), col("e.neighbor_id"), col("e.cosine"))
 
-    admitAndStage(spark, knnPath, staging, cand, k)
+  /** Merge ONE batch of new vectors into the persisted kNN graph — the
+    * incremental-maintenance path for the kNN artifact, the ANN-family
+    * twin of [[graft.ops.Dedup.maintainClusterMap]]: instead of
+    * re-scoring |corpus|² per refresh, each batch vector probes its
+    * `nprobe` nearest cells of the persisted IVF index (`cent`, the
+    * centroid relation) and scores only against the vectors IN THOSE
+    * CELLS (expected nprobe/nlist of the corpus, partition-pruned I/O);
+    * only anchors whose top-k can change are re-ranked and rewritten.
+    *
+    * Why merged ≡ top-k over (stored graph ∪ candidates): for an old
+    * anchor, a vector outside the stored top-k can only be displaced
+    * further down by additions. Candidates that cannot enter (cosine
+    * below the stored k-th, or tied with a larger neighbor id) are
+    * filtered before the re-rank ([[admitAndStage]]). New anchors rank
+    * their complete candidate set — the cell layout is read AFTER the
+    * guarded append, so the one scored pass covers intra-batch pairs.
+    * When the probe covers every cell (nprobe = nlist; nlist = 1 is the
+    * exact index) every new vector is a candidate of every anchor and
+    * the merge equals the from-scratch rebuild — `emb_knn_maintenance`
+    * gates exactly that. With fewer probed cells the price is
+    * approximation: a true neighbor outside them is missed, which
+    * `emb_knn_maintenance_ann` audits as recall against the rebuild.
+    *
+    * The batch's own cell is the probe's first row: the probe order
+    * (qcos desc, cent_id) is [[cellAssignments]]' argmax key, so the
+    * append needs no second centroid join or grouping.
+    *
+    * Crash/replay mirrors the cluster map: the merge is one
+    * [[BucketSwap.commit]], whose `_knn_frontier` (advanced LAST) absorbs
+    * replayed batch ids; the cell append is [[BucketSwap.appendInOrder]]
+    * (fails loudly out of vec-id order); a crash between append and
+    * graph commit replays cleanly — the scored pass recomputes the same
+    * candidates, `distinct` folds rows already merged, and
+    * [[BucketSwap.recover]] heals a half-swap. Returns true when merged,
+    * false when absorbed.
+    */
+  def maintainKnnGraph(spark: org.apache.spark.sql.SparkSession,
+                       cent: DataFrame, cellsPath: String, knnPath: String,
+                       batch: DataFrame, k: Int, nprobe: Int,
+                       batchId: Long): Boolean = {
+    require(k >= 1 && nprobe >= 1, s"k and nprobe must be >= 1: k=$k nprobe=$nprobe")
+    BucketSwap.commit(knnPath, "abucket", "_knn_frontier", batchId) { staging =>
+    Caches.withBatchShuffleWidth(spark) {
+
+    // probe: the nprobe nearest cells per batch vector (probeCells'
+    // tie-break — qcos desc, cent_id), |B|·nprobe rows carrying the
+    // batch payload, materialized ONCE by one checkpoint job; the batch
+    // id range and the probed cell ids (≤ nlist ints by construction —
+    // never batch-grained) ride that job as OBSERVED metrics. The
+    // centroid relation (nlist rows) joins as a shuffle-replicate nested
+    // loop, a cartesian product evaluated inside the checkpoint job: a
+    // broadcast would launch one more job per batch
+    val probeW = Window.partitionBy(col("bid"))
+      .orderBy(col("qcos").desc, col("cent_id"))
+    val pObs = new Caches.Observed(
+      prepared(batch).join(cent.hint("shuffle_replicate_nl"), lit(true))
+        .select(col("vec_id").as("bid"), col("v").as("bv"), col("nrm").as("bn"),
+          col("cidx"), col("cent_id"),
+          cosine(col("cv"), col("cn"), col("v"), col("nrm")).as("qcos"))
+        .withColumn("pr", row_number().over(probeW))
+        .filter(col("pr") <= nprobe)
+        .select(col("bid"), col("bv"), col("bn"), col("cidx").as("cell"), col("pr")),
+      min(col("bid")).as("mn"), max(col("bid")).as("mx"),
+      collect_set(col("cell")).as("probed"))
+    val probes = pObs.df.localCheckpoint()
+    val probed = pObs.row.getSeq[Int](2).sorted
+
+    // guarded append of the batch into its cells (each vector's first
+    // probe row) BEFORE the candidate scan, which then reads one
+    // consistent layout covering old + batch
+    BucketSwap.appendInOrder(cellsPath, batchId, pObs.row, "vec_id") { staged =>
+      probes.filter(col("pr") === 1)
+        .select(col("bid").as("vec_id"), col("bv").as("v"), col("bn").as("nrm"), col("cell"))
+        .coalesce(1).write.mode("overwrite").partitionBy("cell").parquet(staged)
+    }
+
+    admitAndStage(spark, knnPath, staging,
+      annCandidates(spark, cellsPath, probes, probed), k)
     }
     }
   }
 
-  /** Shared merge tail of the exact and ANN-assisted maintenance paths:
-    * admission-filter the scored candidates against the stored k-th,
-    * re-rank ONLY the touched anchor buckets into `staging`, and return
-    * their ids for [[BucketSwap.commit]] to swap in. */
+  /** Merge tail of [[maintainKnnGraph]]: admission-filter the scored
+    * candidates against the stored k-th, re-rank ONLY the touched
+    * anchor buckets into `staging`, and return their ids for
+    * [[BucketSwap.commit]] to swap in. Re-ranking an untouched anchor
+    * in a touched bucket reproduces its rows bit-identically (the
+    * ordering is total), so bucket-level rewrite needs no per-anchor
+    * bookkeeping. */
   private def admitAndStage(spark: org.apache.spark.sql.SparkSession,
       knnPath: String, staging: String, cand: DataFrame, k: Int): Seq[Int] = {
     // ONE graph relation serves both the k-th lookup and the rewrite
@@ -1727,32 +1788,41 @@ object Similarity {
     touched
   }
 
-  /** End-to-end incremental kNN maintenance exercise: the prefix vector
-    * table + kNN artifact (process-cached by the caller, built by
-    * [[knnGraph]]) are hardlinked to fresh scratch (safe + near-free:
-    * see [[BucketSwap.linkTree]]), then the remaining vectors arrive as
-    * two ordered ingest batches merged through [[maintainKnnGraph]].
-    * Returns the final persisted graph; the oracle is the from-scratch
-    * rebuild over the full table.
-    */
-  def knnMaintenanceRun(spark: org.apache.spark.sql.SparkSession,
-                        emb: DataFrame, k: Int,
-                        prefixVec: String, prefixKnn: String): DataFrame = {
+  /** End-to-end maintenance exercise: the prefix artifacts (process-
+    * cached by the caller, built by [[buildIvfKnnMaintPrefix]]) are
+    * hardlinked to fresh scratch (safe + near-free: see
+    * [[BucketSwap.linkTree]]), then the last 1/5 of the id space arrives
+    * as one batch merged through [[maintainKnnGraph]]. Returns the
+    * maintained graph. */
+  def annMaintenanceRun(spark: org.apache.spark.sql.SparkSession,
+                        emb: DataFrame, k: Int, nprobe: Int,
+                        centPath: String, prefixCells: String,
+                        prefixKnn: String): DataFrame = {
     val root = graft.Scratch.dir("graft-knn-maint")
-    val vec = s"$root/vectors"
+    val cells = s"$root/cells"
     val map = s"$root/knn"
-    BucketSwap.linkTree(prefixVec, vec)
+    BucketSwap.linkTree(prefixCells, cells)
     BucketSwap.linkTree(prefixKnn, map)
     val mx = emb.agg(max(col("vec_id"))).head().getLong(0)
-    val cut0 = (mx + 1) * 3 / 5
-    val cut1 = (mx + 1) * 4 / 5
-    maintainKnnGraph(spark, vec, map,
-      emb.filter(col("vec_id") >= cut0 && col("vec_id") < cut1), k, 0L)
-    maintainKnnGraph(spark, vec, map,
-      emb.filter(col("vec_id") >= cut1), k, 1L)
+    val cut = (mx + 1) * 4 / 5
+    maintainKnnGraph(spark, spark.read.parquet(centPath), cells, map,
+      emb.filter(col("vec_id") >= cut), k, nprobe, 0L)
     spark.read.parquet(map)
       .select(col("anchor_id"), col("neighbor_id"), col("cosine"), col("rank"))
       .orderBy(col("anchor_id"), col("rank"))
+  }
+
+  /** Per-anchor recall@k of a maintained kNN graph against the exact
+    * from-scratch graph over `emb` (the ann_*_recall audit shape). */
+  def knnRecallAudit(approx: DataFrame, emb: DataFrame, k: Int): DataFrame = {
+    val hits = approx.select(col("anchor_id"), col("neighbor_id")).withColumn("hit", lit(1))
+    knnGraph(emb, k).select(col("anchor_id"), col("neighbor_id"))
+      .join(hits, Seq("anchor_id", "neighbor_id"), "left")
+      .groupBy(col("anchor_id"))
+      .agg(count(col("hit")).as("n_hits"))
+      .select(col("anchor_id"), col("n_hits"),
+        round(col("n_hits").cast("double") / k, 6).as("recall"))
+      .orderBy("anchor_id")
   }
 
   /** Streaming vector ingestion maintaining the persisted kNN graph —
@@ -1763,236 +1833,6 @@ object Similarity {
     * and restarted stream resumes exactly where the artifacts say
     * (foreachBatch is at-least-once; the replayed batch id is absorbed).
     * A [[graft.streaming.Bounded]] run: one ordered chunk file per
-    * micro-batch, checked on a fresh checkpoint, mirroring continuous
-    * embedding ingest.
-    */
-  def streamingKnnIngest(spark: org.apache.spark.sql.SparkSession,
-                         chunks: String,
-                         schema: org.apache.spark.sql.types.StructType,
-                         vecPath: String, knnPath: String, k: Int,
-                         checkpoint: String): Unit = {
-    val stream = Bounded.readChunks(spark, chunks, schema).select(col("vec_id"), col("embedding"))
-    Bounded.foreachBatch(stream, checkpoint, Bounded.OnePerFile(chunks)) { (batch, batchId) =>
-      maintainKnnGraph(batch.sparkSession, vecPath, knnPath, batch, k, batchId)
-      ()
-    }
-    ()
-  }
-
-  /** Prefix state for [[knnMaintenanceRun]]: vector table (with its
-    * ingest frontier) + from-scratch kNN artifact over vec_id < 3/5 of
-    * the id space. */
-  def buildKnnMaintPrefix(spark: org.apache.spark.sql.SparkSession,
-                          emb: DataFrame, k: Int, root: String): (String, String) = {
-    val vec = s"$root/vectors"
-    val map = s"$root/knn"
-    val mx = emb.agg(max(col("vec_id"))).head().getLong(0)
-    val cut0 = (mx + 1) * 3 / 5
-    val prefix = emb.filter(col("vec_id") < cut0)
-    prefix.select(col("vec_id"), col("embedding"))
-      .write.mode("overwrite").parquet(vec)
-    BucketSwap.markIngested(vec, cut0 - 1)
-    writeKnnMap(knnGraph(prefix, k), map)
-    (vec, map)
-  }
-
-  // ------------------------------------------ ANN-assisted kNN maintenance
-
-  /** [[centroids]] with an explicit dense index column `cidx`
-    * (0..nlist−1 in the hash order) — the ANN maintenance path
-    * partitions its vector layout by this small stable int instead of
-    * the centroid's corpus-valued vec_id, so the cell dirs read back
-    * with a fixed narrow type. Driver-materialized like [[centroids]]
-    * (nlist rows by construction). */
-  private def centroidsIdx(e: DataFrame, nlist: Int): DataFrame = {
-    val spark = e.sparkSession
-    val sel = e
-      .orderBy(graft.functions.PortableHash.tokenHash(col("vec_id").cast("string")),
-        col("vec_id"))
-      .limit(nlist)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cn"))
-    val rows = sel.collect().zipWithIndex.map { case (r, i) =>
-      org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i) }
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-      sel.schema.add("cidx", org.apache.spark.sql.types.IntegerType))
-  }
-
-  /** Cell assignment carrying the vector payload: nearest centroid per
-    * vector via the [[cellAssignments]] composite-BIGINT argmax key
-    * (identical tie-break, `cidx` result) — broadcast of the nlist
-    * centroids, map-side partial argmax, no corpus-wide anything else. */
-  private def assignCells(e: DataFrame, cent: DataFrame): DataFrame =
-    e.join(broadcast(cent), lit(true))
-      .select(col("vec_id"), col("v"), col("nrm"), col("cidx"), col("cent_id"),
-        cosine(col("cv"), col("cn"), col("v"), col("nrm")).as("ccos"))
-      .groupBy(col("vec_id"), col("v"), col("nrm"))
-      .agg(max_by(col("cidx"),
-        round(col("ccos") * 1000000).cast("long") * 10000000L - col("cent_id")).as("cell"))
-
-  /** Prefix state for the ANN-assisted maintenance exercise: the IVF
-    * index artifact a production vector store persists — centroid table
-    * (nlist rows), the vector table laid out PARTITIONED BY CELL (so a
-    * probe reads only its cells' directories), and the from-scratch kNN
-    * graph over vec_id < 4/5 of the id space. */
-  def buildIvfKnnMaintPrefix(spark: org.apache.spark.sql.SparkSession,
-                             emb: DataFrame, k: Int, nlist: Int,
-                             root: String): (String, String, String) = {
-    val cents = s"$root/centroids"
-    val cells = s"$root/cells"
-    val map = s"$root/knn"
-    val mx = emb.agg(max(col("vec_id"))).head().getLong(0)
-    val cut = (mx + 1) * 4 / 5
-    val stored = prepared(emb.filter(col("vec_id") < cut))
-    val cent = centroidsIdx(stored, nlist)
-    cent.write.mode("overwrite").parquet(cents)
-    assignCells(stored, cent)
-      .repartition(nlist, col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(cells)
-    BucketSwap.markIngested(cells, cut - 1)
-    writeKnnMap(knnGraph(emb.filter(col("vec_id") < cut), k), map)
-    (cents, cells, map)
-  }
-
-  /** The candidate pass of the ANN-assisted merge — the piece directive
-    * round-12 #1 is about: the scan of the cell-partitioned vector
-    * layout is FILTERED TO THE PROBED CELLS (collected as ≤ nlist ints),
-    * so it partition-prunes to those directories instead of streaming
-    * the full vector table. `probes` = (bid, bv, bn, cell), one row per
-    * (batch vector, probed cell); the ingestion-order contract (batch
-    * ids > all stored ids) makes `vec_id < bid` the once-per-unordered-
-    * pair enumeration exactly as in the exact path, and both directed
-    * candidates come from the one scored row by explode. */
-  private[graft] def annCandidates(spark: org.apache.spark.sql.SparkSession,
-      cellsPath: String, probes: DataFrame, probedCells: Seq[Int]): DataFrame =
-    spark.read.parquet(cellsPath)
-      .filter(col("cell").isin(probedCells.map(Integer.valueOf): _*))
-      .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") < col("bid"))
-      .select(col("vec_id").as("sid"), col("bid"),
-        (cosine(col("v"), col("nrm"), col("bv"), col("bn")) + lit(0.0)).as("cosine"))
-      .select(explode(array(
-        struct(col("sid").as("anchor_id"), col("bid").as("neighbor_id"), col("cosine")),
-        struct(col("bid").as("anchor_id"), col("sid").as("neighbor_id"), col("cosine"))))
-        .as("e"))
-      .select(col("e.anchor_id"), col("e.neighbor_id"), col("e.cosine"))
-
-  /** ANN-assisted incremental kNN maintenance — [[maintainKnnGraph]]
-    * with the scored pass BOUNDED BY THE IVF INDEX instead of the full
-    * vector table: the batch assigns to cells (|B|·nlist), appends into
-    * the cell-partitioned layout, probes its `nprobe` nearest cells,
-    * and scores only against vectors IN THOSE CELLS (expected
-    * nprobe/nlist of the corpus, partition-pruned I/O) — the shape a
-    * 1e9-vector store needs, where the exact path's per-batch |B|·|C|
-    * scan is the last brute-force production shape. The merge tail
-    * (admission filter, bucket rewrite) is the shared [[admitAndStage]]
-    * inside the same [[BucketSwap.commit]]; crash/replay guarantees are
-    * identical. The price is approximation: a true neighbor outside the
-    * probed cells is missed — `emb_knn_maintenance_ann` audits exactly that recall
-    * against the exact graph, per the ann_*_recall convention.
-    */
-  def maintainKnnGraphAnn(spark: org.apache.spark.sql.SparkSession,
-                          centPath: String, cellsPath: String, knnPath: String,
-                          batch: DataFrame, k: Int, nprobe: Int,
-                          batchId: Long): Boolean =
-    maintainKnnGraphAnn(spark, centLocal(spark, centPath), cellsPath, knnPath,
-      batch, k, nprobe, batchId)
-
-  /** The centroid table read once and re-embedded as a LOCAL relation
-    * (nlist rows — the centroids() convention; a lazy subtree would
-    * re-scan per consumer). The streaming ingest hoists this OUTSIDE
-    * its foreachBatch loop: the centroid artifact is immutable for the
-    * stream's lifetime, so per-batch re-reads were pure job overhead. */
-  private[graft] def centLocal(spark: org.apache.spark.sql.SparkSession,
-                               centPath: String): DataFrame = {
-    val centRead = spark.read.parquet(centPath)
-    spark.createDataFrame(
-      java.util.Arrays.asList(centRead.collect(): _*), centRead.schema)
-  }
-
-  /** [[maintainKnnGraphAnn]] over a pre-collected centroid relation. */
-  private[graft] def maintainKnnGraphAnn(spark: org.apache.spark.sql.SparkSession,
-                          cent: DataFrame, cellsPath: String, knnPath: String,
-                          batch: DataFrame, k: Int, nprobe: Int,
-                          batchId: Long): Boolean = {
-    BucketSwap.commit(knnPath, "abucket", "_knn_frontier", batchId) { staging =>
-    Caches.withBatchShuffleWidth(spark) {
-
-    // batch min/max ride the localCheckpoint job as OBSERVED metrics
-    val bObs = new Caches.Observed(prepared(batch),
-      min(col("vec_id")).as("mn"), max(col("vec_id")).as("mx"))
-    val bPrep = bObs.df.localCheckpoint()
-
-    // guarded append of the batch's cell assignments (the vector-table
-    // append of the exact path, in the cell-partitioned layout)
-    BucketSwap.appendInOrder(cellsPath, batchId, bObs.row, "vec_id") { staged =>
-      assignCells(bPrep, cent)
-        .coalesce(1).write.mode("overwrite").partitionBy("cell").parquet(staged)
-    }
-
-    // probe: the nprobe nearest cells per batch vector (probeCells'
-    // tie-break — qcos desc, cent_id), |B|·nprobe rows; the probed cell
-    // ids (≤ nlist ints by construction — never batch-grained) ride the
-    // checkpoint job as an OBSERVED collect_set
-    val probeW = Window.partitionBy(col("bid"))
-      .orderBy(col("qcos").desc, col("cent_id"))
-    val pObs = new Caches.Observed(
-      bPrep.join(broadcast(cent), lit(true))
-        .select(col("vec_id").as("bid"), col("v").as("bv"), col("nrm").as("bn"),
-          col("cidx"), col("cent_id"),
-          cosine(col("cv"), col("cn"), col("v"), col("nrm")).as("qcos"))
-        .withColumn("pr", row_number().over(probeW))
-        .filter(col("pr") <= nprobe)
-        .select(col("bid"), col("bv"), col("bn"), col("cidx").as("cell")),
-      collect_set(col("cell")).as("probed"))
-    val probes = pObs.df.localCheckpoint()
-    val probed = pObs.row.getSeq[Int](0).sorted
-    admitAndStage(spark, knnPath, staging,
-      annCandidates(spark, cellsPath, probes, probed), k)
-    }
-    }
-  }
-
-  /** End-to-end ANN-assisted maintenance exercise + recall audit: stage
-    * the IVF prefix artifacts via hardlinks, merge the last 1/5 of the
-    * id space through [[maintainKnnGraphAnn]] as one batch, then score
-    * the maintained graph's per-anchor recall@k against the exact
-    * from-scratch kNN graph (the ann_*_recall audit shape). The oracle
-    * replays the same deterministic construction in SQL, so the gate
-    * proves the ANN merge END-TO-END — centroid choice, cell argmax,
-    * probe set, pruned candidate enumeration, merge — not just the
-    * audit arithmetic.
-    */
-  def annMaintenanceRun(spark: org.apache.spark.sql.SparkSession,
-                        emb: DataFrame, k: Int, nprobe: Int,
-                        centPath: String, prefixCells: String,
-                        prefixKnn: String): DataFrame = {
-    val root = graft.Scratch.dir("graft-ann-maint")
-    val cells = s"$root/cells"
-    val map = s"$root/knn"
-    BucketSwap.linkTree(prefixCells, cells)
-    BucketSwap.linkTree(prefixKnn, map)
-    val mx = emb.agg(max(col("vec_id"))).head().getLong(0)
-    val cut = (mx + 1) * 4 / 5
-    maintainKnnGraphAnn(spark, centPath, cells, map,
-      emb.filter(col("vec_id") >= cut), k, nprobe, 0L)
-    val approx = spark.read.parquet(map)
-      .select(col("anchor_id"), col("neighbor_id")).withColumn("hit", lit(1))
-    knnGraph(emb, k).select(col("anchor_id"), col("neighbor_id"))
-      .join(approx, Seq("anchor_id", "neighbor_id"), "left")
-      .groupBy(col("anchor_id"))
-      .agg(count(col("hit")).as("n_hits"))
-      .select(col("anchor_id"), col("n_hits"),
-        round(col("n_hits").cast("double") / k, 6).as("recall"))
-      .orderBy("anchor_id")
-  }
-
-  /** Streaming vector ingestion over the ANN-assisted maintenance path —
-    * [[streamingKnnIngest]] with [[maintainKnnGraphAnn]] as the per-batch
-    * merge: each micro-batch assigns to the persisted IVF index's cells,
-    * probes, scores only the probed partitions, and merges under the
-    * same `_knn_frontier` replay/crash guarantees. A
-    * [[graft.streaming.Bounded]] run: one ordered chunk file per
     * micro-batch, checked on a fresh checkpoint.
     */
   def streamingAnnIngest(spark: org.apache.spark.sql.SparkSession,
@@ -2010,154 +1850,70 @@ object Similarity {
     val centSchema = centRead.schema
     Bounded.foreachBatch(stream, checkpoint, Bounded.OnePerFile(chunks)) { (batch, batchId) =>
       val cent = batch.sparkSession.createDataFrame(centRows, centSchema)
-      maintainKnnGraphAnn(batch.sparkSession, cent, cellsPath, knnPath,
+      maintainKnnGraph(batch.sparkSession, cent, cellsPath, knnPath,
         batch, k, nprobe, batchId)
       ()
     }
     ()
   }
 
-  /** Oracle for `emb_knn_stream_ann`: the TWO sequential ANN merges
-    * unrolled — batch 1 = [4/5, 9/10) of the id space, batch 2 the
-    * rest. Sequential top-k merges equal ONE top-k over the union of
-    * the stored graph and both candidate sets (a row outside an
-    * intermediate top-k can never re-enter after more additions — the
-    * exact path's argument), and batch 2's candidates read the cell
-    * layout AFTER batch 1's append, so its probed cells include batch-1
-    * rows. Each unordered pair appears in exactly one batch's candidate
-    * set (the one owning the larger id), so no dedup is needed.
+  /** Oracle CTEs of the maintenance merges, unrolled deterministically
+    * (needs `e`): the stored table is vec_id < the first split of the id
+    * space and each further split opens the next ingest batch
+    * (`splits` as (num, den) fractions; the last batch runs to the end).
+    * Hash-min centroids over the STORED table (the persisted index is
+    * refreshed only on rebuild), composite-key cell argmax, nprobe probe
+    * set, candidates only from probed cells (`sid < bid` once per
+    * unordered pair, both orientations). Sequential top-k merges equal
+    * ONE top-k over the stored graph ∪ every batch's candidates (a row
+    * outside an intermediate top-k can never re-enter after more
+    * additions), batch i's candidates read the cell layout after every
+    * earlier append, and each unordered pair is a candidate of exactly
+    * one batch (the one owning the larger id), so no dedup is needed;
+    * the admission filter is a pure optimization the oracle skips.
+    * Defines `merged` (anchor_id, neighbor_id, cosine, rank).
     */
-  def annStreamSql(k: Int, nlist: Int, nprobe: Int): String =
-    s"""WITH e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-       |  FROM embeddings),
-       |cut AS (SELECT ((max(vec_id) + 1) * 4) // 5 AS c,
-       |               ((max(vec_id) + 1) * 9) // 10 AS m FROM e),
-       |stored AS (SELECT e.* FROM e, cut WHERE vec_id < c),
-       |b1 AS (SELECT e.* FROM e, cut WHERE vec_id >= c AND vec_id < m),
-       |b2 AS (SELECT e.* FROM e, cut WHERE vec_id >= m),
-       |stored_scored AS (
-       |  SELECT a.vec_id AS anchor_id, b.vec_id AS neighbor_id,
-       |         round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) + 0.0 AS cosine
-       |  FROM stored a, stored b WHERE a.vec_id <> b.vec_id),
-       |knn_stored AS (
-       |  SELECT anchor_id, neighbor_id, cosine,
-       |         row_number() OVER (PARTITION BY anchor_id
-       |                            ORDER BY cosine DESC, neighbor_id) AS rank
-       |  FROM stored_scored QUALIFY rank <= $k),
+  private def ivfMergeCtes(k: Int, nlist: Int, nprobe: Int, splits: Seq[(Int, Int)]): String = {
+    val batches = splits.indices.map(i => i + 1)
+    val cut = splits.zipWithIndex.map { case ((num, den), i) =>
+      s"((max(vec_id) + 1) * $num) // $den AS c$i" }.mkString(", ")
+    def batch(i: Int): String =
+      if (i < splits.size) s"vec_id >= c${i - 1} AND vec_id < c$i" else s"vec_id >= c${i - 1}"
+    def assigned(name: String, src: String): String =
+      s"""$name AS (
+         |  SELECT vec_id, v, nrm,
+         |         arg_max(cidx, CAST(round(list_dot_product(cv, v) / (cn * nrm), 6) * 1000000 AS BIGINT) * 10000000 - cent_id) AS cell
+         |  FROM $src, cent GROUP BY vec_id, v, nrm)""".stripMargin
+    def batchCtes(i: Int): String =
+      s"""b$i AS (SELECT e.* FROM e, cut WHERE ${batch(i)}),
+         |${assigned(s"b${i}a", s"b$i")},
+         |cells$i AS (SELECT * FROM cells${i - 1} UNION ALL SELECT * FROM b${i}a),
+         |probes$i AS (
+         |  SELECT vec_id AS bid, v AS bv, nrm AS bn, cidx AS cell
+         |  FROM (
+         |    SELECT b.vec_id, b.v, b.nrm, cent.cidx,
+         |           row_number() OVER (PARTITION BY b.vec_id
+         |             ORDER BY round(list_dot_product(cv, b.v) / (cn * b.nrm), 6) DESC,
+         |                      cent_id) AS pr
+         |    FROM b$i b, cent) WHERE pr <= $nprobe)""".stripMargin
+    val cand = batches.map { i =>
+      s"""  SELECT s.vec_id AS sid, p.bid,
+         |         round(list_dot_product(s.v, p.bv) / (s.nrm * p.bn), 6) + 0.0 AS cosine
+         |  FROM cells$i s JOIN probes$i p ON s.cell = p.cell AND s.vec_id < p.bid""".stripMargin
+    }.mkString("\n  UNION ALL\n")
+    s"""cut AS (SELECT $cut FROM e),
+       |stored AS (SELECT e.* FROM e, cut WHERE vec_id < c0),
+       |${pairTopKCtes("stored_scored", "knn_stored", "stored", k)},
        |cent AS (
        |  SELECT cent_id, cv, cn,
        |         CAST(row_number() OVER (ORDER BY h, cent_id) - 1 AS INT) AS cidx
        |  FROM (SELECT vec_id AS cent_id, v AS cv, nrm AS cn,
        |               ${graft.functions.PortableHash.tokenHashSql("CAST(vec_id AS VARCHAR)")} AS h
        |        FROM stored ORDER BY h, vec_id LIMIT $nlist)),
-       |assigned AS (
-       |  SELECT vec_id, v, nrm,
-       |         arg_max(cidx, CAST(round(list_dot_product(cv, v) / (cn * nrm), 6) * 1000000 AS BIGINT) * 10000000 - cent_id) AS cell
-       |  FROM stored, cent GROUP BY vec_id, v, nrm),
-       |b1a AS (
-       |  SELECT vec_id, v, nrm,
-       |         arg_max(cidx, CAST(round(list_dot_product(cv, v) / (cn * nrm), 6) * 1000000 AS BIGINT) * 10000000 - cent_id) AS cell
-       |  FROM b1, cent GROUP BY vec_id, v, nrm),
-       |b2a AS (
-       |  SELECT vec_id, v, nrm,
-       |         arg_max(cidx, CAST(round(list_dot_product(cv, v) / (cn * nrm), 6) * 1000000 AS BIGINT) * 10000000 - cent_id) AS cell
-       |  FROM b2, cent GROUP BY vec_id, v, nrm),
-       |cells1 AS (SELECT * FROM assigned UNION ALL SELECT * FROM b1a),
-       |cells2 AS (SELECT * FROM cells1 UNION ALL SELECT * FROM b2a),
-       |probes1 AS (
-       |  SELECT vec_id AS bid, v AS bv, nrm AS bn, cidx AS cell
-       |  FROM (
-       |    SELECT b.vec_id, b.v, b.nrm, cent.cidx,
-       |           row_number() OVER (PARTITION BY b.vec_id
-       |             ORDER BY round(list_dot_product(cv, b.v) / (cn * b.nrm), 6) DESC,
-       |                      cent_id) AS pr
-       |    FROM b1 b, cent) WHERE pr <= $nprobe),
-       |probes2 AS (
-       |  SELECT vec_id AS bid, v AS bv, nrm AS bn, cidx AS cell
-       |  FROM (
-       |    SELECT b.vec_id, b.v, b.nrm, cent.cidx,
-       |           row_number() OVER (PARTITION BY b.vec_id
-       |             ORDER BY round(list_dot_product(cv, b.v) / (cn * b.nrm), 6) DESC,
-       |                      cent_id) AS pr
-       |    FROM b2 b, cent) WHERE pr <= $nprobe),
+       |${assigned("cells0", "stored")},
+       |${batches.map(batchCtes).mkString(",\n")},
        |cand AS (
-       |  SELECT s.vec_id AS sid, p.bid,
-       |         round(list_dot_product(s.v, p.bv) / (s.nrm * p.bn), 6) + 0.0 AS cosine
-       |  FROM cells1 s JOIN probes1 p ON s.cell = p.cell AND s.vec_id < p.bid
-       |  UNION ALL
-       |  SELECT s.vec_id AS sid, p.bid,
-       |         round(list_dot_product(s.v, p.bv) / (s.nrm * p.bn), 6) + 0.0 AS cosine
-       |  FROM cells2 s JOIN probes2 p ON s.cell = p.cell AND s.vec_id < p.bid),
-       |oriented AS (
-       |  SELECT sid AS anchor_id, bid AS neighbor_id, cosine FROM cand
-       |  UNION ALL
-       |  SELECT bid AS anchor_id, sid AS neighbor_id, cosine FROM cand),
-       |unioned AS (
-       |  SELECT anchor_id, neighbor_id, cosine FROM knn_stored
-       |  UNION ALL SELECT anchor_id, neighbor_id, cosine FROM oriented)
-       |SELECT anchor_id, neighbor_id, cosine,
-       |       row_number() OVER (PARTITION BY anchor_id
-       |                          ORDER BY cosine DESC, neighbor_id) AS rank
-       |FROM unioned QUALIFY rank <= $k
-       |ORDER BY anchor_id, rank""".stripMargin
-
-  /** Oracle for `emb_knn_maintenance_ann`: the whole ANN merge unrolled
-    * deterministically — stored/batch split at 4/5 of the id space,
-    * hash-min centroids over the STORED table (the persisted index is
-    * refreshed only on rebuild), composite-key cell argmax, nprobe
-    * probe set, candidates only from probed cells (`sid < bid` once per
-    * unordered pair, both orientations), merged top-k over stored graph
-    * ∪ candidates (the admission filter is a pure optimization: rows
-    * below the stored k-th can never crack the merged top-k, so the
-    * oracle may skip it), then per-anchor recall@k vs the exact graph.
-    */
-  def annMaintenanceSql(k: Int, nlist: Int, nprobe: Int): String =
-    s"""WITH e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-       |  FROM embeddings),
-       |cut AS (SELECT ((max(vec_id) + 1) * 4) // 5 AS c FROM e),
-       |stored AS (SELECT e.* FROM e, cut WHERE vec_id < c),
-       |batch AS (SELECT e.* FROM e, cut WHERE vec_id >= c),
-       |stored_scored AS (
-       |  SELECT a.vec_id AS anchor_id, b.vec_id AS neighbor_id,
-       |         round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) + 0.0 AS cosine
-       |  FROM stored a, stored b WHERE a.vec_id <> b.vec_id),
-       |knn_stored AS (
-       |  SELECT anchor_id, neighbor_id, cosine,
-       |         row_number() OVER (PARTITION BY anchor_id
-       |                            ORDER BY cosine DESC, neighbor_id) AS rank
-       |  FROM stored_scored QUALIFY rank <= $k),
-       |cent AS (
-       |  SELECT cent_id, cv, cn,
-       |         CAST(row_number() OVER (ORDER BY h, cent_id) - 1 AS INT) AS cidx
-       |  FROM (SELECT vec_id AS cent_id, v AS cv, nrm AS cn,
-       |               ${graft.functions.PortableHash.tokenHashSql("CAST(vec_id AS VARCHAR)")} AS h
-       |        FROM stored ORDER BY h, vec_id LIMIT $nlist)),
-       |assigned AS (
-       |  SELECT vec_id, v, nrm,
-       |         arg_max(cidx, CAST(round(list_dot_product(cv, v) / (cn * nrm), 6) * 1000000 AS BIGINT) * 10000000 - cent_id) AS cell
-       |  FROM stored, cent GROUP BY vec_id, v, nrm),
-       |bassigned AS (
-       |  SELECT vec_id, v, nrm,
-       |         arg_max(cidx, CAST(round(list_dot_product(cv, v) / (cn * nrm), 6) * 1000000 AS BIGINT) * 10000000 - cent_id) AS cell
-       |  FROM batch, cent GROUP BY vec_id, v, nrm),
-       |cellrows AS (
-       |  SELECT * FROM assigned UNION ALL SELECT * FROM bassigned),
-       |probes AS (
-       |  SELECT vec_id AS bid, v AS bv, nrm AS bn, cidx AS cell
-       |  FROM (
-       |    SELECT b.vec_id, b.v, b.nrm, cent.cidx,
-       |           row_number() OVER (PARTITION BY b.vec_id
-       |             ORDER BY round(list_dot_product(cv, b.v) / (cn * b.nrm), 6) DESC,
-       |                      cent_id) AS pr
-       |    FROM batch b, cent) WHERE pr <= $nprobe),
-       |cand AS (
-       |  SELECT s.vec_id AS sid, p.bid,
-       |         round(list_dot_product(s.v, p.bv) / (s.nrm * p.bn), 6) + 0.0 AS cosine
-       |  FROM cellrows s JOIN probes p ON s.cell = p.cell AND s.vec_id < p.bid),
+       |$cand),
        |oriented AS (
        |  SELECT sid AS anchor_id, bid AS neighbor_id, cosine FROM cand
        |  UNION ALL
@@ -2166,22 +1922,28 @@ object Similarity {
        |  SELECT anchor_id, neighbor_id, cosine FROM knn_stored
        |  UNION ALL SELECT anchor_id, neighbor_id, cosine FROM oriented),
        |merged AS (
-       |  SELECT anchor_id, neighbor_id,
+       |  SELECT anchor_id, neighbor_id, cosine,
        |         row_number() OVER (PARTITION BY anchor_id
        |                            ORDER BY cosine DESC, neighbor_id) AS rank
-       |  FROM unioned QUALIFY rank <= $k),
-       |exact_scored AS (
-       |  SELECT a.vec_id AS anchor_id, b.vec_id AS neighbor_id,
-       |         round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) + 0.0 AS cosine
-       |  FROM e a, e b WHERE a.vec_id <> b.vec_id),
-       |exact AS (
-       |  SELECT anchor_id, neighbor_id,
-       |         row_number() OVER (PARTITION BY anchor_id
-       |                            ORDER BY cosine DESC, neighbor_id) AS rank
-       |  FROM exact_scored QUALIFY rank <= $k)
+       |  FROM unioned QUALIFY rank <= $k)""".stripMargin
+  }
+
+  /** Oracle for `emb_knn_stream_ann`: the TWO sequential merges of the
+    * streamed batches [4/5, 9/10) and [9/10, end) of the id space. */
+  def annStreamSql(k: Int, nlist: Int, nprobe: Int): String =
+    s"""WITH $embSql,
+       |${ivfMergeCtes(k, nlist, nprobe, Seq((4, 5), (9, 10)))}
+       |SELECT anchor_id, neighbor_id, cosine, rank
+       |FROM merged ORDER BY anchor_id, rank""".stripMargin
+
+  /** Oracle for `emb_knn_maintenance_ann`: the one merge of [4/5, end),
+    * then per-anchor recall@k against the exact graph `knn`. */
+  def annMaintenanceSql(k: Int, nlist: Int, nprobe: Int): String =
+    s"""WITH ${knnCtes(k)},
+       |${ivfMergeCtes(k, nlist, nprobe, Seq((4, 5)))}
        |SELECT x.anchor_id, CAST(count(m.anchor_id) AS BIGINT) AS n_hits,
        |       round(CAST(count(m.anchor_id) AS DOUBLE) / $k, 6) AS recall
-       |FROM exact x LEFT JOIN merged m
+       |FROM knn x LEFT JOIN merged m
        |  ON m.anchor_id = x.anchor_id AND m.neighbor_id = x.neighbor_id
        |GROUP BY x.anchor_id ORDER BY x.anchor_id""".stripMargin
 

@@ -28,7 +28,8 @@ class AnnMaintenanceSpec extends SparkSpec {
     val nlist = 8
     val (cents, cells, knn) = Similarity.buildIvfKnnMaintPrefix(
       spark, emb, 5, nlist, graft.Scratch.dir("ann-def-full"))
-    val audit = Similarity.annMaintenanceRun(spark, emb, 5, nlist, cents, cells, knn)
+    val audit = Similarity.knnRecallAudit(
+      Similarity.annMaintenanceRun(spark, emb, 5, nlist, cents, cells, knn), emb, 5)
       .collect()
     assert(audit.length == 60)
     assert(audit.forall(_.getAs[Double]("recall") == 1.0),
@@ -41,7 +42,8 @@ class AnnMaintenanceSpec extends SparkSpec {
     val (cents, cells, knn) = Similarity.buildIvfKnnMaintPrefix(
       spark, emb, 5, 8, graft.Scratch.dir("ann-def-mono"))
     def recalls(nprobe: Int): Map[Long, Double] =
-      Similarity.annMaintenanceRun(spark, emb, 5, nprobe, cents, cells, knn)
+      Similarity.knnRecallAudit(
+        Similarity.annMaintenanceRun(spark, emb, 5, nprobe, cents, cells, knn), emb, 5)
         .collect().map(r => r.getLong(0) -> r.getAs[Double]("recall")).toMap
     val r1 = recalls(1)
     val r3 = recalls(3)
@@ -104,11 +106,100 @@ class AnnMaintenanceSpec extends SparkSpec {
     graft.ops.BucketSwap.linkTree(knnP, map)
     val cut = 40L * 4 / 5
     val batch = emb.filter(col("vec_id") >= cut)
-    assert(Similarity.maintainKnnGraphAnn(spark, cents, cells, map, batch, 5, 3, 0L))
+    assert(Similarity.maintainKnnGraph(spark, spark.read.parquet(cents), cells, map, batch, 5, 3, 0L))
     val after = spark.read.parquet(map).collect().map(_.toSeq).toSet
     // replay of the same batch id: absorbed, graph unchanged
-    assert(!Similarity.maintainKnnGraphAnn(spark, cents, cells, map, batch, 5, 3, 0L))
+    assert(!Similarity.maintainKnnGraph(spark, spark.read.parquet(cents), cells, map, batch, 5, 3, 0L))
     assert(spark.read.parquet(map).collect().map(_.toSeq).toSet == after)
+    graft.ops.Caches.releaseCaches(); spark.catalog.clearCache()
+  }
+
+  test("a batch vector tied between two centroids is stored in the argmax cell") {
+    // axis-aligned stored vectors: every centroid is a scaled unit axis,
+    // so the batch vector (unit cent 1 + unit cent 2) has bit-identical
+    // cosines to both — the probe's first row must break the tie the
+    // way cellAssignments' argmax key does
+    val emb = (0L until 20L).map { i =>
+      (i, Array.tabulate(4)(d => if (d == i % 4) 1.0 + i else 0.0)) }.toDF("vec_id", "embedding")
+    val (cents, cellsP, knnP) = Similarity.buildIvfKnnMaintPrefix(
+      spark, emb.filter(col("vec_id") < 16L), 3, 2, graft.Scratch.dir("ann-tie-prefix"))
+    val cent = spark.read.parquet(cents)
+    val cs = cent.collect().map(_.getAs[scala.collection.Seq[Double]]("cv"))
+    assert(cs.length == 2)
+    val tied = Array.tabulate(4)(d => cs.map(v => v(d) / math.sqrt(v.map(x => x * x).sum)).sum)
+    val batch = Seq((100L, tied)).toDF("vec_id", "embedding")
+    val root = graft.Scratch.dir("ann-tie-run")
+    val cells = s"$root/cells"; val map = s"$root/knn"
+    graft.ops.BucketSwap.linkTree(cellsP, cells)
+    graft.ops.BucketSwap.linkTree(knnP, map)
+    def cos6(a: Seq[Double], b: Seq[Double]): BigDecimal = {
+      def n(v: Seq[Double]) = math.sqrt(v.map(x => x * x).sum)
+      BigDecimal(a.zip(b).map { case (x, y) => x * y }.sum / (n(a) * n(b)))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP)
+    }
+    val cos = cs.map(c => cos6(tied.toSeq, c.toSeq))
+    assert(cos.distinct.length == 1, s"precondition: equal cosines, got ${cos.mkString(", ")}")
+    assert(Similarity.maintainKnnGraph(spark, cent, cells, map, batch, 3, 1, 0L))
+    val stored = spark.read.parquet(cells).filter(col("vec_id") === 100L)
+      .select(col("cell")).collect().map(_.getInt(0)).toSeq
+    val argmax = Similarity.cellAssignments(Similarity.prepared(batch), cent, "cidx")
+      .select(col("cell")).collect().map(_.getInt(0)).toSeq
+    assert(stored == argmax, s"stored cell $stored, argmax cell $argmax")
+    graft.ops.Caches.releaseCaches(); spark.catalog.clearCache()
+  }
+
+  private def entries(dir: String): Seq[String] =
+    Option(new java.io.File(dir).list()).map(_.toSeq.sorted).getOrElse(Nil)
+
+  test("out-of-range k or nlist is rejected before the prefix writes anything") {
+    val emb = synthEmb(20)
+    for ((k, nlist) <- Seq((0, 4), (5, 0))) {
+      val root = graft.Scratch.dir("ann-bad-prefix")
+      intercept[IllegalArgumentException] {
+        Similarity.buildIvfKnnMaintPrefix(spark, emb, k, nlist, root)
+      }
+      assert(entries(root).isEmpty, s"k=$k nlist=$nlist wrote ${entries(root)}")
+    }
+  }
+
+  test("out-of-range nprobe is rejected before the merge writes anything") {
+    val emb = synthEmb(20)
+    val (cents, cellsP, knnP) = Similarity.buildIvfKnnMaintPrefix(
+      spark, emb, 5, 4, graft.Scratch.dir("ann-bad-nprobe"))
+    val root = graft.Scratch.dir("ann-bad-nprobe-run")
+    val cells = s"$root/cells"; val map = s"$root/knn"
+    graft.ops.BucketSwap.linkTree(cellsP, cells)
+    graft.ops.BucketSwap.linkTree(knnP, map)
+    val before = (entries(cells), entries(map), entries(root))
+    intercept[IllegalArgumentException] {
+      Similarity.maintainKnnGraph(spark, spark.read.parquet(cents), cells, map,
+        emb.filter(col("vec_id") >= 16L), 5, 0, 0L)
+    }
+    assert((entries(cells), entries(map), entries(root)) == before,
+      "a rejected merge must leave the artifacts, frontiers and staging dirs untouched")
+    graft.ops.Caches.releaseCaches(); spark.catalog.clearCache()
+  }
+
+  test("one exact (one-cell) batch launches no more jobs than the deleted exact merge") {
+    // the stored × batch merge this path replaced took 8 jobs per batch
+    // on this fixture (counted the same way); the probe's checkpoint
+    // carries the batch payload, its id range and the probed cells, and
+    // the append reads the batch's cell off the first probe row, so the
+    // one-cell index adds no job
+    val emb = synthEmb(60)
+    val (cents, cellsP, knnP) = Similarity.buildIvfKnnMaintPrefix(
+      spark, emb, 5, 1, graft.Scratch.dir("ann-jobs-prefix"))
+    val cent = spark.read.parquet(cents)
+    val jobs = (1 to 2).map { i =>
+      val root = graft.Scratch.dir(s"ann-jobs-run-$i")
+      graft.ops.BucketSwap.linkTree(cellsP, s"$root/cells")
+      graft.ops.BucketSwap.linkTree(knnP, s"$root/knn")
+      jobProperties {
+        Similarity.maintainKnnGraph(spark, cent, s"$root/cells", s"$root/knn",
+          emb.filter(col("vec_id") >= 48L), 5, 1, 0L)
+      }.size
+    }
+    assert(jobs.last <= 8, s"one exact batch launched ${jobs.last} jobs")
     graft.ops.Caches.releaseCaches(); spark.catalog.clearCache()
   }
 }

@@ -289,15 +289,17 @@ class SimilaritySpec extends SparkSpec {
     }
     val emb = vecs.toDF("vec_id", "embedding")
     val root = graft.Scratch.dir("knn-maint-spec")
-    val (vec, map) = Similarity.buildKnnMaintPrefix(spark, emb, 5, root)
+    // nlist = nprobe = 1: the exact merge (prefix = vec_id < 19)
+    val (cents, vec, map) = Similarity.buildIvfKnnMaintPrefix(spark, emb, 5, 1, root)
+    val cent = spark.read.parquet(cents)
     def snap(): Set[(Long, Long, Double, Long)] = spark.read.parquet(map)
       .select(col("anchor_id"), col("neighbor_id"), col("cosine"), col("rank"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
 
-    val b0 = emb.filter(col("vec_id") >= 14L && col("vec_id") < 19L)
-    val b1 = emb.filter(col("vec_id") >= 19L)
-    assert(Similarity.maintainKnnGraph(spark, vec, map, b0, 5, 0L), "first merge must do work")
-    assert(Similarity.maintainKnnGraph(spark, vec, map, b1, 5, 1L), "second merge must do work")
+    val b0 = emb.filter(col("vec_id") >= 19L && col("vec_id") < 22L)
+    val b1 = emb.filter(col("vec_id") >= 22L)
+    assert(Similarity.maintainKnnGraph(spark, cent, vec, map, b0, 5, 1, 0L), "first merge must do work")
+    assert(Similarity.maintainKnnGraph(spark, cent, vec, map, b1, 5, 1, 1L), "second merge must do work")
     val merged = snap()
 
     val rebuild = Similarity.knnGraph(emb, 5)
@@ -307,13 +309,13 @@ class SimilaritySpec extends SparkSpec {
       s"incremental diverged: extra=${merged.diff(rebuild)} missing=${rebuild.diff(merged)}")
 
     // replayed batch id: absorbed, graph untouched
-    assert(!Similarity.maintainKnnGraph(spark, vec, map, b1, 5, 1L),
+    assert(!Similarity.maintainKnnGraph(spark, cent, vec, map, b1, 5, 1, 1L),
       "replayed batch id must be absorbed by the knn frontier")
     assert(snap() == merged)
 
     // out-of-order NEW batch fails loudly
     intercept[IllegalArgumentException] {
-      Similarity.maintainKnnGraph(spark, vec, map, b0, 5, 2L)
+      Similarity.maintainKnnGraph(spark, cent, vec, map, b0, 5, 1, 2L)
     }
 
     // crash between move-aside and move-in: recovery restores that bucket
